@@ -1,24 +1,61 @@
-"""Distributed search: the root/leaf lifecycle as Spark stages.
+"""Search: the root/leaf lifecycle, with two leaf executions.
 
 Reference lifecycle (SURVEY.md §3.1): root parses + prunes splits →
 leaf per split opens the needed posting lists + fast fields only →
 per-segment heap top-k → leaf/root merges → fetch-docs join. Here:
 
-- driver parses the query and prunes splits from the metastore
-  (plans/pruning.py) — no data touched;
-- one Spark scan reads ONLY the pruned splits' partitions of the
-  postings table, filtered to the query's (field, term) pairs —
-  partition pruning + predicate pushdown on the term-sorted Parquet
-  give the reference's "exact-needed-bytes" warmup (leaf.rs:125-195)
-  for free;
-- a cogrouped ``applyInPandas`` over (postings, fastfields) per
-  split runs the numpy evaluator (operators/eval.py): per-split
-  top-(k+offset) heap + exact num_hits;
-- the global merge is ``ORDER BY score DESC, split_id, doc_id LIMIT
-  k+offset`` — Spark's TakeOrderedAndProject, one tiny shuffle
-  (collector.rs:306-398 / root.rs:305-320 pagination folding);
-- hit materialization broadcast-joins the top-k keys back to the
-  docmap (fetch_docs.rs:97-125 analogue).
+- the driver parses the query and prunes splits from the metastore
+  (plans/pruning.py) — no data touched — into a ``LeafRequest``;
+- each kept split is read ONLY for the query's (field, term) posting
+  rows and the fast fields it needs, and the numpy kernel
+  (operators/eval.py) computes its top-(k+offset) heap + exact
+  num_hits. One decode helper (``leaf.split_context``) and one kernel
+  call (``leaf.evaluate_leaf``) serve both executions:
+
+  * **in process** (``leaf.search_in_process``): a pyarrow scan of the
+    snapshot's own parquet files (``DataFrame.inputFiles()``; footers
+    cached per snapshot, the reference's hotcache, leaf.rs:125-195),
+    the kernel per split in the driver, a heap merge on
+    ``(sort value, split_id, doc_id)``. No Spark job runs.
+    ``search_with_count`` — the REST top-k core — takes it when the
+    splits kept by pruning hold at most ``LEAF_MAX_DOCS`` docs and
+    number at most ``LEAF_MAX_SPLITS``;
+  * **on Spark**: one scan with partition pruning + predicate pushdown
+    on the term-sorted parquet feeds a cogrouped ``applyInPandas`` per
+    split; the global merge is ``ORDER BY score DESC, split_id, doc_id
+    LIMIT k+offset`` (TakeOrderedAndProject, collector.rs:306-398 /
+    root.rs:305-320 pagination folding). Wide fan-out, ``search_df``,
+    ``search_after``, aggregations and stream export run here.
+
+- hit materialization: a bounded page already in the driver is read
+  from the docmap files in process (``leaf.fetch_rows``, inside
+  ``search_with_count``);
+  ``fetch_docs`` broadcast-joins a hit DataFrame back to the docmap
+  (fetch_docs.rs:97-125 analogue).
+
+Routing. ``search_endpoint`` p50 over the 8 bench.py query shapes on a
+4-core host, in process vs Spark, with 1 and with 8 closed-loop
+clients:
+
+======  ==========  ==========  ========  ==========  ========
+splits  docs/split  process ×1  Spark ×1  process ×8  Spark ×8
+======  ==========  ==========  ========  ==========  ========
+4       50 000      121 ms      830 ms    655 ms      3493 ms
+8       750         30 ms       1238 ms   188 ms      4902 ms
+64      750         108 ms      935 ms    723 ms      5879 ms
+256     375         318 ms      1843 ms   2096 ms     9257 ms
+======  ==========  ==========  ========  ==========  ========
+
+The in-process path won at every size measured, also under 8 clients,
+where it serializes on the driver's GIL (8 clients at 200 000 docs:
+11.3 vs 2.3 requests/s). Its cost grows with the pruned docs
+(~0.4 µs/doc, and 8 B/doc of ``ts_`` plus 1 B/doc per queried field's
+norms held in driver memory) and with the split count (~1.3 ms/split);
+Spark spreads the per-doc part over its cores. So no crossover was
+found, and the limits are the largest sizes measured —
+``LEAF_MAX_DOCS`` = 200 000 pruned docs, ``LEAF_MAX_SPLITS`` = 256
+pruned splits — not extrapolated further. Wider requests stay on the
+cogroup path, which the benchmark workloads do not exercise.
 """
 
 from __future__ import annotations
@@ -31,7 +68,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from quickwit_spark.operators.eval import SplitContext, evaluate_split
+from quickwit_spark.operators.leaf import (
+    LeafRequest,
+    SnapshotFiles,
+    evaluate_leaf,
+    fetch_rows,
+    search_in_process,
+)
 from quickwit_spark.plans.metastore import open_metastore
 from quickwit_spark.plans.parser import parse_query, query_terms, resolve_query
 from quickwit_spark.plans.pruning import prune_splits, split_fully_inside
@@ -40,6 +83,7 @@ HITS_SCHEMA = (
     "split_id int, doc_id long, score double, sort_long long, "
     "split_num_hits long"
 )
+_PAGE_SCHEMA = "split_id int, doc_id long, score double, sort_long long"
 
 
 class Searcher:
@@ -58,21 +102,24 @@ class Searcher:
         self.spark = spark
         self.ms = open_metastore(index_dir)
         self._stamp = self.ms.state_token()
-        self._dfs: dict[str, DataFrame] = {}
+        self._dfs: dict = {}
 
     def fresh(self) -> bool:
         return self._stamp is not None and self._stamp == self.ms.state_token()
 
-    def snapshot(self) -> dict[str, DataFrame]:
+    def snapshot(self) -> dict:
         """All three tables ('postings', 'fastfields', 'docmap')
         resolved under ONE state-token check — a request-consistent
-        view. A request must take one snapshot up front and read every
-        table from it: re-validating per ``table()`` call would let a
+        view, plus the published 'splits' and the in-process leaf's
+        'files' (split → parquet files of these very tables, with the
+        footer cache; operators/leaf.py). A request must take one
+        snapshot up front and read every table from it: re-validating
+        per ``table()`` call would let a
         publish landing mid-request mix tables from two index states
         (pre-publish postings joined against post-publish fastfields
         silently drops every hit of a replaced split)."""
         tok = self.ms.state_token()
-        if tok != self._stamp or len(self._dfs) < 4:
+        if tok != self._stamp or not self._dfs:
             paths = {
                 "postings": self.ms.postings_dir(),
                 "fastfields": os.path.join(self.ms.index_dir, "fastfields"),
@@ -85,6 +132,7 @@ class Searcher:
             # list from a different token than the file listings would
             # prune against splits whose files the scans don't have
             dfs["splits"] = self.ms.list_published()
+            dfs["files"] = SnapshotFiles(dfs)
             self._dfs = dfs
             self._stamp = tok
         return dict(self._dfs)
@@ -188,100 +236,20 @@ def filter_split_ids(df: DataFrame, split_ids) -> DataFrame:
     return df.join(F.broadcast(ids_df), "split_id", "left_semi")
 
 
-def _scan_inputs(
-    tables: dict,
-    ast,
-    split_ids: list[int],
-    need_ts: str | None,
-    extra_ff: list[str] = (),
-):
-    """Pruned scans of postings + fastfields for the query.
-
-    ``tables`` is one ``Searcher.snapshot()`` — both scans come from
-    the same index state by construction."""
-    terms = query_terms(ast)
-    fields = sorted({t.field for t in terms})
-    term_strs = sorted({t.term for t in terms})
-    postings = filter_split_ids(tables["postings"], split_ids).filter(
-        F.col("field").isin(fields) & F.col("term").isin(term_strs)
-    )
-    ff_names = [f"norm_{f}" for f in fields]
-    if need_ts:
-        ff_names.append(f"ts_{need_ts}")
-    ff_names += list(extra_ff)
-    fastfields = filter_split_ids(tables["fastfields"], split_ids).filter(
-        F.col("name").isin(ff_names)
-    )
-    return postings, fastfields
-
-
-def _make_evaluator(
-    ast,
-    infos: dict,
-    k: int,
-    start_micros,
-    end_micros,
-    ts_name: str | None,
-    sort_field: str | None,
-    sort_asc: bool,
-    emit_all: bool,
-    count_exact: bool,
-):
+def _make_evaluator(lreq: LeafRequest):
     """Closure run per split by applyInPandas (numpy inside)."""
 
     def evaluate(key, postings_pdf: pd.DataFrame, ff_pdf: pd.DataFrame) -> pd.DataFrame:
         sid = int(key[0])
-        info = infos.get(sid)
-        if info is None or len(ff_pdf) == 0:
+        out = evaluate_leaf(lreq, sid, postings_pdf, ff_pdf)
+        if out is None:
             return pd.DataFrame(
                 columns=[
                     "split_id", "doc_id", "score", "sort_long",
                     "split_num_hits",
                 ]
             )
-        norms = {}
-        ts_arr = None
-        sort_vals = None
-        for _, r in ff_pdf.iterrows():
-            name, data = r["name"], r["data"]
-            if name.startswith("norm_"):
-                norms[name[5:]] = np.frombuffer(data, dtype=np.uint8)
-            elif ts_name and name == f"ts_{ts_name}":
-                ts_arr = np.frombuffer(data, dtype=np.int64)
-            if sort_field and name == sort_field:
-                sort_vals = np.frombuffer(
-                    data,
-                    dtype=np.uint8 if name.startswith("norm_") else np.int64,
-                )
-        post = {}
-        for _, r in postings_pdf.iterrows():
-            post[(r["field"], r["term"])] = {
-                "doc_freq": r["doc_freq"],
-                "doc_bytes": r["doc_bytes"],
-                "tf_bytes": r["tf_bytes"],
-                "skip_bytes": r["skip_bytes"],
-                "pos_bytes": r["pos_bytes"],
-            }
-        ctx = SplitContext(
-            num_docs=info["num_docs"],
-            total_tokens=info["total_tokens"],
-            postings=post,
-            norms=norms,
-            ts=ts_arr,
-        )
-        docs, vals, num_hits = evaluate_split(
-            ctx,
-            ast,
-            k,
-            start_micros,
-            end_micros,
-            apply_ts_filter=not info["inside"],
-            sort_field=sort_field,
-            sort_values=sort_vals,
-            sort_asc=sort_asc,
-            emit_all=emit_all,
-            count_exact=count_exact,
-        )
+        docs, vals, num_hits = out
         # integer sort values (fast-field / ts / norm sorts) also ride
         # in an EXACT int64 column — `score` is float64, which rounds
         # |v| > 2^53 (a 64-bit id would corrupt there)
@@ -302,27 +270,15 @@ def _make_evaluator(
     return evaluate
 
 
-def _evaluate(
-    spark: SparkSession,
-    index_dir: str,
+def _plan(
+    config,
     req: SearchRequest,
     emit_all: bool,
-    count_exact: bool = True,
-    tables: dict | None = None,
-) -> tuple[DataFrame | None, object, Metastore]:
-    """Shared plan: prune → scan → per-split evaluate. Returns the
-    per-split hits DataFrame (None when all splits pruned).
-
-    ``tables`` lets a caller that ALSO fetches docs pass one
-    ``Searcher.snapshot()`` spanning the whole request, so the
-    evaluate and fetch sides cannot straddle a concurrent publish."""
-    searcher = get_searcher(spark, index_dir)
-    ms = searcher.ms
-    config = ms.config()
-    # one request-consistent snapshot: split list + all table file
-    # listings resolved under a single metastore state token
-    if tables is None:
-        tables = searcher.snapshot()
+    count_exact: bool,
+    tables: dict,
+) -> LeafRequest | None:
+    """Driver-side planning shared by both leaf executions: parse,
+    prune, resolve the sort field. None when every split is pruned."""
     ast = resolve_query(parse_query(req.query), config, req.search_fields)
     start_micros = _to_micros(req.start_ts)
     end_micros = _to_micros(req.end_ts)
@@ -330,11 +286,7 @@ def _evaluate(
         tables["splits"], config, ast, start_micros, end_micros
     )
     if not splits:
-        return None, ast, ms
-    sids = [int(s.split_id) for s in splits]
-    need_ts = config.timestamp_field if (
-        start_micros is not None or end_micros is not None
-    ) else None
+        return None
     sort_field = req.sort_field
     if sort_field is not None:
         if sort_field == config.timestamp_field:
@@ -358,29 +310,97 @@ def _evaluate(
                     "fields are engine-sortable"
                 )
             sort_field = f"ff_{sort_field}"
-        extra = [sort_field]
-    else:
-        extra = []
-    postings, fastfields = _scan_inputs(tables, ast, sids, need_ts, extra)
-    infos = _split_infos(splits, config, start_micros, end_micros)
-    evaluator = _make_evaluator(
-        ast,
-        infos,
-        req.k + req.offset,
-        start_micros,
-        end_micros,
-        config.timestamp_field,
-        sort_field,
-        req.sort_asc,
-        emit_all,
-        count_exact,
+    terms = query_terms(ast)
+    fields = sorted({t.field for t in terms})
+    ff_names = [f"norm_{f}" for f in fields]
+    if start_micros is not None or end_micros is not None:
+        ff_names.append(f"ts_{config.timestamp_field}")
+    if sort_field is not None:
+        ff_names.append(sort_field)
+    return LeafRequest(
+        ast=ast,
+        infos=_split_infos(splits, config, start_micros, end_micros),
+        k=req.k + req.offset,
+        start_micros=start_micros,
+        end_micros=end_micros,
+        ts_name=config.timestamp_field,
+        sort_field=sort_field,
+        sort_asc=req.sort_asc,
+        emit_all=emit_all,
+        count_exact=count_exact,
+        fields=tuple(fields),
+        terms=tuple(sorted({t.term for t in terms})),
+        ff_names=tuple(ff_names),
     )
-    hits = (
+
+
+def _cogroup(tables: dict, lreq: LeafRequest) -> DataFrame:
+    """The Spark leaf: pruned scans of postings + fastfields, both from
+    the one snapshot ``tables``, cogrouped into one ``applyInPandas``
+    task per split."""
+    sids = sorted(lreq.infos)
+    postings = filter_split_ids(tables["postings"], sids).filter(
+        F.col("field").isin(list(lreq.fields))
+        & F.col("term").isin(list(lreq.terms))
+    )
+    fastfields = filter_split_ids(tables["fastfields"], sids).filter(
+        F.col("name").isin(list(lreq.ff_names))
+    )
+    return (
         postings.groupBy("split_id")
         .cogroup(fastfields.groupBy("split_id"))
-        .applyInPandas(evaluator, HITS_SCHEMA)
+        .applyInPandas(_make_evaluator(lreq), HITS_SCHEMA)
     )
-    return hits, ast, ms
+
+
+def _evaluate(
+    spark: SparkSession,
+    index_dir: str,
+    req: SearchRequest,
+    emit_all: bool,
+    count_exact: bool = True,
+    tables: dict | None = None,
+) -> tuple[DataFrame | None, object, Metastore]:
+    """Shared plan: prune → scan → per-split evaluate on the cogroup
+    path. Returns the per-split hits DataFrame (None when all splits
+    pruned).
+
+    ``tables`` lets a caller that ALSO fetches docs pass one
+    ``Searcher.snapshot()`` spanning the whole request, so the
+    evaluate and fetch sides cannot straddle a concurrent publish."""
+    searcher = get_searcher(spark, index_dir)
+    # one request-consistent snapshot: split list + all table file
+    # listings resolved under a single metastore state token
+    if tables is None:
+        tables = searcher.snapshot()
+    lreq = _plan(searcher.ms.config(), req, emit_all, count_exact, tables)
+    if lreq is None:
+        return None, None, searcher.ms
+    return _cogroup(tables, lreq), lreq.ast, searcher.ms
+
+
+def _total_hits(hits: DataFrame) -> int:
+    """Exact num_hits: the per-split counts every evaluated split
+    stamps on its rows, summed (collector.rs:189 semantics)."""
+    row = (
+        hits.groupBy("split_id")
+        .agg(F.max("split_num_hits").alias("h"))
+        .agg(F.sum("h").alias("total"))
+        .collect()[0]
+    )
+    return int(row["total"] or 0)
+
+
+def _rank_order(req: SearchRequest) -> list:
+    """Global rank: score desc, or the exact int64 fast-field value in
+    the request's direction; ties on (split_id, doc_id) ascending."""
+    if req.sort_field is None:
+        primary = F.col("score").desc()
+    elif req.sort_asc:
+        primary = F.col("sort_long").asc()
+    else:
+        primary = F.col("sort_long").desc()
+    return [primary, F.col("split_id").asc(), F.col("doc_id").asc()]
 
 
 def search_df(
@@ -397,22 +417,16 @@ def search_df(
         tables=tables,
     )
     if hits is None:
-        return spark.createDataFrame(
-            [], "split_id int, doc_id long, score double, sort_long long"
-        )
-    asc = req.sort_asc and req.sort_field is not None
-    # fast-field sorts merge on the exact int64 column, not the
-    # possibly-rounded double
-    sort_col = F.col("sort_long") if req.sort_field is not None else F.col("score")
-    score_order = sort_col.asc() if asc else sort_col.desc()
-    ordered = hits.select("split_id", "doc_id", "score", "sort_long").orderBy(
-        score_order, F.col("split_id").asc(), F.col("doc_id").asc()
+        return spark.createDataFrame([], _PAGE_SCHEMA)
+    order = _rank_order(req)
+    limited = (
+        hits.select("split_id", "doc_id", "score", "sort_long")
+        .orderBy(*order)
+        .limit(req.k + req.offset)
     )
-    limited = ordered.limit(req.k + req.offset)
     if req.offset:
-        w = Window.orderBy(score_order, F.col("split_id").asc(), F.col("doc_id").asc())
         limited = (
-            limited.withColumn("_rn", F.row_number().over(w))
+            limited.withColumn("_rn", F.row_number().over(Window.orderBy(*order)))
             .filter(F.col("_rn") > req.offset)
             .drop("_rn")
         )
@@ -444,29 +458,30 @@ def search_after_df(
     search_after). ``req.offset`` is ignored — the cursor IS the
     offset.
     """
-    v, sp, d = cursor
     hits, _, _ = _evaluate(
         spark, index_dir, req, emit_all=True, tables=tables
     )
     if hits is None:
-        return spark.createDataFrame(
-            [], "split_id int, doc_id long, score double, sort_long long"
-        )
-    asc = req.sort_asc and req.sort_field is not None
+        return spark.createDataFrame([], _PAGE_SCHEMA)
+    return _after_page(hits, req, cursor)
+
+
+def _after_page(hits: DataFrame, req: SearchRequest, cursor: tuple) -> DataFrame:
+    v, sp, d = cursor
     sort_col = (
         F.col("sort_long") if req.sort_field is not None else F.col("score")
     )
     lit_v = F.lit(v)
+    asc = req.sort_asc and req.sort_field is not None
     primary_after = (sort_col > lit_v) if asc else (sort_col < lit_v)
     tie = (sort_col == lit_v) & (
         (F.col("split_id") > F.lit(sp))
         | ((F.col("split_id") == F.lit(sp)) & (F.col("doc_id") > F.lit(d)))
     )
-    score_order = sort_col.asc() if asc else sort_col.desc()
     return (
         hits.select("split_id", "doc_id", "score", "sort_long")
         .filter(primary_after | tie)
-        .orderBy(score_order, F.col("split_id").asc(), F.col("doc_id").asc())
+        .orderBy(*_rank_order(req))
         .limit(req.k)
     )
 
@@ -548,15 +563,21 @@ def count_hits(spark: SparkSession, index_dir: str, req: SearchRequest) -> int:
     hits, _, _ = _evaluate(
         spark, index_dir, SearchRequest(**{**vars(req), "k": 1}), emit_all=False
     )
-    if hits is None:
-        return 0
-    row = (
-        hits.groupBy("split_id")
-        .agg(F.max("split_num_hits").alias("h"))
-        .agg(F.sum("h").alias("total"))
-        .collect()[0]
+    return 0 if hits is None else _total_hits(hits)
+
+
+#: ``search_with_count`` evaluates in the driver when the splits kept
+#: by pruning hold at most this many docs in all, and number at most
+#: ``LEAF_MAX_SPLITS``; on the Spark cogroup path otherwise. Both are
+#: the largest sizes measured (module docstring), not a crossover.
+LEAF_MAX_DOCS = 200_000
+LEAF_MAX_SPLITS = 256
+
+
+def _runs_in_process(lreq: LeafRequest) -> bool:
+    return len(lreq.infos) <= LEAF_MAX_SPLITS and (
+        sum(info["num_docs"] for info in lreq.infos.values()) <= LEAF_MAX_DOCS
     )
-    return int(row["total"] or 0)
 
 
 def search_with_count(
@@ -564,45 +585,58 @@ def search_with_count(
     index_dir: str,
     req: SearchRequest,
     tables: dict | None = None,
-) -> tuple[list, int]:
-    """Top-k hit rows AND exact num_hits from ONE per-split evaluation
-    pass (the reference returns both in a single leaf response,
-    collector.rs:189). count_exact=True disables WAND pruning — same
-    trade tantivy makes when a count is requested. The cogrouped
-    evaluation is persisted so the top-k collect and the count agg
-    don't run it twice."""
+    after: tuple | None = None,
+) -> tuple[list[dict], int]:
+    """One page of hit rows AND the exact num_hits from ONE per-split
+    evaluation pass (the reference returns both in a single leaf
+    response, collector.rs:189) — the REST request core.
+    count_exact=True disables WAND pruning — same trade tantivy makes
+    when a count is requested.
+
+    The page is ``req.offset`` … ``req.offset + req.k`` in rank order,
+    or with ``after`` (a ``search_after_df`` cursor) the next ``req.k``
+    hits after it. A keyset page needs the all-matches evaluation, and
+    the total rides on that same pass: every split stamps its count on
+    its rows. Each row is the hit's docmap row plus its split_id,
+    doc_id, score and sort_long (``leaf.fetch_rows``), read from the same
+    snapshot: the reference's root search fetches the page's docs too.
+
+    A top-k page whose pruned splits are within ``LEAF_MAX_DOCS`` /
+    ``LEAF_MAX_SPLITS`` runs in the driver: no Spark job. Everything
+    else runs the cogroup, persisted so the page collect and the count
+    agg don't evaluate twice."""
     wanted = req.k + req.offset
+    searcher = get_searcher(spark, index_dir)
+    if tables is None:
+        tables = searcher.snapshot()
     # evaluate with k ≥ 1 so every matching split emits ≥1 row — the
     # per-split num_hits rides on hit rows (k=0 would drop the count)
     eval_req = SearchRequest(**{**vars(req), "k": max(wanted, 1), "offset": 0})
-    hits, _, _ = _evaluate(
-        spark, index_dir, eval_req, emit_all=False, count_exact=True,
-        tables=tables,
+    lreq = _plan(
+        searcher.ms.config(), eval_req, emit_all=after is not None,
+        count_exact=True, tables=tables,
     )
-    if hits is None:
+    if lreq is None:
         return [], 0
-    hits = hits.persist()
-    try:
-        asc = req.sort_asc and req.sort_field is not None
-        sort_col = (
-            F.col("sort_long") if req.sort_field is not None else F.col("score")
-        )
-        score_order = sort_col.asc() if asc else sort_col.desc()
-        rows = (
-            hits.select("split_id", "doc_id", "score", "sort_long")
-            .orderBy(score_order, F.col("split_id").asc(), F.col("doc_id").asc())
-            .limit(wanted)
-            .collect()
-        )[req.offset:]
-        total = (
-            hits.groupBy("split_id")
-            .agg(F.max("split_num_hits").alias("h"))
-            .agg(F.sum("h").alias("total"))
-            .collect()[0]["total"]
-        )
-    finally:
-        hits.unpersist()
-    return rows, int(total or 0)
+    if after is None and _runs_in_process(lreq):
+        rows, total = search_in_process(tables["files"], lreq, wanted)
+        rows = rows[req.offset:]
+    else:
+        hits = _cogroup(tables, lreq).persist()
+        try:
+            if after is not None:
+                rows = _after_page(hits, req, after).collect()
+            else:
+                rows = (
+                    hits.select("split_id", "doc_id", "score", "sort_long")
+                    .orderBy(*_rank_order(req))
+                    .limit(wanted)
+                    .collect()
+                )[req.offset:]
+            total = _total_hits(hits)
+        finally:
+            hits.unpersist()
+    return fetch_rows(tables["files"], rows), total
 
 
 def matches_df(
@@ -691,8 +725,4 @@ def search(
     # rank on the exact int64 fast-field lane when sorting by a fast
     # field — the float64 `score` copy loses precision above 2^53 and
     # could disagree with the engine ranking search_df just computed
-    if req.sort_field is not None:
-        rank = F.col("sort_long").asc() if req.sort_asc else F.col("sort_long").desc()
-    else:
-        rank = F.col("score").desc()
-    return out.orderBy(rank, F.col("split_id").asc(), F.col("doc_id").asc())
+    return out.orderBy(*_rank_order(req))

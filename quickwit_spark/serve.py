@@ -33,9 +33,10 @@ Parity targets:
 
 The server maps ``index_id`` to ``<root_dir>/<index_id>``. It is a
 thin driver-side adapter: every request plans/prunes on the driver
-and runs the same pruned per-split scan as `operators/search.py` —
-serving does not add an execution tier (the reference's searcher
-cluster role is played by the Spark executors).
+and runs the same pruned per-split leaf as `operators/search.py` — in
+the driver for a small-fan-out top-k page, on the Spark executors
+otherwise (the reference's searcher cluster role). The page's docs are
+always read in process from the snapshot's docmap files.
 """
 
 from __future__ import annotations
@@ -51,7 +52,8 @@ from pyspark.sql import SparkSession
 
 from quickwit_spark.operators.search import (
     SearchRequest,
-    fetch_docs,
+    fetch_docs,  # noqa: F401 — unused here; perfbench's tracer wraps it
+    get_searcher,
     search_with_count,
 )
 
@@ -296,33 +298,14 @@ def search_endpoint(
     search_after = kwargs.pop("_search_after", None)
     t0 = time.time()
     req = SearchRequest(**kwargs)
-    # one evaluation pass yields both the page of hits and the exact
-    # total (the reference leaf response carries both)
-    from quickwit_spark.operators.search import get_searcher
-
+    # one evaluation pass over one snapshot yields both the page of hits
+    # (offset or searchAfter keyset page), read from that snapshot's
+    # docmap files in rank order, and the exact total (the reference
+    # leaf response carries both)
     snap = get_searcher(spark, index_dir).snapshot()
-    if search_after is not None:
-        # keyset page: hits strictly after the cursor; the exact
-        # total still comes from the count path on the same snapshot
-        from quickwit_spark.operators.search import (
-            count_hits,
-            search_after_df,
-        )
-
-        hit_rows = search_after_df(
-            spark, index_dir, req, search_after, tables=snap
-        ).collect()
-        num_hits = count_hits(spark, index_dir, req)
-    else:
-        hit_rows, num_hits = search_with_count(
-            spark, index_dir, req, tables=snap
-        )
-    hits_df = spark.createDataFrame(
-        hit_rows, "split_id int, doc_id long, score double, sort_long long"
+    docs, num_hits = search_with_count(
+        spark, index_dir, req, tables=snap, after=search_after
     )
-    docs = fetch_docs(
-        spark, index_dir, hits_df, docmap=snap["docmap"]
-    ).collect()
     agg_result = None
     if aggs is not None:
         from quickwit_spark.operators.aggregations import run_aggregations
@@ -332,39 +315,19 @@ def search_endpoint(
         agg_result = run_aggregations(
             spark, index_dir, req, aggs, tables=snap
         )
-    # rank order: score path desc, sort-field path per sort_asc —
-    # sort-field ranks use the exact int64 (score rounds |v| > 2^53)
-    asc = req.sort_asc and req.sort_field is not None
-    if req.sort_field is not None:
-        docs.sort(
-            key=lambda r: (
-                r["sort_long"] if asc else ~r["sort_long"],
-                r["split_id"],
-                r["doc_id"],
-            )
-        )
-    else:
-        docs.sort(key=lambda r: (-r["score"], r["split_id"], r["doc_id"]))
     hit_docs = []
-    for r in docs:
-        d = r.asDict()
+    for d in docs:
         # the cursor for searchAfter: [sort_value, split_id, doc_id]
         # of this hit (sort_long on the fast-field path, raw score
         # otherwise) — feed the LAST hit's sort back verbatim
-        sort_val = (
-            d.get("sort_long") if req.sort_field is not None
-            else d.get("score")
-        )
-        cursor = [sort_val, d.get("split_id"), d.get("doc_id")]
-        d.pop("split_id", None)
-        d.pop("doc_id", None)
-        d.pop("sort_long", None)
+        sort_val = d["sort_long"] if req.sort_field is not None else d["score"]
         doc = {
             k: (v.isoformat() if hasattr(v, "isoformat") else v)
             for k, v in d.items()
-            if not (k.startswith("len_") or k.startswith("norm_"))
+            if k not in ("split_id", "doc_id", "sort_long")
+            and not k.startswith(("len_", "norm_"))
         }
-        doc["sort"] = cursor
+        doc["sort"] = [sort_val, d["split_id"], d["doc_id"]]
         hit_docs.append(doc)
     resp = {
         "num_hits": num_hits,

@@ -19,10 +19,12 @@ import random
 import numpy as np
 import pytest
 
+from quickwit_spark.operators import search as search_mod
 from quickwit_spark.operators.search import (
     SearchRequest,
     count_hits,
     search_df,
+    search_with_count,
 )
 from quickwit_spark.sources.corpus import _TOP_WORDS
 
@@ -116,6 +118,32 @@ def test_query_grammar_property_parity(spark, built_index, oracle_index):
             ) == oracle_index.count(q), ctx
     # the generator must not degenerate into all-miss queries
     assert non_empty >= N_CASES // 2, f"only {non_empty} non-empty cases"
+
+
+def test_query_grammar_property_in_process_leaf(spark, built_index, oracle_index):
+    """The same grammar stream through the in-process leaf (the REST
+    top-k path for small fan-out): rank identity, bit-identical f32
+    scores and the exact count on EVERY case — no Spark job runs, so
+    checking all counts is cheap."""
+    # built_index: 3 splits, far fewer than LEAF_MAX_DOCS docs
+    assert search_mod.LEAF_MAX_SPLITS >= 3
+    assert search_mod.LEAF_MAX_DOCS >= 10_000
+    cases = gen_cases(SEED, N_CASES)
+    for i, (q, k, offset) in enumerate(cases):
+        want = oracle_index.search(q, k=k, offset=offset)
+        rows, total = search_with_count(
+            spark, built_index, SearchRequest(query=q, k=k, offset=offset)
+        )
+        ctx = f"case {i} seed {SEED}: {q!r} k={k} offset={offset}"
+        assert [(r["split_id"], r["doc_id"]) for r in rows] == [
+            (w[0], w[1]) for w in want
+        ], ctx
+        np.testing.assert_array_equal(
+            np.array([r["score"] for r in rows], dtype=np.float32),
+            np.array([w[2] for w in want], dtype=np.float32),
+            err_msg=ctx,
+        )
+        assert total == oracle_index.count(q), ctx
 
 
 def test_generator_covers_grammar():
