@@ -379,6 +379,18 @@ def cmd_curate(args) -> int:
         print(f"unknown curate steps: {unknown}; known: {list(_CURATE_STEPS)}",
               file=sys.stderr)
         return 2
+    if args.shard_rows:
+        # shard boundaries are quantiles of the id column: it must be
+        # an integer key, unique per row, or the shards are undefined
+        id_type = dict(df.dtypes).get(id_col)
+        if id_type not in ("tinyint", "smallint", "int", "bigint"):
+            print(json.dumps({"error": f"--shard-rows needs an integer "
+                              f"id column; {id_col!r} is {id_type}"}))
+            return 1
+        if df.groupBy(id_col).count().filter("count > 1").take(1):
+            print(json.dumps({"error": f"--shard-rows needs unique ids; "
+                              f"{id_col!r} has duplicates"}))
+            return 1
 
     def replace_text(cur, new, col):
         sel = new.select(

@@ -114,7 +114,7 @@ def perplexity_buckets(
 
     Output: (doc_id, lang, n_bigrams, lm_score, bucket).
 
-    Scale (why this is NOT a per-lang global sort): the tercile
+    Scale (why this is NOT a per-lang global sort): the quartile
     cutoffs come from one exact ``percentile`` aggregation per lang —
     and because ``lm_score`` is 3dp-quantized, the percentile's
     per-group value-count state is bounded by the few thousand

@@ -14,27 +14,28 @@ Shape of the job (all declarative until the final encode UDF):
    ``(split_id, doc_id)`` (reference global sort key lib.rs:99-104).
 3. tokenize JVM-side (``split``/``lower``/``filter`` — whole-stage
    codegen; zero Python).
-4. posting encode, map-side by default (``encode_mode="mapside"``):
-   each doc partition is exploded to token rows INSIDE the Arrow task
-   and encoded into compressed partial posting lists (delta-gap +
-   varbyte) covering that partition's contiguous doc ranges — the
-   tokens never hit the shuffle. Only the partials (~10-20x smaller)
-   are exchanged to ``(split_id, term-bucket)`` groups and
-   concatenation-merged with fresh per-block skip data. This is the
-   reference's own build shape (tantivy encodes each segment from
-   local docs in RAM, indexer.rs; merging is a separate stage) and
-   inherently spreads hot-term work across every doc partition.
-   ``encode_mode="shuffle"`` keeps the raw-token exchange (one
-   ``applyInArrow`` over ``(split_id, bucket)`` groups), optionally
-   two-phase with doc-range salting for hot terms (``salt_chunk``):
-   partial encodes per (term, doc-chunk) are re-merged by
-   concatenation + re-gapping — the north_rule's explicit skew
-   handling. Both modes are bit-identical
-   (tests/test_build_search.py::test_mapside_encode_bit_identical...).
-6. stats + tags per split (min/max timestamp, exact token totals,
+4. posting encode, map-side: each doc partition is exploded to token
+   rows INSIDE the Arrow task and encoded into compressed partial
+   posting lists (delta-gap + varbyte) covering that partition's
+   contiguous doc ranges — the tokens never hit the shuffle. Only the
+   partials (~10-20x smaller) are exchanged to ``(split_id,
+   term-bucket)`` groups and concatenation-merged with fresh
+   per-block skip data. This is the reference's own build shape
+   (tantivy encodes each segment from local docs in RAM, indexer.rs;
+   merging is a separate stage, merge_executor.rs), and it spreads
+   hot-term work over every doc partition by construction: a hot
+   term's encode runs in every partition that holds its docs, and the
+   merge of its partials is a byte concatenation. The output is
+   byte-identical to ``codec.encode_posting_list`` over each full
+   list (tests/test_build_search.py::test_postings_byte_identical...).
+5. stats + tags per split (min/max timestamp, exact token totals,
    ``collect_set`` tags under the ≤1000 cardinality guard of
    packager.rs:36-40) → staged + atomically published to the
    metastore with a checkpoint delta (publisher.rs:87-111).
+
+This module also owns the postings layout shared with merge and
+demux: the Arrow/Spark postings schema, the zero-copy binary column
+builder and the one postings writer (:func:`write_postings`).
 
 Writes are idempotent per split (dynamic partition overwrite), so a
 crashed build resumes by skipping splits whose checkpoint positions
@@ -48,107 +49,145 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from quickwit_spark.operators.analysis import tokenize_col
+from quickwit_spark.operators.codec import (
+    BLOCK_SIZE,
+    _ragged_gather,
+    _varbyte_lengths,
+    position_byte_ranges,
+    varbyte_decode,
+    varbyte_encode,
+)
 from quickwit_spark.operators.fieldnorm import fieldnorm_id_col
 from quickwit_spark.plans.config import IndexConfig, RECORD_POSITION
 from quickwit_spark.plans.metastore import SplitMetadata, open_metastore
 
-POSTINGS_SCHEMA = (
-    "split_id int, field string, term string, doc_freq long, total_tf long, "
-    "doc_bytes binary, tf_bytes binary, skip_bytes binary, pos_bytes binary"
-)
-
-# map-side partial posting rows: no skip table (only valid on the
-# final concatenated list) but the absolute first doc id, which the
-# merge stage sorts partials by before concatenating
-PARTIALS_SCHEMA = (
-    "split_id int, field string, term string, doc_freq long, total_tf long, "
-    "first_doc long, doc_bytes binary, tf_bytes binary, pos_bytes binary"
-)
-
-
-def _make_token_encoder(
-    field_names: list[str],
-    pos_fields: frozenset,
-    *,
-    emit_first_doc: bool = False,
-    with_skip: bool = True,
-):
-    """Token-level batch encoder: raw (field_id, term, doc_id, pos)
-    rows → one encoded posting row per (field, term).
-
-    Arrow-native (``applyInArrow``): term strings NEVER become Python
-    objects — they are dictionary-encoded by Arrow's C++ kernel into
-    int32 codes (+ a small per-group vocabulary that Arrow sorts), so
-    the big sort is a pure-int ``np.lexsort`` and the output term
-    column is an Arrow ``take`` on the dictionary. The tf/positions
-    aggregation is a numpy run-length pass over the sorted rows, and
-    because varbyte streams of consecutive values concatenate, ALL
-    terms' gaps/tfs/positions are encoded in ONE pass — each term's
-    binary cell is a zero-copy offset slice of the shared stream
-    (the output binary columns are built ``from_buffers``, no
-    per-term Python slicing at all). This keeps the per-task cost
-    low enough that the encode stage stays CPU-bound and scales with
-    cores (the earlier pandas/object-string version saturated memory
-    bandwidth instead).
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    pos_field_ids = np.array(
-        [i for i, f in enumerate(field_names) if f in pos_fields],
-        dtype=np.int8,
-    )
-    head = [
+POSTINGS_ARROW_SCHEMA = pa.schema(
+    [
         ("split_id", pa.int32()),
         ("field", pa.string()),
         ("term", pa.string()),
         ("doc_freq", pa.int64()),
         ("total_tf", pa.int64()),
+        ("doc_bytes", pa.binary()),
+        ("tf_bytes", pa.binary()),
+        ("skip_bytes", pa.binary()),
+        ("pos_bytes", pa.binary()),
     ]
-    if emit_first_doc:
-        head.append(("first_doc", pa.int64()))
-    tail = [("doc_bytes", pa.binary()), ("tf_bytes", pa.binary())]
-    if with_skip:
-        tail.append(("skip_bytes", pa.binary()))
-    tail.append(("pos_bytes", pa.binary()))
-    out_schema = pa.schema(head + tail)
+)
+POSTINGS_SCHEMA = from_arrow_schema(POSTINGS_ARROW_SCHEMA)
 
-    def _bin_from_slices(cum: np.ndarray, starts, ends, stream) -> pa.Array:
-        """Nullable-free binary array whose i-th cell is
-        stream[cum[starts[i]]:cum[ends[i]]] — contiguous slices, so
-        the values buffer is the stream itself (zero copy)."""
-        offsets = np.empty(starts.size + 1, dtype=np.int32)
-        offsets[:-1] = cum[starts]
-        offsets[-1] = cum[ends[-1]] if ends.size else 0
-        return pa.Array.from_buffers(
-            pa.binary(),
-            starts.size,
-            [None, pa.py_buffer(offsets), pa.py_buffer(stream)],
+# map-side partial posting rows: no skip table (only valid on the
+# final concatenated list) but the absolute first doc id, which the
+# merge stage sorts partials by before concatenating
+PARTIALS_ARROW_SCHEMA = POSTINGS_ARROW_SCHEMA.remove(
+    POSTINGS_ARROW_SCHEMA.get_field_index("skip_bytes")
+).insert(5, pa.field("first_doc", pa.int64()))
+PARTIALS_SCHEMA = from_arrow_schema(PARTIALS_ARROW_SCHEMA)
+
+
+def _bin_from_slices(cum, starts, ends, stream, valid=None) -> pa.Array:
+    """Binary array whose i-th cell is
+    ``stream[cum[starts[i]]:cum[ends[i]]]`` — contiguous slices, so
+    the values buffer is the stream itself (zero copy). ``valid``
+    (bool per cell) marks cells null. Arrow binary offsets are i32: a
+    stream past 2^31-1 bytes raises instead of silently wrapping
+    (``cum`` is monotone, so its last used entry bounds every cell)."""
+    total_bytes = int(cum[ends[-1]]) if ends.size else 0
+    if total_bytes > np.iinfo(np.int32).max:
+        raise ValueError(
+            f"posting byte stream of {total_bytes} bytes exceeds the "
+            "2^31-1 Arrow binary offset limit in one batch — use more "
+            "term buckets or smaller batches"
         )
+    offsets = np.empty(starts.size + 1, dtype=np.int32)
+    offsets[:-1] = cum[starts]
+    offsets[-1] = total_bytes
+    buffers = [None, pa.py_buffer(offsets), pa.py_buffer(stream)]
+    if valid is None:
+        return pa.Array.from_buffers(pa.binary(), starts.size, buffers)
+    buffers[0] = pa.py_buffer(np.packbits(valid, bitorder="little"))
+    return pa.Array.from_buffers(
+        pa.binary(),
+        starts.size,
+        buffers,
+        null_count=int(starts.size - valid.sum()),
+    )
+
+
+def _varbyte_stream(values: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """ONE varbyte stream for all ``values`` plus its cumulative byte
+    offsets (``cum[i]`` = start of value i) — varbyte streams of
+    consecutive values concatenate, so every list's cell is a slice."""
+    return varbyte_encode(values), np.concatenate(
+        ([0], np.cumsum(_varbyte_lengths(values)))
+    )
+
+
+def _dict_rank(col) -> tuple[np.ndarray, pa.Array, np.ndarray]:
+    """``(codes, dictionary, lexicographic rank of each code)`` of a
+    string column — Arrow C++ hash + sort, no Python strings."""
+    enc = pc.dictionary_encode(col.combine_chunks())
+    order = pc.sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty(order.size, dtype=np.int32)
+    rank[order] = np.arange(order.size, dtype=np.int32)
+    return enc.indices.to_numpy(), enc.dictionary, rank
+
+
+def _map_side_partials(docs: DataFrame, config: IndexConfig) -> DataFrame:
+    """Partial posting rows (``PARTIALS_SCHEMA``) of a tokenized doc
+    frame (``split_id``, ``doc_id``, ``toks_<field>``), via one
+    ``mapInArrow``: each Arrow batch is exploded to token rows IN
+    NUMPY (list-offsets arithmetic, no Spark ``posexplode``) and
+    encoded into one partial per (contiguous doc slice, field, term) —
+    the token rows never leave the task.
+
+    Correctness precondition (guaranteed by both doc-id assignment
+    modes, which sort partitions by ``(.., split_id, order_cols)``):
+    within a batch, each contiguous run of one ``split_id`` carries
+    strictly ascending doc ids, and runs from different batches /
+    partitions cover disjoint doc ranges. The merge stage re-checks
+    monotonicity after concatenation and fails loudly.
+
+    The encode is Arrow-native: term strings NEVER become Python
+    objects — they are dictionary-encoded into int32 codes (+ a small
+    per-slice vocabulary that Arrow sorts), so the big sort is a
+    pure-int ``np.lexsort`` and the output term column is an Arrow
+    ``take`` on the dictionary. The tf/positions aggregation is a
+    numpy run-length pass over the sorted rows, and ALL terms'
+    gaps/tfs/positions are encoded in ONE varbyte pass — each term's
+    binary cell is a zero-copy offset slice of the shared stream.
+    Skip tables are built once, by the merge, on the final layout.
+
+    This is the reference's actual build shape — tantivy builds each
+    segment's postings in memory from local docs, merge happens later
+    (indexer.rs + merge_executor.rs) — and it removes the raw-token
+    exchange entirely: only delta+varbyte-compressed partials (~10-20x
+    smaller, no per-row shuffle overhead) hit the wire.
+    """
+    field_names = [fc.name for fc in config.indexed_fields]
+    toks_cols = [f"toks_{f}" for f in field_names]
+    pos_field_ids = np.array(
+        [
+            i
+            for i, fc in enumerate(config.indexed_fields)
+            if fc.record == RECORD_POSITION
+        ],
+        dtype=np.int8,
+    )
 
     def encode(tbl: "pa.Table") -> "pa.Table":
-        from quickwit_spark.operators.codec import (
-            BLOCK_SIZE,
-            _varbyte_lengths,
-            varbyte_encode,
-        )
-
+        """Raw (field_id, term, doc_id, pos) token rows of one doc
+        slice → one partial posting row per (field, term)."""
         n = tbl.num_rows
-        if n == 0:
-            return out_schema.empty_table()
         split_id = tbl.column("split_id")[0].as_py()
-        # dictionary-encode terms (Arrow C++ hash) → int codes + vocab
-        tc = pc.dictionary_encode(tbl.column("term").combine_chunks())
-        codes = tc.indices.to_numpy()
-        vocab = tc.dictionary
-        # lexicographic rank of each vocab entry (Arrow sort, C++)
-        vorder = pc.sort_indices(vocab).to_numpy()
-        vrank = np.empty(vorder.size, dtype=np.int32)
-        vrank[vorder] = np.arange(vorder.size, dtype=np.int32)
+        codes, vocab, vrank = _dict_rank(tbl.column("term"))
         fid = tbl.column("field_id").to_numpy().astype(np.int8, copy=False)
         rdocs = tbl.column("doc_id").to_numpy().astype(np.int64, copy=False)
         rpos = tbl.column("pos").to_numpy().astype(np.int64, copy=False)
@@ -176,38 +215,12 @@ def _make_token_encoder(
         row_ends = np.append(row_starts[1:], n)
         T = starts_td.size
 
-        # ---- doc-gap + tf streams (one encode for the whole group) ----
+        # ---- doc-gap + tf streams (one encode for the whole slice) ----
         gaps = docs_u.copy()
         gaps[1:] = docs_u[1:] - docs_u[:-1]
         gaps[starts_td] = docs_u[starts_td]  # absolute at term start
-        doc_lens = _varbyte_lengths(gaps)
-        tf_lens = _varbyte_lengths(tfs)
-        doc_stream = varbyte_encode(gaps)
-        tf_stream = varbyte_encode(tfs)
-        doc_cum = np.concatenate(([0], np.cumsum(doc_lens)))
-        tf_cum = np.concatenate(([0], np.cumsum(tf_lens)))
-
-        # ---- skip tables for all terms' blocks at once ----
-        if with_skip:
-            n_per = ends_td - starts_td
-            reps = -(-n_per // BLOCK_SIZE)
-            first_block = np.concatenate(([0], np.cumsum(reps)))
-            term_of_block = np.repeat(np.arange(T), reps)
-            total_blocks = int(first_block[-1])
-            block_ord = (
-                np.arange(total_blocks) - first_block[:-1][term_of_block]
-            )
-            block_lo = starts_td[term_of_block] + block_ord * BLOCK_SIZE
-            block_hi = np.minimum(
-                block_lo + BLOCK_SIZE, ends_td[term_of_block]
-            )
-            skip = np.empty((total_blocks, 5), dtype="<u4")
-            skip[:, 0] = docs_u[block_hi - 1]
-            skip[:, 1] = np.maximum.reduceat(tfs, block_lo)
-            skip[:, 2] = doc_cum[block_lo] - doc_cum[starts_td[term_of_block]]
-            skip[:, 3] = tf_cum[block_lo] - tf_cum[starts_td[term_of_block]]
-            skip[:, 4] = block_hi - block_lo
-            skip_bytes_all = skip.tobytes()  # 20 bytes per block row
+        doc_stream, doc_cum = _varbyte_stream(gaps)
+        tf_stream, tf_cum = _varbyte_stream(tfs)
 
         # ---- positions stream (rows of position-record fields) ----
         mask_pos = (
@@ -224,11 +237,8 @@ def _make_token_encoder(
             np.cumsum(mask_pos, out=cum0[1:])
             mstarts = cum0[td_starts[mask_pos[td_starts]]]
             pg[mstarts] = flat[mstarts]  # absolute per doc
-            pos_lens = _varbyte_lengths(pg)
-            pos_stream = varbyte_encode(pg)
-            pcum = np.concatenate(([0], np.cumsum(pos_lens)))
+            pos_stream, pcum = _varbyte_stream(pg)
 
-        # ---- output columns, all vectorized / Arrow-side ----
         # position fields sort first (field_id order), so per-term pos
         # slices are contiguous; non-pos terms get an empty slice but
         # are masked null via the validity bitmap
@@ -237,83 +247,33 @@ def _make_token_encoder(
             if mask_pos is not None
             else np.zeros(T, dtype=bool)
         )
-        pos_off = np.empty(T + 1, dtype=np.int32)
-        pos_off[:-1] = pcum[cum0[row_starts]]
-        pos_off[-1] = pcum[-1]
-        pos_arr = pa.Array.from_buffers(
-            pa.binary(),
-            T,
-            [
-                pa.py_buffer(np.packbits(valid, bitorder="little")),
-                pa.py_buffer(pos_off),
-                pa.py_buffer(pos_stream),
-            ],
-            null_count=int(T - valid.sum()),
+        return pa.table(
+            {
+                "split_id": pa.array(
+                    np.full(T, split_id, dtype=np.int32), type=pa.int32()
+                ),
+                "field": pc.take(
+                    pa.array(field_names, type=pa.string()),
+                    pa.array(fid[row_starts], type=pa.int8()),
+                ),
+                "term": pc.take(vocab, pa.array(tcodes[row_starts])),
+                "doc_freq": pa.array(ends_td - starts_td, type=pa.int64()),
+                "total_tf": pa.array(row_ends - row_starts, type=pa.int64()),
+                "first_doc": pa.array(
+                    docs_u[starts_td].astype(np.int64), type=pa.int64()
+                ),
+                "doc_bytes": _bin_from_slices(
+                    doc_cum, starts_td, ends_td, doc_stream
+                ),
+                "tf_bytes": _bin_from_slices(
+                    tf_cum, starts_td, ends_td, tf_stream
+                ),
+                "pos_bytes": _bin_from_slices(
+                    pcum, cum0[row_starts], cum0[row_ends], pos_stream, valid
+                ),
+            },
+            schema=PARTIALS_ARROW_SCHEMA,
         )
-        field_arr = pc.take(
-            pa.array(field_names, type=pa.string()),
-            pa.array(fid[row_starts], type=pa.int8()),
-        )
-        term_arr = pc.take(vocab, pa.array(tcodes[row_starts]))
-        cols = {
-            "split_id": pa.array(
-                np.full(T, split_id, dtype=np.int32), type=pa.int32()
-            ),
-            "field": field_arr,
-            "term": term_arr,
-            "doc_freq": pa.array(ends_td - starts_td, type=pa.int64()),
-            "total_tf": pa.array(row_ends - row_starts, type=pa.int64()),
-        }
-        if emit_first_doc:
-            cols["first_doc"] = pa.array(
-                docs_u[starts_td].astype(np.int64), type=pa.int64()
-            )
-        cols["doc_bytes"] = _bin_from_slices(
-            doc_cum, starts_td, ends_td, doc_stream
-        )
-        cols["tf_bytes"] = _bin_from_slices(
-            tf_cum, starts_td, ends_td, tf_stream
-        )
-        if with_skip:
-            skip_cum = first_block.astype(np.int32) * 20
-            tidx = np.arange(T, dtype=np.int64)
-            cols["skip_bytes"] = _bin_from_slices(
-                skip_cum, tidx, tidx + 1, skip_bytes_all
-            )
-        cols["pos_bytes"] = pos_arr
-        return pa.table(cols, schema=out_schema)
-
-    return encode
-
-
-def _make_partial_mapper(
-    field_names: list[str], pos_fields: frozenset, toks_cols: list[str]
-):
-    """``mapInArrow`` body for the map-side encode: each Arrow batch of
-    ``(split_id, doc_id, toks_*)`` rows is exploded to token rows IN
-    NUMPY (list-offsets arithmetic, no Spark ``posexplode``) and run
-    through the token encoder, yielding PARTIAL posting rows — the
-    token rows never leave the task.
-
-    Correctness precondition (guaranteed by both doc-id assignment
-    modes, which sort partitions by ``(.., split_id, order_cols)``):
-    within a batch, each contiguous run of one ``split_id`` carries
-    strictly ascending doc ids, and runs from different batches /
-    partitions cover disjoint doc ranges. The merge stage re-checks
-    monotonicity after concatenation and fails loudly.
-
-    This is the reference's actual build shape — tantivy builds each
-    segment's postings in memory from local docs, merge happens later
-    (indexer.rs + merge_executor.rs) — and it removes the raw-token
-    exchange entirely: only delta+varbyte-compressed partials (~10-20x
-    smaller, no per-row shuffle overhead) hit the wire.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    encode = _make_token_encoder(
-        field_names, pos_fields, emit_first_doc=True, with_skip=False
-    )
 
     def mapper(batches):
         for batch in batches:
@@ -372,7 +332,9 @@ def _make_partial_mapper(
                 out = encode(pa.concat_tables(parts))
                 yield from out.to_batches()
 
-    return mapper
+    return docs.select("split_id", "doc_id", *toks_cols).mapInArrow(
+        mapper, PARTIALS_SCHEMA
+    )
 
 
 def _flat_binary(arr):
@@ -413,7 +375,6 @@ def _first_varints(off: np.ndarray, val: np.ndarray) -> np.ndarray:
 
 
 def _make_partial_merger(
-    field_names: list[str],
     *,
     rebase: dict[int, int] | None = None,
     out_split: int | None = None,
@@ -422,25 +383,25 @@ def _make_partial_merger(
     """``applyInArrow`` body over term-bucket groups of PARTIAL
     posting rows: vectorized k-way concatenation. Partials of one
     (field, term) cover disjoint ascending doc ranges, so sorting rows
-    by ``first_doc`` and concatenating IS the merge; only the doc-gap
-    stream needs re-encoding (the first gap of each non-first partial
-    turns absolute→relative), tf entries are value-independent, and
-    position streams restart absolute at every doc — both concatenate
-    verbatim via Arrow ``take`` (one C++ memcpy, no per-term Python).
-    Skip tables are built fresh on the final entry layout.
+    by their first doc and concatenating IS the merge; only the
+    doc-gap stream needs re-encoding (the first gap of each non-first
+    partial turns absolute→relative), tf entries are value-independent,
+    and position streams restart absolute at every doc — both
+    concatenate verbatim via Arrow ``take`` (one C++ memcpy, no
+    per-term Python). Skip tables are built here, fresh on the final
+    entry layout — the only place the write path builds them.
 
-    Four callers, one code path:
+    Three callers, one code path:
     - map-side build: rows carry ``first_doc``; groups are
       ``(split_id, bucket)``.
-    - salted shuffle build: full posting rows per doc-chunk (no
-      ``first_doc`` — derived from the first varint of ``doc_bytes``);
-      chunks are contiguous disjoint ranges.
-    - split compaction (``merge_splits`` unsorted path): ``rebase``
-      maps each input split to its doc-id offset and ``out_split``
-      names the merged split; after the constant-offset rebase the
-      inputs' doc ranges are disjoint by construction, so the same
-      concatenation merge applies (merge_executor.rs:271-335 re-bases
-      via tantivy segment merge; ours is arithmetic).
+    - split compaction (``merge_splits`` unsorted path): full posting
+      rows read back from parquet (no ``first_doc`` — derived from the
+      first varint of ``doc_bytes``); ``rebase`` maps each input split
+      to its doc-id offset and ``out_split`` names the merged split;
+      after the constant-offset rebase the inputs' doc ranges are
+      disjoint by construction, so the same concatenation merge
+      applies (merge_executor.rs:271-335 re-bases via tantivy segment
+      merge; ours is arithmetic).
     - demux / sorted merge (``interleaved=True``): remapped partials
       of one term may overlap in doc space (a global sort-field remap
       permutes docs across inputs), so after the concat the entries of
@@ -457,63 +418,18 @@ def _make_partial_merger(
     partitioning broke the build's contiguity invariant.
     Duplicate doc ids within a term are rejected in both modes.
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from quickwit_spark.operators.codec import (
-        BLOCK_SIZE,
-        _ragged_gather,
-        _varbyte_lengths,
-        position_byte_ranges,
-        varbyte_decode,
-        varbyte_encode,
-    )
-
-    out_schema = pa.schema(
-        [
-            ("split_id", pa.int32()),
-            ("field", pa.string()),
-            ("term", pa.string()),
-            ("doc_freq", pa.int64()),
-            ("total_tf", pa.int64()),
-            ("doc_bytes", pa.binary()),
-            ("tf_bytes", pa.binary()),
-            ("skip_bytes", pa.binary()),
-            ("pos_bytes", pa.binary()),
-        ]
-    )
-
-    def _bin_from_slices(cum, starts, ends, stream):
-        offsets = np.empty(starts.size + 1, dtype=np.int32)
-        offsets[:-1] = cum[starts]
-        offsets[-1] = cum[ends[-1]] if ends.size else 0
-        return pa.Array.from_buffers(
-            pa.binary(),
-            starts.size,
-            [None, pa.py_buffer(offsets), pa.py_buffer(stream)],
-        )
 
     def merge(tbl: "pa.Table") -> "pa.Table":
         n = tbl.num_rows
         if n == 0:
-            return out_schema.empty_table()
+            return POSTINGS_ARROW_SCHEMA.empty_table()
         split_id = (
             out_split
             if out_split is not None
             else tbl.column("split_id")[0].as_py()
         )
-        fc_ = pc.dictionary_encode(tbl.column("field").combine_chunks())
-        fcodes = fc_.indices.to_numpy()
-        fvocab = fc_.dictionary
-        forder = pc.sort_indices(fvocab).to_numpy()
-        frank = np.empty(forder.size, dtype=np.int32)
-        frank[forder] = np.arange(forder.size, dtype=np.int32)
-        tc = pc.dictionary_encode(tbl.column("term").combine_chunks())
-        codes = tc.indices.to_numpy()
-        vocab = tc.dictionary
-        vorder = pc.sort_indices(vocab).to_numpy()
-        vrank = np.empty(vorder.size, dtype=np.int32)
-        vrank[vorder] = np.arange(vorder.size, dtype=np.int32)
+        fcodes, fvocab, frank = _dict_rank(tbl.column("field"))
+        codes, vocab, vrank = _dict_rank(tbl.column("term"))
         if "first_doc" in tbl.column_names:
             first = tbl.column("first_doc").to_numpy().astype(np.int64)
         else:
@@ -637,11 +553,8 @@ def _make_partial_merger(
         gaps2 = docs_u.copy()
         gaps2[1:] = docs_u[1:] - docs_u[:-1]
         gaps2[starts_td] = docs_u[starts_td]
-        doc_lens = _varbyte_lengths(gaps2)
-        doc_stream = varbyte_encode(gaps2)
-        doc_cum = np.concatenate(([0], np.cumsum(doc_lens)))
-        tf_lens = _varbyte_lengths(tfs)
-        tf_cum = np.concatenate(([0], np.cumsum(tf_lens)))
+        doc_stream, doc_cum = _varbyte_stream(gaps2)
+        tf_stream, tf_cum = _varbyte_stream(tfs)
 
         # ---- skip tables on the merged layout ----
         n_per = ends_td - starts_td
@@ -658,8 +571,6 @@ def _make_partial_merger(
         skip[:, 2] = doc_cum[block_lo] - doc_cum[starts_td[term_of_block]]
         skip[:, 3] = tf_cum[block_lo] - tf_cum[starts_td[term_of_block]]
         skip[:, 4] = block_hi - block_lo
-        skip_bytes_all = skip.tobytes()
-        skip_cum = first_block.astype(np.int32) * 20
         tidx = np.arange(T, dtype=np.int64)
 
         # ---- positions: with contiguous partials a pure byte
@@ -667,29 +578,26 @@ def _make_partial_merger(
         #      taken stream); after a within-term permute, one ragged
         #      gather of the per-doc byte slices in merged order ----
         if perm is None:
-            pos_off_out = np.empty(T + 1, dtype=np.int32)
-            pos_off_out[:-1] = p_off[starts_row]
-            pos_off_out[-1] = p_off[-1]
-            pos_stream_out = p_val
+            pos_arr = _bin_from_slices(
+                p_off, starts_row, ends_row, p_val, term_valid
+            )
         elif pos_cell_len is not None:
-            pos_stream_out = p_val[_ragged_gather(pos_cell_lo, pos_cell_len)]
             seg_bytes = np.add.reduceat(pos_cell_len, starts_td)
-            pos_off_out = np.concatenate(
-                ([0], np.cumsum(seg_bytes))
-            ).astype(np.int32)
+            pos_arr = _bin_from_slices(
+                np.concatenate(([0], np.cumsum(seg_bytes))),
+                tidx,
+                tidx + 1,
+                p_val[_ragged_gather(pos_cell_lo, pos_cell_len)],
+                term_valid,
+            )
         else:
-            pos_off_out = np.zeros(T + 1, dtype=np.int32)
-            pos_stream_out = np.empty(0, dtype=np.uint8)
-        pos_arr = pa.Array.from_buffers(
-            pa.binary(),
-            T,
-            [
-                pa.py_buffer(np.packbits(term_valid, bitorder="little")),
-                pa.py_buffer(pos_off_out),
-                pa.py_buffer(pos_stream_out),
-            ],
-            null_count=int(T - term_valid.sum()),
-        )
+            pos_arr = _bin_from_slices(
+                np.zeros(T + 1, dtype=np.int64),
+                tidx,
+                tidx + 1,
+                np.empty(0, dtype=np.uint8),
+                term_valid,
+            )
 
         return pa.table(
             {
@@ -708,18 +616,37 @@ def _make_partial_merger(
                     doc_cum, starts_td, ends_td, doc_stream
                 ),
                 "tf_bytes": _bin_from_slices(
-                    tf_cum, starts_td, ends_td,
-                    varbyte_encode(tfs),
+                    tf_cum, starts_td, ends_td, tf_stream
                 ),
+                # 20 bytes per block row
                 "skip_bytes": _bin_from_slices(
-                    skip_cum, tidx, tidx + 1, skip_bytes_all
+                    first_block * 20, tidx, tidx + 1, skip.tobytes()
                 ),
                 "pos_bytes": pos_arr,
             },
-            schema=out_schema,
+            schema=POSTINGS_ARROW_SCHEMA,
         )
 
     return merge
+
+
+def write_postings(ms: Metastore, postings: DataFrame) -> None:
+    """The one postings writer, shared by build, both merge paths and
+    demux: rows are clustered per split, sorted by (field, term)
+    within it, and written with dynamic partition overwrite, so only
+    the splits present in ``postings`` are replaced. The session keeps
+    dynamic overwrite for the caller's following docmap/fastfield
+    writes."""
+    postings.sparkSession.conf.set(
+        "spark.sql.sources.partitionOverwriteMode", "dynamic"
+    )
+    (
+        postings.repartition("split_id")
+        .sortWithinPartitions("field", "term")
+        .write.partitionBy("split_id")
+        .mode("overwrite")
+        .parquet(ms.postings_dir())
+    )
 
 
 def write_fastfields(ms: Metastore, config: IndexConfig, docmap: DataFrame) -> None:
@@ -827,20 +754,10 @@ def build_index(
     num_splits: int | None = None,
     source_id: str = "default",
     term_buckets: int | None = None,
-    salt_chunk: int | None = None,
-    encode_mode: str = "mapside",
 ) -> list[SplitMetadata]:
     """Build (or resume building) the index for ``df``.
 
     Returns the SplitMetadata of splits built in THIS invocation.
-    ``salt_chunk``: if set, posting construction runs in two phases
-    with doc-id-range salting so a hot term's encode is spread over
-    ``num_docs / salt_chunk`` tasks (skew handling; implies the
-    ``shuffle`` encode mode).
-    ``encode_mode``: ``mapside`` (default) encodes partial postings
-    inside each doc partition and shuffles only compressed partials;
-    ``shuffle`` exchanges raw token rows to (split, bucket) groups.
-    Both produce bit-identical postings.
     """
     ms = open_metastore(index_dir, config)
     if not ms.exists():
@@ -882,8 +799,6 @@ def build_index(
             m.split_id: f"docs:{m.num_docs:020d}" for m in metas
         },
         term_buckets=term_buckets,
-        salt_chunk=salt_chunk,
-        encode_mode=encode_mode,
     )
 
 
@@ -895,7 +810,6 @@ def add_documents(
     position: str | None = None,
     num_splits: int | None = None,
     term_buckets: int | None = None,
-    encode_mode: str = "mapside",
 ) -> list[SplitMetadata]:
     """Append ``df`` as NEW splits to an existing index — the
     incremental-ingest primitive the streaming path uses per
@@ -939,8 +853,6 @@ def add_documents(
         spark, ms, config, df, todo, source_id,
         checkpoint_delta_fn=delta,
         term_buckets=term_buckets,
-        salt_chunk=None,
-        encode_mode=encode_mode,
     )
 
 
@@ -978,9 +890,9 @@ def _assign_doc_ids(
       exchange, cumsum the offsets on the driver, then add them to a
       local rank windowed by (partition, split) — all JVM-side. The
       global rank is invariant to where the range boundaries fall, so
-      the result is identical to the window's. This partitioning does
-      NOT satisfy the encoder's clustering, so the token groupBy gets
-      a real full-width exchange — the right trade when the split
+      the result is identical to the window's. Each split's docs
+      then spread over several partitions, so the map-side encode
+      runs at full shuffle width — the right trade when the split
       count, not the data, is the parallelism limiter.
 
     Returns ``(docs, persisted_parent_or_None)`` — caller unpersists
@@ -1042,8 +954,6 @@ def _execute_build(
     source_id: str,
     checkpoint_delta_fn,
     term_buckets: int,
-    salt_chunk: int | None,
-    encode_mode: str = "mapside",
 ) -> list[SplitMetadata]:
     """Shared build core: ``df`` already carries ``split_id``; encode
     postings/docmap/fastfields for the splits in ``todo`` and publish
@@ -1173,115 +1083,19 @@ def _execute_build(
     write_fastfields(ms, config, docmap)
     _phase("fastfields")
 
-    # ---- token rows → postings in ONE shuffle: raw (doc, term, pos)
-    #      rows go straight to the bucket groups and the tf/positions
-    #      aggregation happens vectorized inside the encoder (numpy
-    #      run-length over the sorted rows) — no intermediate
-    #      collect_list arrays, no second shuffle ----
-    pos_fields = frozenset(
-        fc.name for fc in config.indexed_fields if fc.record == RECORD_POSITION
+    # ---- postings: map-side partial encode (tokens never hit the
+    #      wire), then the partials are exchanged to (split,
+    #      term-bucket) groups and concatenation-merged with fresh
+    #      skip tables. Hot-term skew is spread by construction: a hot
+    #      term is encoded in every doc partition that holds it, and
+    #      the merge of its partials is a byte concatenation ----
+    encoded = (
+        _map_side_partials(docs, config)
+        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(term_buckets)))
+        .groupBy("split_id", "bucket")
+        .applyInArrow(_make_partial_merger(), POSTINGS_SCHEMA)
     )
-    field_names = [fc.name for fc in config.indexed_fields]
-    if encode_mode == "mapside" and not salt_chunk:
-        # ---- map-side partial encode (default): tokens never hit the
-        # wire. Each cached docs partition is exploded IN the Arrow
-        # task and encoded into compressed partial posting rows; only
-        # those partials (~10-20x smaller than raw token rows, no
-        # per-row shuffle overhead) are exchanged, grouped by
-        # (split, term-bucket) and concatenation-merged. This is the
-        # reference's own build shape (tantivy encodes each segment
-        # from local docs, indexer.rs; merges later) and removes the
-        # raw-token exchange + its group-by sort — the dominant
-        # memory-bandwidth cost of the old path at high parallelism.
-        # Hot-term skew is inherently salted: a hot term's work is
-        # spread over every doc partition; the merge of its partials
-        # is a byte concatenation.
-        toks_cols = [f"toks_{fc.name}" for fc in config.indexed_fields]
-        mapper = _make_partial_mapper(field_names, pos_fields, toks_cols)
-        partials = docs.select("split_id", "doc_id", *toks_cols).mapInArrow(
-            mapper, PARTIALS_SCHEMA
-        )
-        merger = _make_partial_merger(field_names)
-        encoded = (
-            partials.withColumn(
-                "bucket", F.pmod(F.xxhash64("term"), F.lit(term_buckets))
-            )
-            .groupBy("split_id", "bucket")
-            .applyInArrow(merger, POSTINGS_SCHEMA)
-        )
-    else:
-        # ---- shuffle encode: raw token rows exchanged to
-        # (split, bucket) groups. Kept for A/B and for the explicit
-        # doc-range salting path (salt_chunk).
-        # field as a tinyint id: shrinks every shuffled token row and
-        # keeps the encoder's sort keys pure ints (strings are restored
-        # from the id on output)
-        # Per-field posexplode + union, NOT a single tagged Generate
-        # over concat(transform(...struct...)): building an
-        # array-of-structs per doc just to explode it costs ~2x the
-        # whole build in codegen allocation (measured 216s vs 111s on
-        # the 2M-doc bench; the struct wrap + array concat materialize
-        # every token twice). posexplode of the raw string arrays is
-        # the cheap path. The union also hides the docs partitioning
-        # from Catalyst (union output partitioning is unknown), which
-        # FORCES a token exchange onto the group keys below —
-        # desirable: it breaks the cache-scan + explode + giant
-        # per-split sort fusion and runs the encoder at shuffle width
-        # over compact token rows instead of one task per split.
-        per_field = [
-            docs.select(
-                "split_id",
-                "doc_id",
-                F.lit(i).cast("tinyint").alias("field_id"),
-                F.posexplode(f"toks_{fc.name}").alias("pos", "term"),
-            )
-            for i, fc in enumerate(config.indexed_fields)
-        ]
-        tok_rows = per_field[0]
-        for other in per_field[1:]:
-            tok_rows = tok_rows.unionByName(other)
-
-        # optional doc-range salt splits hot terms across tasks
-        if salt_chunk:
-            # each (term, doc-chunk) partial must cover ONE contiguous
-            # doc range so the phase-2 merge concatenates by first doc
-            tok_rows = tok_rows.withColumn(
-                "chunk", (F.col("doc_id") / F.lit(salt_chunk)).cast("long")
-            ).withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("term", "chunk"), F.lit(term_buckets)),
-            )
-            group_cols = ["split_id", "bucket", "chunk"]
-        else:
-            tok_rows = tok_rows.withColumn(
-                "bucket", F.pmod(F.xxhash64("term"), F.lit(term_buckets))
-            )
-            group_cols = ["split_id", "bucket"]
-        encoder = _make_token_encoder(field_names, pos_fields)
-        encoded = tok_rows.groupBy(*group_cols).applyInArrow(
-            encoder, POSTINGS_SCHEMA
-        )
-        if salt_chunk:
-            # phase-2: doc-chunk partials are contiguous disjoint
-            # ranges — the vectorized concat merge applies (first doc
-            # derived from the first varint of each chunk's stream)
-            merger = _make_partial_merger(field_names)
-            encoded = (
-                encoded.withColumn(
-                    "bucket",
-                    F.pmod(F.xxhash64("term"), F.lit(term_buckets)),
-                )
-                .groupBy("split_id", "bucket")
-                .applyInArrow(merger, POSTINGS_SCHEMA)
-            )
-
-    (
-        encoded.repartition("split_id")
-        .sortWithinPartitions("field", "term")
-        .write.partitionBy("split_id")
-        .mode("overwrite")
-        .parquet(ms.postings_dir())
-    )
+    write_postings(ms, encoded)
     _phase("postings")
 
     # ---- per-split stats + tags → metadata (ONE pass over the

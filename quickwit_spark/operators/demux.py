@@ -19,10 +19,10 @@ its own artifacts):
    contiguous ascending range inside each output split, so per-input
    partial posting lists are disjoint runs that the standard partial
    merge (operators/merge.py) re-concatenates;
-3. postings rewrite: cogrouped ``applyInPandas`` over (postings,
+3. postings rewrite: cogrouped ``applyInArrow`` over (postings,
    docmap-mapping) per input split — decode, remap doc ids, emit one
-   partial per (output split, term) — then the salted-build partial
-   merge produces final posting lists;
+   partial per (output split, term) — then the build's partial merge
+   produces final posting lists;
 4. docmap/fastfields rewritten from the mapping; metadata: tags of
    the demux field = exactly the bin's values (other tag fields keep
    the union of input tags — a superset is always prune-safe);
@@ -36,9 +36,12 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from quickwit_spark.operators.build import write_fastfields
-from quickwit_spark.operators.merge import (
+from quickwit_spark.operators.build import (
     POSTINGS_SCHEMA,
+    write_fastfields,
+    write_postings,
+)
+from quickwit_spark.operators.merge import (
     merge_partial_postings,
     remap_postings_arrow,
 )
@@ -147,15 +150,7 @@ def demux_splits(
         .cogroup(mapping.groupBy("split_id"))
         .applyInArrow(remap_postings_arrow, POSTINGS_SCHEMA)
     )
-    merged = merge_partial_postings(partials, term_buckets)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        merged.repartition("split_id")
-        .sortWithinPartitions("field", "term")
-        .write.partitionBy("split_id")
-        .mode("overwrite")
-        .parquet(ms.postings_dir())
-    )
+    write_postings(ms, merge_partial_postings(partials, term_buckets))
 
     # ---- docmap + fastfields under the new split ids ----
     new_docmap = (

@@ -36,12 +36,22 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from quickwit_spark.plans.metastore import SplitMetadata, open_metastore
-
-POSTINGS_SCHEMA = (
-    "split_id int, field string, term string, doc_freq long, total_tf long, "
-    "doc_bytes binary, tf_bytes binary, skip_bytes binary, pos_bytes binary"
+from quickwit_spark.operators.build import (
+    POSTINGS_ARROW_SCHEMA,
+    POSTINGS_SCHEMA,
+    _bin_from_slices,
+    _flat_binary,
+    _make_partial_merger,
+    _varbyte_stream,
+    write_fastfields,
+    write_postings,
 )
+from quickwit_spark.operators.codec import (
+    _ragged_gather,
+    position_byte_ranges,
+    varbyte_decode,
+)
+from quickwit_spark.plans.metastore import SplitMetadata, open_metastore
 
 
 def remap_postings_arrow(post_tbl, map_tbl):
@@ -56,30 +66,8 @@ def remap_postings_arrow(post_tbl, map_tbl):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from quickwit_spark.operators.build import _flat_binary
-    from quickwit_spark.operators.codec import (
-        _ragged_gather,
-        _varbyte_lengths,
-        position_byte_ranges,
-        varbyte_decode,
-        varbyte_encode,
-    )
-
-    out_schema = pa.schema(
-        [
-            ("split_id", pa.int32()),
-            ("field", pa.string()),
-            ("term", pa.string()),
-            ("doc_freq", pa.int64()),
-            ("total_tf", pa.int64()),
-            ("doc_bytes", pa.binary()),
-            ("tf_bytes", pa.binary()),
-            ("skip_bytes", pa.binary()),
-            ("pos_bytes", pa.binary()),
-        ]
-    )
     if post_tbl.num_rows == 0 or map_tbl.num_rows == 0:
-        return out_schema.empty_table()
+        return POSTINGS_ARROW_SCHEMA.empty_table()
 
     od = map_tbl.column("doc_id").to_numpy().astype(np.int64, copy=False)
     n_docs = int(od.max()) + 1
@@ -154,55 +142,20 @@ def remap_postings_arrow(post_tbl, map_tbl):
             "remapped doc ids are not strictly increasing within a "
             "(term, output split) — the docmap mapping is not injective"
         )
-    gaps_out = g64.astype(np.uint64)
-    doc_stream = varbyte_encode(gaps_out)
-    doc_cum = np.concatenate(([0], np.cumsum(_varbyte_lengths(gaps_out))))
-    tt_u = tt.astype(np.uint64)
-    tf_stream = varbyte_encode(tt_u)
-    tf_cum = np.concatenate(([0], np.cumsum(_varbyte_lengths(tt_u))))
-
-    def _bin_from_slices(cum, starts, ends, stream):
-        total_bytes = int(cum[ends[-1]]) if ends.size else 0
-        if total_bytes > np.iinfo(np.int32).max:
-            # Arrow binary offsets are i32; a silent wrap here would
-            # corrupt the partial rows (mirrors the u32 doc-id guard in
-            # build.py) — callers must shrink the cogroup batch
-            raise ValueError(
-                "posting byte stream exceeds 2^31-1 bytes in one "
-                f"remap batch ({total_bytes}); reduce batch size"
-            )
-        offsets = np.empty(starts.size + 1, dtype=np.int32)
-        offsets[:-1] = cum[starts]
-        offsets[-1] = total_bytes
-        return pa.Array.from_buffers(
-            pa.binary(),
-            starts.size,
-            [None, pa.py_buffer(offsets), pa.py_buffer(stream)],
-        )
+    doc_stream, doc_cum = _varbyte_stream(g64.astype(np.uint64))
+    tf_stream, tf_cum = _varbyte_stream(tt.astype(np.uint64))
+    sidx = np.arange(S)
 
     # positions: gather the per-doc byte slices in permuted order
     if b_len is not None:
-        pb_lo = b_lo[perm]
         pb_len = b_len[perm]
-        pos_stream = p_val[_ragged_gather(pb_lo, pb_len)]
         seg_bytes = np.add.reduceat(pb_len, seg_start)
-        pos_cum = np.concatenate(([0], np.cumsum(seg_bytes, dtype=np.int64)))
-        if int(pos_cum[-1]) > np.iinfo(np.int32).max:
-            raise ValueError(
-                "positions byte stream exceeds 2^31-1 bytes in one "
-                f"remap batch ({int(pos_cum[-1])}); reduce batch size"
-            )
-        pos_off = pos_cum.astype(np.int32)
-        seg_valid = valid_rows[rs[seg_start]]
-        pos_arr = pa.Array.from_buffers(
-            pa.binary(),
-            S,
-            [
-                pa.py_buffer(np.packbits(seg_valid, bitorder="little")),
-                pa.py_buffer(pos_off),
-                pa.py_buffer(pos_stream),
-            ],
-            null_count=int(S - seg_valid.sum()),
+        pos_arr = _bin_from_slices(
+            np.concatenate(([0], np.cumsum(seg_bytes, dtype=np.int64))),
+            sidx,
+            sidx + 1,
+            p_val[_ragged_gather(b_lo[perm], pb_len)],
+            valid_rows[rs[seg_start]],
         )
     else:
         pos_arr = pa.nulls(S, pa.binary())
@@ -228,13 +181,13 @@ def remap_postings_arrow(post_tbl, map_tbl):
             # rebuilds skip tables on the final entry layout
             "skip_bytes": _bin_from_slices(
                 np.zeros(S + 1, dtype=np.int32),
-                np.arange(S),
-                np.arange(1, S + 1),
+                sidx,
+                sidx + 1,
                 np.empty(0, dtype=np.uint8),
             ),
             "pos_bytes": pos_arr,
         },
-        schema=out_schema,
+        schema=POSTINGS_ARROW_SCHEMA,
     )
 
 
@@ -243,9 +196,7 @@ def merge_partial_postings(encoded: DataFrame, term_buckets: int) -> DataFrame:
     Arrow concat-merger in interleaved mode (disjoint partials
     concatenate; overlapping ones get a within-term stable sort —
     still one lexsort for the whole bucket, no per-term Python)."""
-    from quickwit_spark.operators.build import _make_partial_merger
-
-    merger = _make_partial_merger([], interleaved=True)
+    merger = _make_partial_merger(interleaved=True)
     bucketed = encoded.withColumn(
         "bucket", F.pmod(F.xxhash64("term"), F.lit(term_buckets))
     )
@@ -289,28 +240,14 @@ def merge_splits(
     #      concatenation merge (inputs' doc ranges are disjoint after
     #      the rebase, so this is the same concat-in-first-doc-order
     #      merge the map-side build uses — no per-term Python) ----
-    from quickwit_spark.operators.build import _make_partial_merger
-
     postings = (
         spark.read.parquet(ms.postings_dir())
         .filter(F.col("split_id").isin(in_ids))
         .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(term_buckets)))
     )
-    merger = _make_partial_merger(
-        [fc.name for fc in config.indexed_fields],
-        rebase=rebase,
-        out_split=new_sid,
-    )
-    merged = postings.groupBy("bucket").applyInArrow(
-        merger, POSTINGS_SCHEMA
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        merged.repartition("split_id")
-        .sortWithinPartitions("field", "term")
-        .write.partitionBy("split_id")
-        .mode("overwrite")
-        .parquet(ms.postings_dir())
+    merger = _make_partial_merger(rebase=rebase, out_split=new_sid)
+    write_postings(
+        ms, postings.groupBy("bucket").applyInArrow(merger, POSTINGS_SCHEMA)
     )
 
     # ---- docmap: re-base + move under the new split ----
@@ -418,8 +355,6 @@ def _merge_splits_sorted(
     and term bucket."""
     from pyspark.sql import Window
 
-    from quickwit_spark.operators.build import write_fastfields
-
     docmap_in = spark.read.parquet(ms.docmap_dir()).filter(
         F.col("split_id").isin(in_ids)
     )
@@ -437,15 +372,7 @@ def _merge_splits_sorted(
         .cogroup(mapping.groupBy("split_id"))
         .applyInArrow(remap_postings_arrow, POSTINGS_SCHEMA)
     )
-    merged = merge_partial_postings(partials, term_buckets)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        merged.repartition("split_id")
-        .sortWithinPartitions("field", "term")
-        .write.partitionBy("split_id")
-        .mode("overwrite")
-        .parquet(ms.postings_dir())
-    )
+    write_postings(ms, merge_partial_postings(partials, term_buckets))
 
     new_docmap = (
         mapped.drop("split_id", "doc_id")

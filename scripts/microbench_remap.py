@@ -188,7 +188,7 @@ def main():
     # ---- new path: arrow remap + interleaved merger per out split ----
     t0 = time.time()
     partials_tbl = remap_postings_arrow(post_tbl, map_tbl)
-    merger = _make_partial_merger([], interleaved=True)
+    merger = _make_partial_merger(interleaved=True)
     merged_new = []
     for s in range(100, 104):
         grp = partials_tbl.filter(pc.equal(partials_tbl.column("split_id"), s))

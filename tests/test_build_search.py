@@ -375,47 +375,180 @@ def test_store_source_roundtrip(spark, tmp_path_factory):
     assert doc == {"uid": "a", "body": "green anchovy swims", "n": 7}
 
 
-@pytest.mark.parametrize("num_splits", [3, 64])
-def test_mapside_encode_bit_identical_to_shuffle(
-    spark, corpus_rows, tmp_path_factory, num_splits
-):
-    """The map-side partial encode (default) and the raw-token shuffle
-    encode must produce byte-identical postings — same doc-gap/tf/
-    positions streams AND same skip tables — in BOTH doc-id modes:
-    num_splits=3 < cores exercises the twophase layout (non-contiguous
-    slices of each split share partitions, forcing real partial
-    merging), num_splits=64 >= cores exercises the window layout plus
-    the empty-split placeholder path (64 splits over 250 docs)."""
+def _postings_by_term(spark, index_dir):
+    """{(split_id, field, term): (doc_freq, total_tf, doc_bytes,
+    tf_bytes, skip_bytes, pos_bytes)} of a built index's postings."""
     import os
 
+    return {
+        (r["split_id"], r["field"], r["term"]): (
+            r["doc_freq"],
+            r["total_tf"],
+            bytes(r["doc_bytes"]),
+            bytes(r["tf_bytes"]),
+            bytes(r["skip_bytes"]),
+            None if r["pos_bytes"] is None else bytes(r["pos_bytes"]),
+        )
+        for r in spark.read.parquet(os.path.join(index_dir, "postings"))
+        .collect()
+    }
+
+
+def _oracle_postings(oracle):
+    """The same mapping, from ``codec.encode_posting_list`` over the
+    pure-Python oracle's posting lists (positions only for
+    position-record fields)."""
+    from quickwit_spark.operators.codec import encode_posting_list
+    from quickwit_spark.plans.config import RECORD_POSITION
+
+    pos_fields = {
+        fc.name
+        for fc in oracle.config.indexed_fields
+        if fc.record == RECORD_POSITION
+    }
+    out = {}
+    for sid, sp in oracle.splits.items():
+        for (field, term), plist in sp.postings.items():
+            docs = sorted(plist)
+            tfs = [len(plist[d]) for d in docs]
+            enc = encode_posting_list(
+                docs,
+                tfs,
+                [plist[d] for d in docs] if field in pos_fields else None,
+            )
+            out[(sid, field, term)] = (
+                len(docs),
+                sum(tfs),
+                enc["doc_bytes"],
+                enc["tf_bytes"],
+                enc["skip_bytes"],
+                enc.get("pos_bytes"),
+            )
+    return out
+
+
+@pytest.mark.parametrize("num_splits", [3, 64])
+def test_postings_byte_identical_to_oracle(
+    spark, corpus_rows, tmp_path_factory, num_splits
+):
+    """Every built posting row equals ``encode_posting_list`` over the
+    oracle's list for that (split, field, term): doc-gap/tf/skip/
+    positions bytes, doc_freq and total_tf, with ``pos_bytes`` null
+    exactly for non-position fields, and the same term set. Both
+    doc-id layouts: num_splits=3 < cores is the twophase layout
+    (non-contiguous slices of each split share partitions, so partials
+    really merge), num_splits=64 >= cores the window layout plus the
+    empty-split placeholder path."""
+    import pandas as pd
+
+    from quickwit_spark.operators.build import build_index
+    from quickwit_spark.oracle import OracleIndex
+    from quickwit_spark.plans.config import webpages_config
+
+    cfg = webpages_config()
+    index_dir = str(tmp_path_factory.mktemp(f"parity{num_splits}") / "idx")
+    build_index(
+        spark, spark.createDataFrame(pd.DataFrame(corpus_rows)), index_dir,
+        cfg, num_splits=num_splits, term_buckets=8,
+    )
+    got = _postings_by_term(spark, index_dir)
+    want = _oracle_postings(OracleIndex(corpus_rows, cfg, num_splits))
+    assert got.keys() == want.keys()
+    bad = [k for k in want if got[k] != want[k]]
+    assert not bad, bad[:5]
+    assert len(want) > 1000
+    assert any(v[5] is None for v in want.values())
+    assert any(v[5] is not None for v in want.values())
+
+
+def test_hot_term_partials_span_tasks(spark, corpus_rows, tmp_path_factory):
+    """Hot-term skew is spread on the one encode path: with 2 splits
+    on 8 cores (twophase layout) the map-side partials of ``the`` in
+    one split come from several encode tasks, and the merged lists the
+    build writes still equal the oracle's. Adaptive partition
+    coalescing is off for this test: it folds this 401-doc corpus
+    into one partition, which a corpus of real size never is."""
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        _check_hot_term_spread(spark, corpus_rows, tmp_path_factory)
+    finally:
+        spark.conf.set(coalesce, prev)
+
+
+def _check_hot_term_spread(spark, corpus_rows, tmp_path_factory):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from quickwit_spark.operators.build import build_index
+    from quickwit_spark.operators.analysis import tokenize_col
+    from quickwit_spark.operators.build import (
+        _assign_doc_ids,
+        _map_side_partials,
+        build_index,
+    )
+    from quickwit_spark.oracle import OracleIndex
     from quickwit_spark.plans.config import webpages_config
 
+    cfg = webpages_config()
     df = spark.createDataFrame(pd.DataFrame(corpus_rows))
-    out = {}
-    for mode in ("shuffle", "mapside"):
-        index_dir = str(tmp_path_factory.mktemp(f"enc_{mode}") / "idx")
-        build_index(
-            spark, df, index_dir, webpages_config(),
-            num_splits=num_splits, term_buckets=8, encode_mode=mode,
-        )
-        rows = (
-            spark.read.parquet(os.path.join(index_dir, "postings"))
-            .select(
-                "split_id", "field", "term", "doc_freq", "total_tf",
-                F.base64("doc_bytes").alias("d"),
-                F.base64("tf_bytes").alias("t"),
-                F.base64("skip_bytes").alias("s"),
-                F.base64("pos_bytes").alias("p"),
+    pre = df.select(
+        F.pmod(F.xxhash64(cfg.key_field), F.lit(2)).cast("int").alias(
+            "split_id"
+        ),
+        F.col(cfg.key_field).alias("key"),
+        *[fc.name for fc in cfg.indexed_fields],
+    )
+    docs, parent, mode = _assign_doc_ids(spark, pre, 2)
+    assert mode == "twophase"
+    docs = docs.select(
+        "split_id",
+        "doc_id",
+        *[
+            tokenize_col(F.col(fc.name), fc.tokenizer).alias(
+                f"toks_{fc.name}"
             )
-            .collect()
+            for fc in cfg.indexed_fields
+        ],
+    )
+    hot = (
+        _map_side_partials(docs, cfg)
+        .withColumn("task", F.spark_partition_id())
+        .filter((F.col("field") == "text") & (F.col("term") == "the"))
+        .collect()
+    )
+    parent.unpersist()
+    oracle = OracleIndex(corpus_rows, cfg, num_splits=2)
+    want = _oracle_postings(oracle)
+    for sid in (0, 1):
+        rows = [r for r in hot if r["split_id"] == sid]
+        assert len({r["task"] for r in rows}) >= 2, rows
+        assert sum(r["doc_freq"] for r in rows) == want[(sid, "text", "the")][0]
+
+    index_dir = str(tmp_path_factory.mktemp("hot") / "idx")
+    build_index(spark, df, index_dir, cfg, num_splits=2)
+    got = _postings_by_term(spark, index_dir)
+    assert got == want
+
+
+def test_bin_from_slices_rejects_i32_offset_overflow():
+    """The one binary-column builder every postings writer uses raises
+    once a cumulative offset passes 2^31-1 instead of wrapping."""
+    from quickwit_spark.operators.build import _bin_from_slices
+
+    stream = np.arange(4, dtype=np.uint8)
+    arr = _bin_from_slices(
+        np.array([0, 1, 4]), np.array([0, 1]), np.array([1, 2]), stream
+    )
+    assert arr.to_pylist() == [b"\x00", b"\x01\x02\x03"]
+    big = np.array([0, 2**31 - 1, 2**31 + 2], dtype=np.int64)
+    with pytest.raises(ValueError, match="2\\^31-1"):
+        _bin_from_slices(big, np.array([0, 1]), np.array([1, 2]), stream)
+    with pytest.raises(ValueError, match="2\\^31-1"):
+        _bin_from_slices(
+            big, np.array([0, 1]), np.array([1, 2]), stream,
+            np.array([True, False]),
         )
-        out[mode] = sorted(tuple(r) for r in rows)
-    assert out["shuffle"] == out["mapside"]
-    assert len(out["mapside"]) > 100
 
 
 def test_search_after_walk_equals_full_ranking(spark, built_index):

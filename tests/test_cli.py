@@ -354,3 +354,32 @@ def test_cli_curate_sharded_output(spark, tmp_path, capsys):
     back = spark.read.parquet(out)
     assert back.count() == 30 and "shard" in back.columns
     assert spark.read.parquet(out + "/_manifest").count() == 3
+
+
+@pytest.mark.parametrize(
+    "ids, message",
+    [
+        ([f"d{i}" for i in range(20)], "integer id column"),
+        ([i // 2 for i in range(20)], "unique ids"),
+    ],
+)
+def test_cli_curate_shard_rows_rejects_bad_ids(
+    spark, tmp_path, capsys, ids, message
+):
+    """String or duplicate ids give the CLI's JSON error and exit 1
+    before any export, not an analysis error from the shard cut."""
+    import os
+
+    src = str(tmp_path / "docs.parquet")
+    out = str(tmp_path / "sharded")
+    spark.createDataFrame(
+        pd.DataFrame({"doc_id": ids, "text": ["some words here"] * 20})
+    ).write.parquet(src)
+    rc = cli.main([
+        "curate", "--input", src, "--output", out,
+        "--steps", "fix_text", "--shard-rows", "8",
+    ])
+    assert rc == 1
+    err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert message in err["error"]
+    assert not os.path.exists(out)

@@ -83,26 +83,6 @@ def test_merged_scores_equal_single_split_oracle(spark, corpus_rows, tmp_path_fa
             assert np.float32(got[k]) == np.float32(ast_scores[k]), (q, k)
 
 
-def test_salted_build_produces_identical_postings(spark, corpus_rows, tmp_path_factory):
-    df = spark.createDataFrame(pd.DataFrame(corpus_rows))
-    plain_dir = str(tmp_path_factory.mktemp("plain"))
-    salt_dir = str(tmp_path_factory.mktemp("salted"))
-    build_index(spark, df, plain_dir, webpages_config(), num_splits=2)
-    build_index(
-        spark, df, salt_dir, webpages_config(), num_splits=2, salt_chunk=64
-    )
-    cols = ["split_id", "field", "term", "doc_freq", "total_tf", "doc_bytes", "tf_bytes"]
-    a = {
-        (r["split_id"], r["field"], r["term"]): (r["doc_freq"], r["total_tf"], bytes(r["doc_bytes"]), bytes(r["tf_bytes"]))
-        for r in spark.read.parquet(Metastore(plain_dir).postings_dir()).select(cols).collect()
-    }
-    b = {
-        (r["split_id"], r["field"], r["term"]): (r["doc_freq"], r["total_tf"], bytes(r["doc_bytes"]), bytes(r["tf_bytes"]))
-        for r in spark.read.parquet(Metastore(salt_dir).postings_dir()).select(cols).collect()
-    }
-    assert a == b
-
-
 def test_resume_noop_and_checkpoint_guard(spark, corpus_rows, tmp_path_factory):
     index_dir = str(tmp_path_factory.mktemp("resume"))
     df = spark.createDataFrame(pd.DataFrame(corpus_rows))
