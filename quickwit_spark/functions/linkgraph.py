@@ -148,8 +148,11 @@ def pagerank_int(edges: DataFrame, iterations: int = 3) -> DataFrame:
     return ranks
 
 
+#: A <meta> tag naming "robots" anywhere among its attributes (the
+#: lookahead), capturing its content whether it comes before or after
+#: the name.
 ROBOTS_META_RE = (
-    r'<meta\s[^>]*name="robots"[^>]*content="([^"]*)"'
+    r'<meta\s(?=[^>]*name="robots")[^>]*content="([^"]*)"'
 )
 
 
@@ -163,13 +166,15 @@ def robots_directives(
     extract_links discipline), no Python, no shuffle; flags are ints
     so the gate cells are exact. A page with several robots meta tags
     is flagged if ANY tag carries the directive (conservative union,
-    what the major engines document)."""
+    what the major engines document). The ``none`` token means both
+    noindex and nofollow."""
     decoded = F.col(html_col).cast("string")
     contents = F.regexp_extract_all(
         F.lower(decoded), F.lit(ROBOTS_META_RE), F.lit(1)
     )
     has = lambda token: F.exists(  # noqa: E731
-        contents, lambda c: c.contains(F.lit(token))
+        contents,
+        lambda c: c.contains(F.lit(token)) | c.rlike(r"(^|[\s,])none($|[\s,])"),
     ).cast("int")
     return df.select(
         F.col(url_col).alias("url"),

@@ -636,13 +636,19 @@ def write_postings(ms: Metastore, postings: DataFrame) -> None:
     within it, and written with dynamic partition overwrite, so only
     the splits present in ``postings`` are replaced. The session keeps
     dynamic overwrite for the caller's following docmap/fastfield
-    writes."""
+    writes.
+
+    The sort leads with ``split_id``, the partition column, so it
+    satisfies the ordering the partitioned write requires and Spark
+    sorts once: each file is one (field, term) run. A (field, term)
+    sort alone gets re-sorted by ``split_id`` in the write, which
+    breaks the runs."""
     postings.sparkSession.conf.set(
         "spark.sql.sources.partitionOverwriteMode", "dynamic"
     )
     (
         postings.repartition("split_id")
-        .sortWithinPartitions("field", "term")
+        .sortWithinPartitions("split_id", "field", "term")
         .write.partitionBy("split_id")
         .mode("overwrite")
         .parquet(ms.postings_dir())

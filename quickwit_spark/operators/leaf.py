@@ -4,19 +4,42 @@ in the driver for small fan-out (``search_in_process``).
 
 Both executions decode a split with the same ``split_context`` and run
 the same ``evaluate_split`` kernel with the same flags, so they return
-the same hits, f32 scores and counts. Only the scan differs:
+the same hits, f32 scores and counts. Only the read differs:
 
 - on an executor, Spark's partition-pruned, predicate-pushed parquet
   scan feeds the cogroup;
-- in the driver, ``SnapshotFiles`` reads the same files with pyarrow.
-  The split → files map is ``DataFrame.inputFiles()`` of the snapshot's
-  own tables, so an in-process request reads exactly the files a Spark
-  request on that snapshot would. Parquet footers are cached per file
-  for the life of the snapshot — the reference's hotcache of split
-  footers (leaf.rs:125-195).
+- in the driver, ``SnapshotFiles`` maps each split to the same files:
+  ``DataFrame.inputFiles()`` of the snapshot's own tables, so an
+  in-process request reads exactly the files a Spark request on that
+  snapshot would.
 
-``fetch_rows`` is the in-process fetch: a pyarrow row filter on the
-hit splits' docmap files, returning values as Spark's ``collect``
+The split hotcache (``HOTCACHE``, the reference's split footer and
+fast-field caches, leaf.rs:47-55, config.rs:119-125) keeps postings
+and fast-fields files in driver memory, so a warm request decodes no
+parquet:
+
+- *what*: per postings file its ``POSTING_COLUMNS`` as an Arrow table
+  with a field → term → row index; per fast-fields file its
+  ``FASTFIELD_COLUMNS`` with a name → row index. A request takes the
+  rows of its ``(field, term)`` pairs and fast-field names by index
+  lookup, never by scanning a file's dictionary;
+- *key*: the file URI, shared by every snapshot of every index. Split
+  files are immutable: every write (build, merge, demux, a resumed
+  build) names its files after a fresh job UUID, so an entry is valid
+  for as long as its file exists;
+- *invalidation*: building a snapshot's file map (its published
+  splits' files) drops the cached files of that table directory the
+  map does not hold: merged-away and GC'd splits. A request still
+  holding an older snapshot may load such a file again; the next
+  refresh or the LRU drops it;
+- *cap*: ``HOTCACHE_MAX_BYTES`` resident bytes (Arrow buffers plus an
+  estimate of the Python index), least recently used first out. A file
+  is loaded once even when threads race on a cold cache.
+
+The docmap (the doc store) is not cached: a page needs a handful of
+its rows, and it is the largest table. ``fetch_rows`` reads it per
+request, a pyarrow row filter on the hit splits' docmap files with
+footers cached per snapshot, returning values as Spark's ``collect``
 would (fetch_docs.rs:97-125 analogue for a bounded page).
 """
 
@@ -25,7 +48,10 @@ from __future__ import annotations
 import calendar
 import heapq
 import re
+import sys
 import threading
+from collections import OrderedDict
+from concurrent.futures import Future
 from dataclasses import dataclass
 
 import numpy as np
@@ -34,6 +60,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
@@ -47,6 +74,11 @@ FASTFIELD_COLUMNS = ("name", "data")
 
 _SPLIT_DIR = re.compile(r"/split_id=(-?\d+)/")
 _FORMAT = ds.ParquetFileFormat()
+
+#: Resident bytes ``HOTCACHE`` may hold, checked on every insert: the
+#: reference's fast-field cache capacity (config.rs:119-125). Like
+#: ``search.LEAF_MAX_DOCS``, a module constant, not a setting.
+HOTCACHE_MAX_BYTES = 1 << 30
 
 
 @dataclass(frozen=True)
@@ -130,16 +162,127 @@ def evaluate_leaf(lreq: LeafRequest, split_id: int, postings, fastfields):
     )
 
 
+@dataclass(frozen=True)
+class CachedFile:
+    """One split file held whole in driver memory: its rows, a key →
+    row index over them (postings: field → term → row; fast fields:
+    name → row) and the resident bytes of both."""
+
+    table: pa.Table
+    rows: dict
+    nbytes: int
+
+
+def _index_nbytes(index: dict, keys: pa.ChunkedArray) -> int:
+    """Driver bytes of a dict mapping each of ``keys`` to a row: the
+    dict itself plus one str and one int object per key (ASCII size)."""
+    chars = pc.sum(pc.binary_length(keys)).as_py() or 0
+    return sys.getsizeof(index) + chars + len(keys) * (
+        sys.getsizeof("") + sys.getsizeof(1 << 30)
+    )
+
+
+def _load_split_file(table: str, uri: str) -> CachedFile:
+    """Read one postings or fast-fields file whole and index its rows
+    by key, vectorized per distinct field: no per-row Python. Rows need
+    not be sorted."""
+    fs, path = pafs.FileSystem.from_uri(uri)
+    columns = FASTFIELD_COLUMNS if table == "fastfields" else POSTING_COLUMNS
+    with fs.open_input_file(path) as f:
+        tbl = pq.ParquetFile(f).read(columns=list(columns)).combine_chunks()
+    if table == "fastfields":
+        names = tbl.column("name")
+        rows = dict(zip(names.to_numpy(zero_copy_only=False), range(tbl.num_rows)))
+        return CachedFile(tbl, rows, tbl.nbytes + _index_nbytes(rows, names))
+    rows, nbytes = {}, tbl.nbytes
+    field = tbl.column("field")
+    for f in pc.unique(field).to_pylist():
+        at = np.flatnonzero(pc.equal(field, f).to_numpy())
+        terms = tbl.column("term").take(at)
+        rows[f] = dict(zip(terms.to_numpy(zero_copy_only=False), at.tolist()))
+        nbytes += _index_nbytes(rows[f], terms)
+    return CachedFile(tbl, rows, nbytes)
+
+
+class SplitHotcache:
+    """File URI → ``CachedFile`` of postings and fast-fields files,
+    least recently used out past ``HOTCACHE_MAX_BYTES``. One instance,
+    ``HOTCACHE``, serves every ``SnapshotFiles`` in the process."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._files: OrderedDict[str, CachedFile] = OrderedDict()
+        self._loading: dict[str, Future] = {}
+        self.nbytes = 0
+
+    def get(self, table: str, uri: str) -> CachedFile:
+        """The cached file, loaded on first touch. Threads racing on an
+        uncached file wait for one load; a failed load (the file is
+        gone) raises in each of them and caches nothing."""
+        with self._lock:
+            got = self._files.get(uri)
+            if got is not None:
+                self._files.move_to_end(uri)
+                return got
+            pending = self._loading.get(uri)
+            loads = pending is None
+            if loads:
+                pending = self._loading[uri] = Future()
+        if not loads:
+            return pending.result()
+        try:
+            got = _load_split_file(table, uri)
+        except BaseException as e:
+            with self._lock:
+                del self._loading[uri]
+            pending.set_exception(e)
+            raise
+        with self._lock:
+            del self._loading[uri]
+            self._files[uri] = got
+            self.nbytes += got.nbytes
+            while self.nbytes > HOTCACHE_MAX_BYTES:
+                self.nbytes -= self._files.popitem(last=False)[1].nbytes
+        pending.set_result(got)
+        return got
+
+    def retain(self, root: str, uris) -> None:
+        """Drop the cached files under directory ``root`` not in ``uris``."""
+        keep = set(uris)
+        with self._lock:
+            gone = [u for u in self._files if u.startswith(root) and u not in keep]
+            for uri in gone:
+                self.nbytes -= self._files.pop(uri).nbytes
+
+    def sizes(self) -> dict[str, int]:
+        """URI → resident bytes of each cached file, oldest use first."""
+        with self._lock:
+            return {uri: f.nbytes for uri, f in self._files.items()}
+
+    def clear(self) -> None:
+        with self._lock:
+            self._files.clear()
+            self.nbytes = 0
+
+
+HOTCACHE = SplitHotcache()
+
+
 class SnapshotFiles:
-    """Split → parquet files of one ``Searcher.snapshot()``, with a
-    per-file footer cache.
+    """Split → parquet files of one ``Searcher.snapshot()``: postings
+    and fast fields through ``HOTCACHE``, the docmap by a pyarrow scan
+    with a per-file footer cache.
 
     Each table's map comes from ``inputFiles()`` of the snapshot's
-    DataFrame: Spark froze that listing when the snapshot resolved the
-    table, so a publish, merge or GC landing later changes neither the
-    map nor what a request reads. The map is built on first use. A file
-    removed since (GC past its grace period) fails the read with
-    ``FileNotFoundError``; a request never answers from a subset."""
+    DataFrame, kept for the snapshot's published splits: Spark froze
+    that listing when the snapshot resolved the table, so a publish,
+    merge or GC landing later changes neither the map nor what a
+    request reads. The map is built on first use, and then drops from
+    ``HOTCACHE`` the files of that table it does not hold (merged-away,
+    GC'd or replaced splits). A file removed since (GC past its grace
+    period) and not cached fails the read with ``FileNotFoundError``;
+    the docmap is always read from disk, so such a request fails
+    instead of answering from a subset."""
 
     def __init__(self, tables: dict):
         self._tables = tables
@@ -149,16 +292,35 @@ class SnapshotFiles:
         self._docmap_schema: T.StructType | None = None
 
     def files(self, table: str) -> dict[int, list]:
+        """split_id → ``table`` files, for the snapshot's published
+        splits (the listing also holds staged and merged-away ones)."""
         with self._lock:
             got = self._files.get(table)
             if got is None:
-                got = {}
+                published = {int(s.split_id) for s in self._tables["splits"]}
+                got, roots = {}, set()
                 for uri in sorted(self._tables[table].inputFiles()):
                     m = _SPLIT_DIR.search(uri)
                     if m is not None:
-                        got.setdefault(int(m.group(1)), []).append(uri)
+                        roots.add(uri[:m.start() + 1])
+                        if int(m.group(1)) in published:
+                            got.setdefault(int(m.group(1)), []).append(uri)
                 self._files[table] = got
+                if table != "docmap":
+                    live = [uri for uris in got.values() for uri in uris]
+                    for root in roots:
+                        HOTCACHE.retain(root, live)
             return got
+
+    def cached(self, table: str, split_ids) -> dict[int, list[CachedFile]]:
+        """split_id → the ``HOTCACHE`` entries of that split's
+        ``table`` ("postings" or "fastfields") files."""
+        by_split = self.files(table)
+        return {
+            sid: [HOTCACHE.get(table, uri) for uri in by_split[sid]]
+            for sid in split_ids
+            if sid in by_split
+        }
 
     def docmap_schema(self) -> T.StructType:
         if self._docmap_schema is None:
@@ -179,7 +341,7 @@ class SnapshotFiles:
                 frag = self._fragments.setdefault(uri, frag)
         return frag
 
-    def scan(self, table: str, split_ids, columns, filter) -> dict[int, pa.Table]:
+    def scan(self, table: str, split_ids, filter) -> dict[int, pa.Table]:
         """split_id → that split's rows of ``table`` matching
         ``filter``, for the splits that have any. One pyarrow scan over
         the splits' files, in parallel, row groups pruned on the cached
@@ -196,10 +358,7 @@ class SnapshotFiles:
         tbl = ds.FileSystemDataset(
             frags, schema.append(pa.field("split_id", pa.int32())), _FORMAT,
             frags[0].filesystem,
-        ).to_table(
-            columns=None if columns is None else [*columns, "split_id"],
-            filter=filter,
-        )
+        ).to_table(filter=filter)
         if tbl.num_rows == 0:
             return {}
         tbl = tbl.sort_by("split_id")
@@ -211,27 +370,51 @@ class SnapshotFiles:
         }
 
 
+def _pick(files: list[CachedFile], rows_of) -> pa.Table | None:
+    """The rows ``rows_of(file.rows)`` of one split's cached files, or
+    None when there are none: zero-copy one-row slices, which beat a
+    ``take`` for the few rows a request picks."""
+    parts = [f.table.slice(r, 1) for f in files for r in rows_of(f.rows)]
+    if len(parts) > 1:
+        return pa.concat_tables(parts)
+    return parts[0] if parts else None
+
+
 def search_in_process(
     files: SnapshotFiles, lreq: LeafRequest, wanted: int
 ) -> tuple[list[Row], int]:
-    """Scan, evaluate and merge every split of ``lreq`` in the driver
+    """Read, evaluate and merge every split of ``lreq`` in the driver
     → (the first ``wanted`` hit rows in global rank order, the summed
     per-split num_hits). Rows are the cogroup path's
-    ``(split_id, doc_id, score, sort_long)`` with the same values."""
+    ``(split_id, doc_id, score, sort_long)`` with the same values.
+
+    Each split gets the rows the cogroup's scan would give it —
+    ``field IN fields AND term IN terms`` postings, ``name IN
+    ff_names`` fast fields — picked from ``HOTCACHE`` by index."""
+
+    def ff_rows(rows: dict) -> list[int]:
+        return [r for n in lreq.ff_names if (r := rows.get(n)) is not None]
+
+    def posting_rows(rows: dict) -> list[int]:
+        return [
+            r
+            for f in lreq.fields
+            if (by_term := rows.get(f))
+            for t in lreq.terms
+            if (r := by_term.get(t)) is not None
+        ]
+
     sids = sorted(lreq.infos)
-    ff = files.scan(
-        "fastfields", sids, FASTFIELD_COLUMNS,
-        ds.field("name").isin(list(lreq.ff_names)),
-    )
-    post = files.scan(
-        "postings", sids, POSTING_COLUMNS,
-        ds.field("field").isin(list(lreq.fields))
-        & ds.field("term").isin(list(lreq.terms)),
-    )
+    ff_files = files.cached("fastfields", sids)
+    post_files = files.cached("postings", sids)
     candidates = []
     total = 0
-    for sid in sorted(ff):
-        docs, vals, num_hits = evaluate_leaf(lreq, sid, post.get(sid), ff[sid])
+    for sid in sids:
+        ff = _pick(ff_files.get(sid, []), ff_rows)
+        if ff is None:
+            continue  # the cogroup skips a split with no fast-field rows
+        post = _pick(post_files.get(sid, []), posting_rows)
+        docs, vals, num_hits = evaluate_leaf(lreq, sid, post, ff)
         total += num_hits
         exact = np.issubdtype(vals.dtype, np.integer)
         for d, v in zip(docs.tolist(), vals.tolist()):
@@ -299,7 +482,7 @@ def fetch_rows(files: SnapshotFiles, hits) -> list[dict]:
         if f.name not in ("split_id", "doc_id")
     ]
     docmap = files.scan(
-        "docmap", sorted({int(h["split_id"]) for h in hits}), None,
+        "docmap", sorted({int(h["split_id"]) for h in hits}),
         ds.field("doc_id").isin(sorted({int(h["doc_id"]) for h in hits})),
     )
     found: dict[tuple[int, int], dict] = {}

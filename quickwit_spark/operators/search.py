@@ -12,11 +12,12 @@ per-segment heap top-k → leaf/root merges → fetch-docs join. Here:
   num_hits. One decode helper (``leaf.split_context``) and one kernel
   call (``leaf.evaluate_leaf``) serve both executions:
 
-  * **in process** (``leaf.search_in_process``): a pyarrow scan of the
-    snapshot's own parquet files (``DataFrame.inputFiles()``; footers
-    cached per snapshot, the reference's hotcache, leaf.rs:125-195),
-    the kernel per split in the driver, a heap merge on
-    ``(sort value, split_id, doc_id)``. No Spark job runs.
+  * **in process** (``leaf.search_in_process``): the snapshot's own
+    postings and fast-fields files (``DataFrame.inputFiles()``), held
+    whole in driver memory by the split hotcache (``leaf.HOTCACHE``,
+    the reference's split and fast-field caches, leaf.rs:47-55), their
+    rows picked by index, the kernel per split in the driver, a heap
+    merge on ``(sort value, split_id, doc_id)``. No Spark job runs.
     ``search_with_count`` — the REST top-k core — takes it when the
     splits kept by pruning hold at most ``LEAF_MAX_DOCS`` docs and
     number at most ``LEAF_MAX_SPLITS``;
@@ -111,10 +112,10 @@ class Searcher:
         """All three tables ('postings', 'fastfields', 'docmap')
         resolved under ONE state-token check — a request-consistent
         view, plus the published 'splits' and the in-process leaf's
-        'files' (split → parquet files of these very tables, with the
-        footer cache; operators/leaf.py). A request must take one
-        snapshot up front and read every table from it: re-validating
-        per ``table()`` call would let a
+        'files' (split → parquet files of these very tables, read
+        through the split hotcache; operators/leaf.py). A request must
+        take one snapshot up front and read every table from it:
+        re-validating per ``table()`` call would let a
         publish landing mid-request mix tables from two index states
         (pre-publish postings joined against post-publish fastfields
         silently drops every hit of a replaced split)."""
@@ -148,11 +149,14 @@ class Searcher:
         return self.snapshot()[name]
 
 
-_searchers: dict[tuple[str, str], Searcher] = {}
+_searchers: dict[tuple[object, str], Searcher] = {}
 
 
 def get_searcher(spark: SparkSession, index_dir: str) -> Searcher:
-    key = (spark.sparkContext.applicationId, os.path.abspath(index_dir))
+    # keyed by the SparkContext object (a restarted session gets a new
+    # one), not its applicationId: reading that is a JVM round trip,
+    # paid twice per REST request
+    key = (spark.sparkContext, os.path.abspath(index_dir))
     s = _searchers.get(key)
     if s is None or not s.fresh():
         s = Searcher(spark, index_dir)

@@ -1,11 +1,15 @@
 """The in-process leaf (operators/leaf.py) against the Spark cogroup
 path and the oracle: byte-identical REST bodies, routing, zero Spark
-jobs on small fan-out, and snapshot safety of its direct file reads."""
+jobs on small fan-out, snapshot safety of its direct file reads, and
+the split hotcache's invalidation, byte cap and cold-start races."""
 
 from __future__ import annotations
 
+import collections
+import glob
 import json
 import os
+import shutil
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -13,13 +17,16 @@ import uuid
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from quickwit_spark import serve as serve_mod
+from quickwit_spark.operators import leaf as leaf_mod
 from quickwit_spark.operators import search as search_mod
 from quickwit_spark.operators.build import add_documents, build_index
 from quickwit_spark.operators.merge import merge_splits
 from quickwit_spark.operators.search import Searcher, fetch_docs, get_searcher
+from quickwit_spark.oracle import OracleIndex
 from quickwit_spark.plans.config import webpages_config
 from quickwit_spark.plans.merge_policy import garbage_collect
 from quickwit_spark.plans.metastore import open_metastore
@@ -137,8 +144,12 @@ def test_rest_body_identical_on_both_paths(
     get_searcher(spark, two_window_index).snapshot()
     leaf = {}
     for name, p in cases.items():
+        leaf_mod.HOTCACHE.clear()  # cold: every file read from parquet
         leaf[name], jobs = _jobs_of(spark, lambda: _body(spark, two_window_index, p))
         assert jobs == [], name
+        warm, jobs = _jobs_of(spark, lambda: _body(spark, two_window_index, p))
+        assert jobs == [], name
+        assert warm == leaf[name], name
     monkeypatch.setattr(search_mod, "LEAF_MAX_SPLITS", 0)
     monkeypatch.setattr(search_mod, "fetch_rows", _spark_fetch(spark, two_window_index))
     for name, p in cases.items():
@@ -321,10 +332,13 @@ def test_file_removed_by_gc_is_an_http_error(
         srv.shutdown()
 
 
-def test_concurrent_requests_share_one_cold_snapshot(spark, built_index):
+def test_concurrent_requests_share_one_cold_snapshot(
+    spark, built_index, monkeypatch
+):
     """REST handler threads share one snapshot's file map and footer
-    cache: racing on a cold cache, every request still gets the serial
-    answer."""
+    cache, and the split hotcache: racing on a cold snapshot and a
+    cold hotcache, every request still gets the serial answer, and
+    each file is loaded once."""
     import sys
     import threading
 
@@ -339,6 +353,16 @@ def test_concurrent_requests_share_one_cold_snapshot(spark, built_index):
     # cache are still empty when the threads start
     os.utime(os.path.join(built_index, "manifest.json"))
     get_searcher(spark, built_index).snapshot()
+    leaf_mod.HOTCACHE.clear()
+    loads, loads_lock = collections.Counter(), threading.Lock()
+    load = leaf_mod._load_split_file
+
+    def counted(table, uri):
+        with loads_lock:
+            loads[uri] += 1
+        return load(table, uri)
+
+    monkeypatch.setattr(leaf_mod, "_load_split_file", counted)
     got, errors = [], []
 
     def worker(i):
@@ -365,3 +389,136 @@ def test_concurrent_requests_share_one_cold_snapshot(spark, built_index):
     assert len(got) == 12
     for q, r in got:
         assert r == want[q], q
+    assert loads and set(loads.values()) == {1}
+    assert set(loads) == set(leaf_mod.HOTCACHE.sizes())
+
+
+def _assert_oracle_answers(spark, idx, oracle, queries, k=10):
+    """Each query's top-``k`` page equals the oracle's: keys in rank
+    order, f32 scores bit-identical, the exact count."""
+    for q in queries:
+        resp = serve_mod.search_endpoint(spark, idx, {"query": q, "maxHits": k})
+        want = oracle.search(q, k=k)
+        assert resp["num_hits"] == oracle.count(q), q
+        assert [h["key"] for h in resp["hits"]] == [
+            oracle.doc_key(s, d) for s, d, _ in want
+        ], q
+        np.testing.assert_array_equal(
+            np.array([h["score"] for h in resp["hits"]], dtype=np.float32),
+            np.array([w[2] for w in want], dtype=np.float32),
+            err_msg=q,
+        )
+
+
+def _cached_files_of(idx) -> set[str]:
+    root = os.path.abspath(idx)
+    return {u for u in leaf_mod.HOTCACHE.sizes() if root in u}
+
+
+def _live_files(spark, idx) -> set[str]:
+    """The postings and fast-fields files of the published splits."""
+    snap = get_searcher(spark, idx).snapshot()
+    published = {int(s.split_id) for s in snap["splits"]}
+    return {
+        uri
+        for table in ("postings", "fastfields")
+        for sid, uris in snap["files"].files(table).items()
+        if sid in published
+        for uri in uris
+    }
+
+
+CACHE_QUERIES = ["word hot", "the", '"of the"', "lang:fr word", "qw_marker_3"]
+
+
+def test_hotcache_follows_merge_and_resumed_rebuild(
+    spark, corpus_rows, oracle_index, tmp_path_factory, monkeypatch
+):
+    """Cached files are keyed by URI, so a merge and a rebuild that
+    reuses the split ids (new files under the same split directories)
+    never answer from a replaced file, and each snapshot refresh drops
+    the files it no longer lists."""
+    import quickwit_spark.plans.metastore as metastore_mod
+
+    idx = _fresh_index(spark, corpus_rows, tmp_path_factory, "hotcache_life")
+    _assert_oracle_answers(spark, idx, oracle_index, CACHE_QUERIES)  # warm
+    before = _cached_files_of(idx)
+    assert before and before <= _live_files(spark, idx)
+
+    ms = open_metastore(idx)
+    merge_splits(spark, idx, [s.split_id for s in ms.list_published()])
+    # one merged split scores as a 1-split index; its doc ids follow
+    # the merge, not the oracle, so compare whole match sets
+    merged = OracleIndex(corpus_rows, webpages_config(), num_splits=1)
+    for q in CACHE_QUERIES:
+        resp = serve_mod.search_endpoint(spark, idx, {"query": q, "maxHits": 1000})
+        want = {
+            merged.doc_key(s, d): np.float32(score)
+            for s, d, score in merged.search(q, k=1000)
+        }
+        assert resp["num_hits"] == len(want) == merged.count(q), q
+        assert {h["key"]: np.float32(h["score"]) for h in resp["hits"]} == want, q
+    after_merge = _cached_files_of(idx)
+    assert after_merge <= _live_files(spark, idx)
+    assert not after_merge & before
+
+    # the same split ids again, from a different corpus: a crashed
+    # build, then its resume, each writing new file names
+    shutil.rmtree(idx)
+    rows = corpus_rows[:250]
+    df = spark.createDataFrame(pd.DataFrame(rows))
+
+    def crash(self, *a, **k):
+        raise RuntimeError("simulated crash before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(metastore_mod.Metastore, "publish_splits", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            build_index(spark, df, idx, webpages_config(), num_splits=3)
+    metas = build_index(spark, df, idx, webpages_config(), num_splits=3)
+    assert sorted(m.split_id for m in metas) == ["0", "1", "2"]
+    rebuilt = OracleIndex(rows, webpages_config(), num_splits=3)
+    _assert_oracle_answers(spark, idx, rebuilt, CACHE_QUERIES)
+    live = _live_files(spark, idx)
+    assert _cached_files_of(idx) <= live
+    assert not live & (before | after_merge)
+
+
+def test_hotcache_byte_cap_holds_and_answers_stay(
+    spark, built_index, oracle_index, monkeypatch
+):
+    leaf_mod.HOTCACHE.clear()
+    _assert_oracle_answers(spark, built_index, oracle_index, CACHE_QUERIES)
+    cached = leaf_mod.HOTCACHE.sizes()
+    sizes = [cached[u] for u in _cached_files_of(built_index)]
+    assert len(sizes) == 6  # 3 splits × (postings, fastfields)
+    # room for a few files, not all: requests evict and reload
+    for cap in (sum(sorted(sizes)[:3]), max(sizes) - 1, 1):
+        monkeypatch.setattr(leaf_mod, "HOTCACHE_MAX_BYTES", cap)
+        leaf_mod.HOTCACHE.clear()
+        for q in CACHE_QUERIES:
+            _assert_oracle_answers(spark, built_index, oracle_index, [q])
+            resident = list(leaf_mod.HOTCACHE.sizes().values())
+            assert leaf_mod.HOTCACHE.nbytes == sum(resident) <= cap, cap
+            assert len(resident) < 6, cap
+
+
+def test_hotcache_reads_unsorted_postings_files(
+    spark, corpus_rows, oracle_index, tmp_path_factory
+):
+    """Files written before the postings writer sorted each file as one
+    (field, term) run hold several runs; the hotcache index must not
+    assume order. Shuffle every postings file's rows, then search."""
+    idx = _fresh_index(spark, corpus_rows, tmp_path_factory, "hotcache_shuffled")
+    rng = np.random.default_rng(7)
+    paths = glob.glob(os.path.join(idx, "postings", "split_id=*", "*.parquet"))
+    for path in paths:
+        tbl = pq.ParquetFile(path).read()
+        tbl = tbl.take(rng.permutation(tbl.num_rows))
+        keys = list(zip(tbl["field"].to_pylist(), tbl["term"].to_pylist()))
+        assert keys != sorted(keys)
+        pq.write_table(tbl, path)
+        head, name = os.path.split(path)
+        os.remove(os.path.join(head, f".{name}.crc"))  # Hadoop's checksum
+    _assert_oracle_answers(spark, idx, oracle_index, CACHE_QUERIES)
+    assert len(_cached_files_of(idx)) == 2 * len(paths)

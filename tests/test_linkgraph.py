@@ -103,6 +103,14 @@ def test_robots_directives_union_semantics(spark):
         ("u3", '<meta name="robots" content="index">'
                '<meta name="robots" content="nofollow">'),  # union
         ("u4", '<meta name="keywords" content="noindex">'),  # wrong meta
+        # content before name, in a tag of its own and beside a
+        # name-first tag
+        ("u5", '<meta content="noindex" name="robots">'),
+        ("u6", '<meta name="robots" content="index">'
+               '<meta content="follow, NOFOLLOW" name="robots">'),
+        ("u7", '<meta name="robots" content="None">'),  # none = both
+        ("u8", '<meta content="index, none" name="robots">'),
+        ("u9", '<meta name="robots" content="nonesuch">'),  # not the token
     ]
     df = spark.createDataFrame(rows, "url string, html string")
     out = {r["url"]: r for r in robots_directives(df).collect()}
@@ -111,4 +119,12 @@ def test_robots_directives_union_semantics(spark):
     assert (out["u3"]["noindex"], out["u3"]["nofollow"]) == (0, 1)
     assert out["u3"]["n_robots_meta"] == 2
     assert (out["u4"]["noindex"], out["u4"]["n_robots_meta"]) == (0, 0)
+    flags = lambda u: tuple(  # noqa: E731
+        out[u][c] for c in ("noindex", "nofollow", "n_robots_meta")
+    )
+    assert flags("u5") == (1, 0, 1)
+    assert flags("u6") == (0, 1, 2)
+    assert flags("u7") == (1, 1, 1)
+    assert flags("u8") == (1, 1, 1)
+    assert flags("u9") == (0, 0, 1)
     _no_python_eval(robots_directives(df))

@@ -326,3 +326,38 @@ def test_full_lifecycle_both_backends(
         assert counts[q] == count_hits(
             spark, index_dir, SearchRequest(query=q)
         ), q
+
+
+def _assert_postings_files_sorted(index_dir: str) -> set[str]:
+    """Every postings file is one run, non-decreasing in (field, term)
+    (the order Spark sorts strings in: UTF-8 bytes, i.e. code points).
+    Returns the files checked."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    paths = set(glob.glob(os.path.join(index_dir, "postings", "*", "*.parquet")))
+    assert paths
+    for path in paths:
+        tbl = pq.ParquetFile(path).read(columns=["field", "term"])
+        keys = list(zip(tbl["field"].to_pylist(), tbl["term"].to_pylist()))
+        assert keys == sorted(keys), path
+    return paths
+
+
+def test_every_postings_writer_sorts_each_file(spark, corpus_rows, tmp_path_factory):
+    """build, merge_splits, _merge_splits_sorted (an index-sorted
+    config) and demux_splits all write each postings file sorted."""
+    from quickwit_spark.operators.demux import demux_splits
+
+    df = spark.createDataFrame(pd.DataFrame(corpus_rows))
+    for cfg in (webpages_config(), webpages_config(sort_by_field="warc_ts")):
+        index_dir = str(tmp_path_factory.mktemp("sorted_postings") / "idx")
+        build_index(spark, df, index_dir, cfg, num_splits=4)
+        built = _assert_postings_files_sorted(index_dir)
+        merge_splits(spark, index_dir, ["0", "1"])
+        merged = _assert_postings_files_sorted(index_dir)
+        assert merged - built  # the merge wrote a new split's file
+    demux_splits(spark, index_dir, "lang", num_out_splits=2)
+    assert _assert_postings_files_sorted(index_dir) - merged
