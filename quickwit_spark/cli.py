@@ -95,11 +95,13 @@ def cmd_ingest(args) -> int:
 
 
 def cmd_search(args) -> int:
-    from quickwit_spark.operators.search import SearchRequest, fetch_docs, search_df
+    from quickwit_spark.operators.search import search
 
     spark = get_spark("qws-search")
-    req = SearchRequest(
-        query=args.query,
+    out = search(
+        spark,
+        args.index,
+        args.query,
         k=args.max_hits,
         offset=args.start_offset,
         start_ts=args.start_timestamp,
@@ -107,13 +109,8 @@ def cmd_search(args) -> int:
         sort_field=args.sort_by_field.lstrip("+-") if args.sort_by_field else None,
         sort_asc=bool(args.sort_by_field and args.sort_by_field.startswith("+")),
     )
-    from quickwit_spark.operators.search import get_searcher
-
-    snap = get_searcher(spark, args.index).snapshot()
-    hits = search_df(spark, args.index, req, tables=snap)
-    out = fetch_docs(spark, args.index, hits, docmap=snap["docmap"])
     if args.format == "json" and "_source" not in out.columns:
-        # schema-only check — fail before running the query
+        # schema-only check — fail before fetching any document
         print(
             json.dumps(
                 {

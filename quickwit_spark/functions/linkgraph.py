@@ -149,10 +149,12 @@ def pagerank_int(edges: DataFrame, iterations: int = 3) -> DataFrame:
 
 
 #: A <meta> tag naming "robots" anywhere among its attributes (the
-#: lookahead), capturing its content whether it comes before or after
-#: the name.
+#: lookahead), capturing its content (group 2) whether it comes before
+#: or after the name. Each value may be double-quoted, single-quoted
+#: (group 1 holds the quote, ``\1`` closes it) or unquoted.
 ROBOTS_META_RE = (
-    r'<meta\s(?=[^>]*name="robots")[^>]*content="([^"]*)"'
+    r"""<meta(?=[^>]*\sname\s*=\s*["']?robots["'\s/>])"""
+    r"""[^>]*\scontent\s*=\s*(["']?)([^>]*?)\1(?=[\s/>])"""
 )
 
 
@@ -170,7 +172,7 @@ def robots_directives(
     noindex and nofollow."""
     decoded = F.col(html_col).cast("string")
     contents = F.regexp_extract_all(
-        F.lower(decoded), F.lit(ROBOTS_META_RE), F.lit(1)
+        F.lower(decoded), F.lit(ROBOTS_META_RE), F.lit(2)
     )
     has = lambda token: F.exists(  # noqa: E731
         contents,

@@ -343,12 +343,12 @@ def evaluate_split(
     Count with TopDocs forfeits WAND pruning.
     """
     no_ts = not apply_ts_filter or (start_micros is None and end_micros is None)
-    # k=0 (agg/count-only request): the block-max paths assume a
-    # non-empty heap; the generic path below handles it exactly
     # single bare term: block-max fast path (num_hits stays exact)
-    if k > 0 and isinstance(ast, TermQ) and not emit_all and sort_field is None and no_ts:
+    if isinstance(ast, TermQ) and not emit_all and sort_field is None and no_ts:
         return _topk_single_term(ctx, ast, k)
-    # pure disjunction of terms: multi-term block-max WAND
+    # pure disjunction of terms: multi-term block-max WAND; it assumes
+    # a non-empty heap, so k=0 (a count-only request) takes the
+    # generic path below, which handles it exactly
     if (
         k > 0
         and not count_exact
@@ -419,6 +419,8 @@ def _topk_single_term(
     if row is None:
         return np.empty(0, np.int64), np.empty(0, np.float64), 0
     df = int(row["doc_freq"])
+    if k == 0:  # a count-only request: the count is the doc freq
+        return np.empty(0, np.int64), np.empty(0, np.float64), df
     weight = bm25.term_weight(df, ctx.num_docs)
     cache = bm25.norm_cache(ctx.avg_fieldnorm(node.field))
     norms = ctx.norms[node.field]

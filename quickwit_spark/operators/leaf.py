@@ -1,10 +1,12 @@
-"""The leaf: one split's scanned rows → evaluated hits, run either on
-an executor (the cogroup ``applyInPandas`` of operators/search.py) or
-in the driver for small fan-out (``search_in_process``).
-
-Both executions decode a split with the same ``split_context`` and run
-the same ``evaluate_split`` kernel with the same flags, so they return
-the same hits, f32 scores and counts. Only the read differs:
+"""The leaf: one split's scanned rows → its leaf response (its first
+``k`` hits after the keyset cursor, in rank order, and its exact
+num_hits), run either on an executor (the cogroup ``applyInPandas`` of
+operators/search.py) or in the driver for small fan-out
+(``search_in_process``); and ``merge_hits``, the one merge of leaf
+responses both routes run. The rank key and the keyset predicate live
+here only. Both routes decode a split with ``split_context`` and run
+``evaluate_leaf`` with the same flags, so they return the same hits,
+f32 scores and counts. Only the read differs:
 
 - on an executor, Spark's partition-pruned, predicate-pushed parquet
   scan feeds the cogroup;
@@ -46,7 +48,6 @@ would (fetch_docs.rs:97-125 analogue for a bounded page).
 from __future__ import annotations
 
 import calendar
-import heapq
 import re
 import sys
 import threading
@@ -80,6 +81,14 @@ _FORMAT = ds.ParquetFileFormat()
 #: ``search.LEAF_MAX_DOCS``, a module constant, not a setting.
 HOTCACHE_MAX_BYTES = 1 << 30
 
+#: A leaf response as rows (the cogroup's and its fold's output): hits
+#: in rank order with ``num_hits`` 0, then a count row (``doc_id`` -1,
+#: none for ``emit_all``) carrying the num_hits. ``sort_long`` is the
+#: exact int64 sort value (float64 ``score`` rounds |v| > 2^53).
+HITS_SCHEMA = (
+    "split_id int, doc_id long, score double, sort_long long, num_hits long"
+)
+
 
 @dataclass(frozen=True)
 class LeafRequest:
@@ -88,17 +97,18 @@ class LeafRequest:
 
     ast: object
     infos: dict  # split_id → {"num_docs", "total_tokens", "inside"}
-    k: int
+    k: int  # hits kept per response: the page's k + offset, or k after a cursor
     start_micros: int | None
     end_micros: int | None
     ts_name: str
     sort_field: str | None  # the fast-field blob name, e.g. "ts_warc_ts"
     sort_asc: bool
-    emit_all: bool
+    emit_all: bool  # every match, no k and no count row: matches_df
     count_exact: bool
     fields: tuple[str, ...]  # posting scan filter: field IN fields
     terms: tuple[str, ...]  # ... AND term IN terms
     ff_names: tuple[str, ...]  # fast-field scan filter: name IN ff_names
+    after: tuple | None = None  # keyset cursor (sort value, split_id, doc_id)
 
 
 def _columns(table, names) -> list[list]:
@@ -141,13 +151,15 @@ def split_context(lreq: LeafRequest, split_id: int, postings, fastfields):
 
 
 def evaluate_leaf(lreq: LeafRequest, split_id: int, postings, fastfields):
-    """One split's ``(doc_ids, sort values, num_hits)``, or None when
-    the split is not evaluated (unknown split, or no fast-field rows —
-    the cogroup side that carries the norms)."""
-    if split_id not in lreq.infos or len(fastfields) == 0:
-        return None
+    """One split's leaf response ``(doc_ids, sort values, num_hits)``:
+    its first ``k`` matches after ``lreq.after`` in rank order (all for
+    ``emit_all``), and the count of all its matches, also when none is
+    kept. A split with no fast-field rows (the cogroup side carrying
+    the norms) is not evaluated: no hits, count 0."""
+    if split_id not in lreq.infos or fastfields is None or len(fastfields) == 0:
+        return np.empty(0, np.int64), np.empty(0), 0
     ctx, sort_vals = split_context(lreq, split_id, postings, fastfields)
-    return evaluate_split(
+    docs, vals, num_hits = evaluate_split(
         ctx,
         lreq.ast,
         lreq.k,
@@ -157,8 +169,82 @@ def evaluate_leaf(lreq: LeafRequest, split_id: int, postings, fastfields):
         sort_field=lreq.sort_field,
         sort_values=sort_vals,
         sort_asc=lreq.sort_asc,
-        emit_all=lreq.emit_all,
+        # a cursor can sit at any rank: rank every match, then cut
+        emit_all=lreq.emit_all or lreq.after is not None,
         count_exact=lreq.count_exact,
+    )
+    if lreq.after is not None:
+        keep = np.flatnonzero(_after_cursor(lreq, split_id, docs, vals))[: lreq.k]
+        docs, vals = docs[keep], vals[keep]
+    return docs, vals, num_hits
+
+
+def _after_cursor(lreq: LeafRequest, split_id: int, docs, vals) -> np.ndarray:
+    """The keyset predicate: which of one split's hits rank strictly
+    after the cursor ``(value, split_id, doc_id)``."""
+    v, c_split, c_doc = lreq.after
+    later = vals > v if lreq.sort_field is not None and lreq.sort_asc else vals < v
+    if split_id > c_split:
+        return later | (vals == v)
+    if split_id == c_split:
+        return later | ((vals == v) & (docs > c_doc))
+    return later
+
+
+def _rank(lreq: LeafRequest, split_ids, docs, vals) -> np.ndarray:
+    """The rank key: BM25 score desc, or the exact int64 sort value in
+    the request's direction; ties on (split_id, doc_id) ascending.
+    Returns the positions in rank order."""
+    if lreq.sort_field is None:
+        primary = -vals
+    else:
+        primary = vals if lreq.sort_asc else ~vals  # ~x = -x-1: no overflow
+    return np.lexsort((docs, split_ids, primary))
+
+
+def merge_hits(lreq: LeafRequest, responses) -> tuple:
+    """Leaf responses ``(split_ids, doc_ids, vals, num_hits)`` → one
+    of the same shape: the first ``lreq.k`` hits over all of them in
+    rank order, and the summed num_hits. A merged response merges
+    again, so the cogroup folds per partition and then in the driver."""
+    dtype = np.float64 if lreq.sort_field is None else np.int64
+    responses = list(responses)
+    sids, docs, vals = (
+        np.concatenate([np.empty(0, t), *(r[i] for r in responses)]).astype(t)
+        for i, t in enumerate((np.int32, np.int64, dtype))
+    )
+    top = _rank(lreq, sids, docs, vals)[: lreq.k]
+    return sids[top], docs[top], vals[top], sum(int(r[3]) for r in responses)
+
+
+def hit_page(split_ids, doc_ids, vals, exact: bool) -> pd.DataFrame:
+    """Hits as ``(split_id, doc_id, score, sort_long)`` rows; ``exact``
+    when ``vals`` are int64 sort values rather than BM25 scores."""
+    vals = np.asarray(vals, np.int64 if exact else np.float64)
+    return pd.DataFrame({
+        "split_id": np.asarray(split_ids, np.int32),
+        "doc_id": np.asarray(doc_ids, np.int64),
+        "score": vals.astype(np.float64),
+        "sort_long": pd.array(vals if exact else [None] * vals.size, "Int64"),
+    })
+
+
+def response_to_rows(lreq: LeafRequest, response) -> pd.DataFrame:
+    """A leaf response as ``HITS_SCHEMA`` rows."""
+    sids, docs, vals, num_hits = response
+    if not lreq.emit_all:
+        sids, docs, vals = np.append(sids, -1), np.append(docs, -1), np.append(vals, 0)
+    rows = hit_page(sids, docs, vals, exact=lreq.sort_field is not None)
+    return rows.assign(num_hits=np.where(rows["doc_id"] < 0, num_hits, 0))
+
+
+def rows_to_response(lreq: LeafRequest, frame: pd.DataFrame) -> tuple:
+    """``HITS_SCHEMA`` rows → the leaf response they carry."""
+    hits = frame[frame["doc_id"] >= 0]
+    vals = hits["score" if lreq.sort_field is None else "sort_long"]
+    return (
+        hits["split_id"].to_numpy(), hits["doc_id"].to_numpy(), vals.to_numpy(),
+        int(frame["num_hits"].sum()),
     )
 
 
@@ -380,13 +466,9 @@ def _pick(files: list[CachedFile], rows_of) -> pa.Table | None:
     return parts[0] if parts else None
 
 
-def search_in_process(
-    files: SnapshotFiles, lreq: LeafRequest, wanted: int
-) -> tuple[list[Row], int]:
-    """Read, evaluate and merge every split of ``lreq`` in the driver
-    → (the first ``wanted`` hit rows in global rank order, the summed
-    per-split num_hits). Rows are the cogroup path's
-    ``(split_id, doc_id, score, sort_long)`` with the same values.
+def search_in_process(files: SnapshotFiles, lreq: LeafRequest) -> tuple:
+    """Read and evaluate every split of ``lreq`` in the driver and
+    merge their responses → one leaf response (``merge_hits``).
 
     Each split gets the rows the cogroup's scan would give it —
     ``field IN fields AND term IN terms`` postings, ``name IN
@@ -407,29 +489,13 @@ def search_in_process(
     sids = sorted(lreq.infos)
     ff_files = files.cached("fastfields", sids)
     post_files = files.cached("postings", sids)
-    candidates = []
-    total = 0
+    responses = []
     for sid in sids:
         ff = _pick(ff_files.get(sid, []), ff_rows)
-        if ff is None:
-            continue  # the cogroup skips a split with no fast-field rows
         post = _pick(post_files.get(sid, []), posting_rows)
         docs, vals, num_hits = evaluate_leaf(lreq, sid, post, ff)
-        total += num_hits
-        exact = np.issubdtype(vals.dtype, np.integer)
-        for d, v in zip(docs.tolist(), vals.tolist()):
-            candidates.append((sid, d, v if exact else None, float(v)))
-    if lreq.sort_field is None:
-        key = lambda c: (-c[3], c[0], c[1])  # noqa: E731 — score desc
-    elif lreq.sort_asc:
-        key = lambda c: (c[2], c[0], c[1])  # noqa: E731
-    else:
-        key = lambda c: (-c[2], c[0], c[1])  # noqa: E731
-    rows = [
-        Row(split_id=s, doc_id=d, score=score, sort_long=exact)
-        for s, d, exact, score in heapq.nsmallest(wanted, candidates, key=key)
-    ]
-    return rows, total
+        responses.append((np.full(docs.size, sid, np.int32), docs, vals, num_hits))
+    return merge_hits(lreq, responses)
 
 
 # ---------------------------------------------------------------- fetch
@@ -471,19 +537,21 @@ def _column_values(col: pa.ChunkedArray, dt) -> list:
     return vals
 
 
-def fetch_rows(files: SnapshotFiles, hits) -> list[dict]:
-    """The docmap rows of ``hits`` (rows with split_id, doc_id, score,
-    sort_long), in hit order, as dicts keyed like the Spark
-    ``fetch_docs`` join output: split_id, doc_id, the docmap columns in
-    the snapshot schema's order, score, sort_long. A hit whose doc is
-    missing drops out, as in the inner join."""
+def fetch_rows(files: SnapshotFiles, hits, exact: bool) -> list[dict]:
+    """The docmap rows of the leaf response ``hits``, in hit order, as
+    dicts keyed like the Spark ``fetch_docs`` join output: split_id,
+    doc_id, the docmap columns in the snapshot schema's order, score,
+    sort_long (``exact``: the vals are int64 sort values). A hit whose
+    doc is missing drops out, as in the inner join."""
+    sids, docs, vals = hits[:3]
+    keys = list(zip(sids.tolist(), docs.tolist()))
     fields = [
         f for f in files.docmap_schema().fields
         if f.name not in ("split_id", "doc_id")
     ]
     docmap = files.scan(
-        "docmap", sorted({int(h["split_id"]) for h in hits}),
-        ds.field("doc_id").isin(sorted({int(h["doc_id"]) for h in hits})),
+        "docmap", sorted({s for s, _ in keys}),
+        ds.field("doc_id").isin(sorted({d for _, d in keys})),
     )
     found: dict[tuple[int, int], dict] = {}
     for sid, tbl in docmap.items():
@@ -494,12 +562,10 @@ def fetch_rows(files: SnapshotFiles, hits) -> list[dict]:
         }
         for i, d in enumerate(tbl.column("doc_id").to_pylist()):
             found[(sid, d)] = {name: vals[i] for name, vals in cols.items()}
-    out = []
-    for h in hits:
-        key = (int(h["split_id"]), int(h["doc_id"]))
-        if key in found:
-            out.append({
-                "split_id": key[0], "doc_id": key[1], **found[key],
-                "score": h["score"], "sort_long": h["sort_long"],
-            })
-    return out
+    sort_long = vals.tolist() if exact else [None] * len(keys)
+    return [
+        {"split_id": key[0], "doc_id": key[1], **found[key],
+         "score": score, "sort_long": value}
+        for key, score, value in zip(keys, vals.astype(np.float64).tolist(), sort_long)
+        if key in found
+    ]

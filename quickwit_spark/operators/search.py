@@ -1,42 +1,42 @@
-"""Search: the root/leaf lifecycle, with two leaf executions.
+"""Search: the root/leaf lifecycle, one top-k core on two leaf routes.
 
 Reference lifecycle (SURVEY.md §3.1): root parses + prunes splits →
 leaf per split opens the needed posting lists + fast fields only →
-per-segment heap top-k → leaf/root merges → fetch-docs join. Here:
+per-segment heap top-k → leaf/root merges → fetch-docs join. Every
+top-k entry point here — ``search_with_count`` (the REST core, with or
+without a ``searchAfter`` cursor), ``search_df``, ``search_after_df``
+and ``count_hits`` — takes the same three steps (``_top_k``): the
+driver parses the query and prunes splits from the metastore, no data
+touched, into a ``LeafRequest`` (``_plan``); each kept split reads
+ONLY the query's (field, term) posting rows and the fast fields it
+needs and answers its leaf response (``leaf.evaluate_leaf``); the
+responses merge into the page and the summed count
+(``leaf.merge_hits``, collector.rs:306-398), the offset applied after
+the merge (root.rs:305-320). ``_runs_in_process`` alone picks where
+the leaf runs:
 
-- the driver parses the query and prunes splits from the metastore
-  (plans/pruning.py) — no data touched — into a ``LeafRequest``;
-- each kept split is read ONLY for the query's (field, term) posting
-  rows and the fast fields it needs, and the numpy kernel
-  (operators/eval.py) computes its top-(k+offset) heap + exact
-  num_hits. One decode helper (``leaf.split_context``) and one kernel
-  call (``leaf.evaluate_leaf``) serve both executions:
+* **in process** (``leaf.search_in_process``) when the splits kept by
+  pruning hold at most ``LEAF_MAX_DOCS`` docs and number at most
+  ``LEAF_MAX_SPLITS``: the snapshot's own postings and fast-fields
+  files, held in driver memory by the split hotcache (``leaf.HOTCACHE``,
+  leaf.rs:47-55), the kernel per split in the driver. No Spark job;
+* **on Spark**: one scan with partition pruning + predicate pushdown
+  on the term-sorted parquet feeds a cogrouped ``applyInPandas`` per
+  split, a ``mapInPandas`` fold merges each partition's responses, and
+  one ``collect`` brings at most partitions × (k+offset) rows to the
+  driver's merge. No persist, no global sort, no second count pass.
 
-  * **in process** (``leaf.search_in_process``): the snapshot's own
-    postings and fast-fields files (``DataFrame.inputFiles()``), held
-    whole in driver memory by the split hotcache (``leaf.HOTCACHE``,
-    the reference's split and fast-field caches, leaf.rs:47-55), their
-    rows picked by index, the kernel per split in the driver, a heap
-    merge on ``(sort value, split_id, doc_id)``. No Spark job runs.
-    ``search_with_count`` — the REST top-k core — takes it when the
-    splits kept by pruning hold at most ``LEAF_MAX_DOCS`` docs and
-    number at most ``LEAF_MAX_SPLITS``;
-  * **on Spark**: one scan with partition pruning + predicate pushdown
-    on the term-sorted parquet feeds a cogrouped ``applyInPandas`` per
-    split; the global merge is ``ORDER BY score DESC, split_id, doc_id
-    LIMIT k+offset`` (TakeOrderedAndProject, collector.rs:306-398 /
-    root.rs:305-320 pagination folding). Wide fan-out, ``search_df``,
-    ``search_after``, aggregations and stream export run here.
-
-- hit materialization: a bounded page already in the driver is read
-  from the docmap files in process (``leaf.fetch_rows``, inside
-  ``search_with_count``);
-  ``fetch_docs`` broadcast-joins a hit DataFrame back to the docmap
-  (fetch_docs.rs:97-125 analogue).
+``search_df`` and ``search_after_df`` are eager: they wrap the merged
+page with ``createDataFrame`` (a non-empty pandas page runs no Spark
+job to build or collect). Aggregations and stream export read every
+match through ``matches_df``, a lazy cogroup with ``emit_all``. A
+page's docs are read in process (``leaf.fetch_rows``, inside
+``search_with_count``) or broadcast-joined to the docmap
+(``fetch_docs``, fetch_docs.rs:97-125 analogue).
 
 Routing. ``search_endpoint`` p50 over the 8 bench.py query shapes on a
 4-core host, in process vs Spark, with 1 and with 8 closed-loop
-clients:
+clients (measured before the cogroup became one fold and one collect):
 
 ======  ==========  ==========  ========  ==========  ========
 splits  docs/split  process ×1  Spark ×1  process ×8  Spark ×8
@@ -55,8 +55,7 @@ norms held in driver memory) and with the split count (~1.3 ms/split);
 Spark spreads the per-doc part over its cores. So no crossover was
 found, and the limits are the largest sizes measured —
 ``LEAF_MAX_DOCS`` = 200 000 pruned docs, ``LEAF_MAX_SPLITS`` = 256
-pruned splits — not extrapolated further. Wider requests stay on the
-cogroup path, which the benchmark workloads do not exercise.
+pruned splits — not extrapolated further.
 """
 
 from __future__ import annotations
@@ -66,24 +65,25 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quickwit_spark.operators.leaf import (
+    HITS_SCHEMA,
     LeafRequest,
     SnapshotFiles,
     evaluate_leaf,
     fetch_rows,
+    rows_to_response,
+    hit_page,
+    merge_hits,
+    response_to_rows,
     search_in_process,
 )
 from quickwit_spark.plans.metastore import open_metastore
 from quickwit_spark.plans.parser import parse_query, query_terms, resolve_query
 from quickwit_spark.plans.pruning import prune_splits, split_fully_inside
 
-HITS_SCHEMA = (
-    "split_id int, doc_id long, score double, sort_long long, "
-    "split_num_hits long"
-)
 _PAGE_SCHEMA = "split_id int, doc_id long, score double, sort_long long"
 
 
@@ -241,37 +241,26 @@ def filter_split_ids(df: DataFrame, split_ids) -> DataFrame:
 
 
 def _make_evaluator(lreq: LeafRequest):
-    """Closure run per split by applyInPandas (numpy inside)."""
+    """Closure run per split by applyInPandas: the split's leaf
+    response as ``HITS_SCHEMA`` rows."""
 
     def evaluate(key, postings_pdf: pd.DataFrame, ff_pdf: pd.DataFrame) -> pd.DataFrame:
         sid = int(key[0])
-        out = evaluate_leaf(lreq, sid, postings_pdf, ff_pdf)
-        if out is None:
-            return pd.DataFrame(
-                columns=[
-                    "split_id", "doc_id", "score", "sort_long",
-                    "split_num_hits",
-                ]
-            )
-        docs, vals, num_hits = out
-        # integer sort values (fast-field / ts / norm sorts) also ride
-        # in an EXACT int64 column — `score` is float64, which rounds
-        # |v| > 2^53 (a 64-bit id would corrupt there)
-        if np.issubdtype(vals.dtype, np.integer):
-            sort_long = pd.Series(vals.astype(np.int64), dtype="Int64")
-        else:
-            sort_long = pd.Series([pd.NA] * docs.size, dtype="Int64")
-        return pd.DataFrame(
-            {
-                "split_id": np.full(docs.size, sid, dtype=np.int32),
-                "doc_id": docs.astype(np.int64),
-                "score": vals.astype(np.float64),
-                "sort_long": sort_long,
-                "split_num_hits": np.full(docs.size, num_hits, dtype=np.int64),
-            }
-        )
+        docs, vals, num_hits = evaluate_leaf(lreq, sid, postings_pdf, ff_pdf)
+        return response_to_rows(lreq, (np.full(docs.size, sid), docs, vals, num_hits))
 
     return evaluate
+
+
+def _make_fold(lreq: LeafRequest):
+    """Closure run per partition by mapInPandas: the partition's leaf
+    responses merged into one."""
+
+    def fold(frames):
+        merged = merge_hits(lreq, (rows_to_response(lreq, f) for f in frames))
+        yield response_to_rows(lreq, merged)
+
+    return fold
 
 
 def _plan(
@@ -280,9 +269,12 @@ def _plan(
     emit_all: bool,
     count_exact: bool,
     tables: dict,
+    after: tuple | None = None,
 ) -> LeafRequest | None:
     """Driver-side planning shared by both leaf executions: parse,
-    prune, resolve the sort field. None when every split is pruned."""
+    prune, resolve the sort field. None when every split is pruned.
+    With a keyset cursor ``after`` the offset is ignored: the cursor
+    IS the offset."""
     ast = resolve_query(parse_query(req.query), config, req.search_fields)
     start_micros = _to_micros(req.start_ts)
     end_micros = _to_micros(req.end_ts)
@@ -324,7 +316,7 @@ def _plan(
     return LeafRequest(
         ast=ast,
         infos=_split_infos(splits, config, start_micros, end_micros),
-        k=req.k + req.offset,
+        k=req.k if after is not None else req.k + req.offset,
         start_micros=start_micros,
         end_micros=end_micros,
         ts_name=config.timestamp_field,
@@ -335,6 +327,7 @@ def _plan(
         fields=tuple(fields),
         terms=tuple(sorted({t.term for t in terms})),
         ff_names=tuple(ff_names),
+        after=after,
     )
 
 
@@ -357,17 +350,19 @@ def _cogroup(tables: dict, lreq: LeafRequest) -> DataFrame:
     )
 
 
-def _evaluate(
+def _top_k(
     spark: SparkSession,
     index_dir: str,
     req: SearchRequest,
-    emit_all: bool,
-    count_exact: bool = True,
     tables: dict | None = None,
-) -> tuple[DataFrame | None, object, Metastore]:
-    """Shared plan: prune → scan → per-split evaluate on the cogroup
-    path. Returns the per-split hits DataFrame (None when all splits
-    pruned).
+    after: tuple | None = None,
+    count_exact: bool = True,
+) -> tuple:
+    """The top-k core of every entry point → the page as a leaf
+    response ``(split_ids, doc_ids, vals, num_hits)``: vals int64 sort
+    values when ``req.sort_field`` is set, else BM25 scores; num_hits
+    meaningless when not ``count_exact``, which lets the kernel use
+    block-max WAND.
 
     ``tables`` lets a caller that ALSO fetches docs pass one
     ``Searcher.snapshot()`` spanning the whole request, so the
@@ -377,34 +372,28 @@ def _evaluate(
     # listings resolved under a single metastore state token
     if tables is None:
         tables = searcher.snapshot()
-    lreq = _plan(searcher.ms.config(), req, emit_all, count_exact, tables)
-    if lreq is None:
-        return None, None, searcher.ms
-    return _cogroup(tables, lreq), lreq.ast, searcher.ms
-
-
-def _total_hits(hits: DataFrame) -> int:
-    """Exact num_hits: the per-split counts every evaluated split
-    stamps on its rows, summed (collector.rs:189 semantics)."""
-    row = (
-        hits.groupBy("split_id")
-        .agg(F.max("split_num_hits").alias("h"))
-        .agg(F.sum("h").alias("total"))
-        .collect()[0]
+    lreq = _plan(
+        searcher.ms.config(), req, emit_all=False, count_exact=count_exact,
+        tables=tables, after=after,
     )
-    return int(row["total"] or 0)
-
-
-def _rank_order(req: SearchRequest) -> list:
-    """Global rank: score desc, or the exact int64 fast-field value in
-    the request's direction; ties on (split_id, doc_id) ascending."""
-    if req.sort_field is None:
-        primary = F.col("score").desc()
-    elif req.sort_asc:
-        primary = F.col("sort_long").asc()
+    if lreq is None:
+        return np.empty(0, np.int32), np.empty(0, np.int64), np.empty(0), 0
+    if _runs_in_process(lreq):
+        sids, docs, vals, total = search_in_process(tables["files"], lreq)
     else:
-        primary = F.col("sort_long").desc()
-    return [primary, F.col("split_id").asc(), F.col("doc_id").asc()]
+        rows = (
+            _cogroup(tables, lreq)
+            .mapInPandas(_make_fold(lreq), HITS_SCHEMA)
+            .toPandas()
+        )
+        sids, docs, vals, total = merge_hits(lreq, [rows_to_response(lreq, rows)])
+    skip = req.offset if after is None else 0
+    return sids[skip:], docs[skip:], vals[skip:], total
+
+
+def _page(req: SearchRequest, hits) -> pd.DataFrame:
+    """A ``_top_k`` page as ``_PAGE_SCHEMA`` rows."""
+    return hit_page(*hits[:3], exact=req.sort_field is not None)
 
 
 def search_df(
@@ -413,28 +402,11 @@ def search_df(
     req: SearchRequest,
     tables: dict | None = None,
 ) -> DataFrame:
-    """Top-k hits as (split_id, doc_id, score), globally ordered with
-    pagination applied."""
-    # top-k only: the evaluator may use block-max WAND (no exact count)
-    hits, _, _ = _evaluate(
-        spark, index_dir, req, emit_all=False, count_exact=False,
-        tables=tables,
-    )
-    if hits is None:
-        return spark.createDataFrame([], _PAGE_SCHEMA)
-    order = _rank_order(req)
-    limited = (
-        hits.select("split_id", "doc_id", "score", "sort_long")
-        .orderBy(*order)
-        .limit(req.k + req.offset)
-    )
-    if req.offset:
-        limited = (
-            limited.withColumn("_rn", F.row_number().over(Window.orderBy(*order)))
-            .filter(F.col("_rn") > req.offset)
-            .drop("_rn")
-        )
-    return limited
+    """Top-k hits as (split_id, doc_id, score, sort_long), in rank
+    order with pagination applied — computed now, wrapped in a
+    DataFrame."""
+    hits = _top_k(spark, index_dir, req, tables, count_exact=False)
+    return spark.createDataFrame(_page(req, hits), _PAGE_SCHEMA)
 
 
 def search_after_df(
@@ -445,7 +417,8 @@ def search_after_df(
     tables: dict | None = None,
 ) -> DataFrame:
     """ES-style ``search_after`` keyset pagination: the next ``req.k``
-    hits strictly AFTER ``cursor`` in global rank order.
+    hits strictly AFTER ``cursor`` in global rank order, computed now
+    and wrapped in a DataFrame.
 
     ``cursor`` is ``(value, split_id, doc_id)`` — the last hit of the
     previous page in the request's sort mode: the raw float64 BM25
@@ -455,39 +428,15 @@ def search_after_df(
 
     Versus offset pagination (re-fetch offset+k rows, fold offset at
     the merge): the cursor filter applies per split BEFORE the global
-    merge, so page depth adds nothing to the exchange — but the
-    evaluation takes the exact all-matches path, because a cursor can
-    sit at any rank and block-max top-k pruning could drop
-    post-cursor docs (the same trade ES makes for scored
+    merge, so each split sends at most ``req.k`` rows whatever the
+    page depth — but the evaluation takes the exact all-matches path,
+    because a cursor can sit at any rank and block-max top-k pruning
+    could drop post-cursor docs (the same trade ES makes for scored
     search_after). ``req.offset`` is ignored — the cursor IS the
     offset.
     """
-    hits, _, _ = _evaluate(
-        spark, index_dir, req, emit_all=True, tables=tables
-    )
-    if hits is None:
-        return spark.createDataFrame([], _PAGE_SCHEMA)
-    return _after_page(hits, req, cursor)
-
-
-def _after_page(hits: DataFrame, req: SearchRequest, cursor: tuple) -> DataFrame:
-    v, sp, d = cursor
-    sort_col = (
-        F.col("sort_long") if req.sort_field is not None else F.col("score")
-    )
-    lit_v = F.lit(v)
-    asc = req.sort_asc and req.sort_field is not None
-    primary_after = (sort_col > lit_v) if asc else (sort_col < lit_v)
-    tie = (sort_col == lit_v) & (
-        (F.col("split_id") > F.lit(sp))
-        | ((F.col("split_id") == F.lit(sp)) & (F.col("doc_id") > F.lit(d)))
-    )
-    return (
-        hits.select("split_id", "doc_id", "score", "sort_long")
-        .filter(primary_after | tie)
-        .orderBy(*_rank_order(req))
-        .limit(req.k)
-    )
+    hits = _top_k(spark, index_dir, req, tables, after=cursor)
+    return spark.createDataFrame(_page(req, hits), _PAGE_SCHEMA)
 
 
 def highlight_terms(
@@ -563,15 +512,13 @@ def with_highlight(
 
 
 def count_hits(spark: SparkSession, index_dir: str, req: SearchRequest) -> int:
-    """Exact num_hits (collector.rs:189 semantics)."""
-    hits, _, _ = _evaluate(
-        spark, index_dir, SearchRequest(**{**vars(req), "k": 1}), emit_all=False
-    )
-    return 0 if hits is None else _total_hits(hits)
+    """Exact num_hits (collector.rs:189 semantics): a k=0 request."""
+    req = SearchRequest(**{**vars(req), "k": 0, "offset": 0})
+    return _top_k(spark, index_dir, req)[3]
 
 
-#: ``search_with_count`` evaluates in the driver when the splits kept
-#: by pruning hold at most this many docs in all, and number at most
+#: A top-k request evaluates in the driver when the splits kept by
+#: pruning hold at most this many docs in all, and number at most
 #: ``LEAF_MAX_SPLITS``; on the Spark cogroup path otherwise. Both are
 #: the largest sizes measured (module docstring), not a crossover.
 LEAF_MAX_DOCS = 200_000
@@ -599,48 +546,14 @@ def search_with_count(
 
     The page is ``req.offset`` … ``req.offset + req.k`` in rank order,
     or with ``after`` (a ``search_after_df`` cursor) the next ``req.k``
-    hits after it. A keyset page needs the all-matches evaluation, and
-    the total rides on that same pass: every split stamps its count on
-    its rows. Each row is the hit's docmap row plus its split_id,
-    doc_id, score and sort_long (``leaf.fetch_rows``), read from the same
-    snapshot: the reference's root search fetches the page's docs too.
-
-    A top-k page whose pruned splits are within ``LEAF_MAX_DOCS`` /
-    ``LEAF_MAX_SPLITS`` runs in the driver: no Spark job. Everything
-    else runs the cogroup, persisted so the page collect and the count
-    agg don't evaluate twice."""
-    wanted = req.k + req.offset
-    searcher = get_searcher(spark, index_dir)
+    hits after it. Each row is the hit's docmap row plus its split_id,
+    doc_id, score and sort_long (``leaf.fetch_rows``), read from the
+    same snapshot: the reference's root search fetches the page's docs
+    too."""
     if tables is None:
-        tables = searcher.snapshot()
-    # evaluate with k ≥ 1 so every matching split emits ≥1 row — the
-    # per-split num_hits rides on hit rows (k=0 would drop the count)
-    eval_req = SearchRequest(**{**vars(req), "k": max(wanted, 1), "offset": 0})
-    lreq = _plan(
-        searcher.ms.config(), eval_req, emit_all=after is not None,
-        count_exact=True, tables=tables,
-    )
-    if lreq is None:
-        return [], 0
-    if after is None and _runs_in_process(lreq):
-        rows, total = search_in_process(tables["files"], lreq, wanted)
-        rows = rows[req.offset:]
-    else:
-        hits = _cogroup(tables, lreq).persist()
-        try:
-            if after is not None:
-                rows = _after_page(hits, req, after).collect()
-            else:
-                rows = (
-                    hits.select("split_id", "doc_id", "score", "sort_long")
-                    .orderBy(*_rank_order(req))
-                    .limit(wanted)
-                    .collect()
-                )[req.offset:]
-            total = _total_hits(hits)
-        finally:
-            hits.unpersist()
-    return fetch_rows(tables["files"], rows), total
+        tables = get_searcher(spark, index_dir).snapshot()
+    hits = _top_k(spark, index_dir, req, tables, after=after)
+    return fetch_rows(tables["files"], hits, req.sort_field is not None), hits[3]
 
 
 def matches_df(
@@ -651,10 +564,15 @@ def matches_df(
 ) -> DataFrame:
     """ALL matching docs (split_id, doc_id, score) — the
     search_stream / aggregation input (no top-k)."""
-    hits, _, _ = _evaluate(spark, index_dir, req, emit_all=True, tables=tables)
-    if hits is None:
+    searcher = get_searcher(spark, index_dir)
+    if tables is None:
+        tables = searcher.snapshot()
+    lreq = _plan(
+        searcher.ms.config(), req, emit_all=True, count_exact=True, tables=tables
+    )
+    if lreq is None:
         return spark.createDataFrame([], "split_id int, doc_id long, score double")
-    return hits.select("split_id", "doc_id", "score")
+    return _cogroup(tables, lreq).select("split_id", "doc_id", "score")
 
 
 def fetch_docs(
@@ -704,7 +622,12 @@ def search(
     came from another field)."""
     req = SearchRequest(query=query, k=k, **kwargs)
     snap = get_searcher(spark, index_dir).snapshot()
-    hits = search_df(spark, index_dir, req, tables=snap)
+    page = _page(req, _top_k(spark, index_dir, req, snap, count_exact=False))
+    # the page's rank rides along the join: the join keeps no order
+    hits = spark.createDataFrame(
+        page.assign(_rank=np.arange(len(page), dtype=np.int32)),
+        _PAGE_SCHEMA + ", _rank int",
+    )
     out = fetch_docs(spark, index_dir, hits, docmap=snap["docmap"])
     if highlight:
         config = open_metastore(index_dir).config()
@@ -726,7 +649,4 @@ def search(
             highlight_terms(config, query, req.search_fields, field=fld),
             text_col="__hl_text",
         ).drop("__hl_text")
-    # rank on the exact int64 fast-field lane when sorting by a fast
-    # field — the float64 `score` copy loses precision above 2^53 and
-    # could disagree with the engine ranking search_df just computed
-    return out.orderBy(*_rank_order(req))
+    return out.orderBy("_rank").drop("_rank")

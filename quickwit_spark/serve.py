@@ -134,7 +134,10 @@ def parse_search_params(params: dict) -> dict:
                 sa = json.loads(sa)
             except json.JSONDecodeError as e:
                 raise BadRequest(f"invalid searchAfter JSON: {e}") from e
-        if not (isinstance(sa, (list, tuple)) and len(sa) == 3):
+        if not (
+            isinstance(sa, (list, tuple)) and len(sa) == 3
+            and type(sa[0]) in (int, float) and {type(x) for x in sa[1:]} == {int}
+        ):
             raise BadRequest(
                 "searchAfter must be [sort_value, split_id, doc_id] — "
                 "the `sort` of the previous page's last hit"

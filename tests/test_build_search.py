@@ -551,15 +551,22 @@ def test_bin_from_slices_rejects_i32_offset_overflow():
         )
 
 
-def test_search_after_walk_equals_full_ranking(spark, built_index):
+@pytest.mark.parametrize("route", ["in_process", "cogroup"])
+def test_search_after_walk_equals_full_ranking(
+    spark, built_index, monkeypatch, route
+):
     """Keyset pagination: walking pages with search_after reproduces
     the one-shot ranking exactly, on both the BM25-score path and the
-    exact-int fast-field path."""
+    exact-int fast-field path, on each leaf route."""
+    from quickwit_spark.operators import search as search_mod
     from quickwit_spark.operators.search import (
         SearchRequest,
         search_after_df,
         search_df,
     )
+
+    if route == "cogroup":
+        monkeypatch.setattr(search_mod, "LEAF_MAX_SPLITS", 0)
 
     for sort_field in (None, "warc_ts"):
         req_all = SearchRequest(query="word", k=10000, sort_field=sort_field)
@@ -587,6 +594,65 @@ def test_search_after_walk_equals_full_ranking(spark, built_index):
         got = [(r["split_id"], r["doc_id"], r[key]) for r in walked]
         want = [(r["split_id"], r["doc_id"], r[key]) for r in full]
         assert got == want, sort_field
+
+
+@pytest.fixture(scope="module")
+def null_sort_index(spark, corpus_rows, tmp_path_factory):
+    """2 splits over 90 docs whose integer fast field ``n_links`` is
+    NULL on every 4th doc and 1..9 (with ties) elsewhere."""
+    import pandas as pd
+
+    from quickwit_spark.operators.build import build_index
+    from quickwit_spark.plans.config import webpages_config
+
+    rows = [dict(r) for r in corpus_rows[:90]]
+    for i, r in enumerate(rows):
+        r["n_links"] = None if i % 4 == 0 else 1 + i % 9
+    index_dir = str(tmp_path_factory.mktemp("nullsort") / "idx")
+    config = webpages_config(fast_fields=("warc_ts", "lang", "n_links"))
+    df = spark.createDataFrame(pd.DataFrame(rows).astype({"n_links": "Int64"}))
+    build_index(spark, df, index_dir, config, num_splits=2)
+    return index_dir, rows, config
+
+
+@pytest.mark.parametrize("route", ["in_process", "cogroup"])
+def test_search_after_walk_reaches_null_sort_values(
+    spark, null_sort_index, monkeypatch, route
+):
+    """A doc with no value in the sort fast field packs as 0 (tantivy's
+    default value), so a keyset walk by that field reaches it: pages of
+    3 equal the one-shot ranking, NULL docs included, both ways."""
+    from quickwit_spark.operators import search as search_mod
+    from quickwit_spark.operators.search import (
+        SearchRequest,
+        search_after_df,
+        search_df,
+    )
+    from quickwit_spark.oracle import OracleIndex
+
+    if route == "cogroup":
+        monkeypatch.setattr(search_mod, "LEAF_MAX_SPLITS", 0)
+    index_dir, rows, config = null_sort_index
+    oracle = OracleIndex(rows, config, num_splits=2)
+    null_keys = {r["url"] for r in rows if r["n_links"] is None}
+    matches = oracle.search("the", k=1 << 30)
+    n_null = sum(oracle.doc_key(s, d) in null_keys for s, d, _ in matches)
+    assert 0 < n_null < len(matches)
+    for asc in (False, True):
+        req = SearchRequest(query="the", k=3, sort_field="n_links", sort_asc=asc)
+        full = search_df(
+            spark, index_dir, SearchRequest(**{**vars(req), "k": 10_000})
+        ).collect()
+        walked = page = search_df(spark, index_dir, req).collect()
+        while page:
+            last = page[-1]
+            cursor = (last["sort_long"], last["split_id"], last["doc_id"])
+            page = search_after_df(spark, index_dir, req, cursor).collect()
+            walked = walked + page
+            assert len(walked) <= len(full)
+        assert walked == full, asc
+        assert len(full) == len(matches)
+        assert sum(r["sort_long"] == 0 for r in full) == n_null, asc
 
 
 def test_search_highlight_fragments(spark, corpus_rows, tmp_path_factory):

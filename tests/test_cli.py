@@ -71,6 +71,8 @@ def test_cli_lifecycle(spark, cli_env, capsys):
     r = _run(capsys, "search", "--index", idx, "--query", "hot word", "-k", "5")
     assert r["num_hits"] > 0
     assert all("score" in h for h in r["hits"])
+    ranked = [(-h["score"], h["split_id"], h["doc_id"]) for h in r["hits"]]
+    assert ranked == sorted(ranked)  # printed in rank order
 
     r = _run(capsys, "describe", "--index", idx, "--demux-field", "lang")
     assert r["num_docs"] == 200

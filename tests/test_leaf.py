@@ -1,7 +1,8 @@
 """The in-process leaf (operators/leaf.py) against the Spark cogroup
-path and the oracle: byte-identical REST bodies, routing, zero Spark
-jobs on small fan-out, snapshot safety of its direct file reads, and
-the split hotcache's invalidation, byte cap and cold-start races."""
+path and the oracle: byte-identical REST bodies (``searchAfter`` pages
+included), routing of every top-k entry point, zero Spark jobs on
+small fan-out, snapshot safety of its direct file reads, and the split
+hotcache's invalidation, byte cap and cold-start races."""
 
 from __future__ import annotations
 
@@ -102,16 +103,42 @@ def _parity_cases(corpus_rows) -> dict[str, dict]:
     return cases
 
 
+def _after_cases(spark, index_dir, corpus_rows) -> dict[str, dict]:
+    """searchAfter cases, each cursor the last hit of a first page."""
+    def cursor(params, n):
+        page = serve_mod.search_endpoint(spark, index_dir, {**params, "maxHits": n})
+        return json.dumps(page["hits"][n - 1]["sort"])
+
+    by_score = {"query": "word"}
+    by_ts = {"query": "word", "sortByField": "-warc_ts"}
+    # newest first, the later batch split's matches all rank first: a
+    # cursor on its last match lies past every match of that split
+    full = serve_mod.search_endpoint(spark, index_dir, {**by_ts, "maxHits": 10_000})
+    batch_keys = set(_later_batch(corpus_rows)["url"])
+    n_batch = sum(h["key"] in batch_keys for h in full["hits"])
+    assert 0 < n_batch < len(full["hits"]) == full["num_hits"]
+    return {
+        "after_score": {**by_score, "maxHits": 10, "searchAfter": cursor(by_score, 4)},
+        "after_ts": {**by_ts, "maxHits": 10, "searchAfter": cursor(by_ts, 4)},
+        "after_split": {**by_ts, "maxHits": 10, "searchAfter": cursor(by_ts, n_batch)},
+        "after_max_hits_0": {
+            **by_score, "maxHits": 0, "searchAfter": cursor(by_score, 4),
+        },
+    }
+
+
 def _spark_fetch(spark, index_dir):
     """The Spark fetch the REST handler used before the in-process one:
     broadcast join of the hit keys to the docmap, collect, re-sort."""
-    def fetch(files, rows):
+    def fetch(files, hits, exact):
+        page = leaf_mod.hit_page(*hits[:3], exact=exact)
         hits = spark.createDataFrame(
-            rows, "split_id int, doc_id long, score double, sort_long long"
+            page, "split_id int, doc_id long, score double, sort_long long"
         )
         snap = get_searcher(spark, index_dir).snapshot()
         docs = fetch_docs(spark, index_dir, hits, docmap=snap["docmap"]).collect()
-        rank = {(r["split_id"], r["doc_id"]): i for i, r in enumerate(rows)}
+        keys = zip(page["split_id"].tolist(), page["doc_id"].tolist())
+        rank = {key: i for i, key in enumerate(keys)}
         docs.sort(key=lambda r: rank[(r["split_id"], r["doc_id"])])
         return [r.asDict() for r in docs]
 
@@ -138,10 +165,13 @@ def _jobs_of(spark, fn):
 def test_rest_body_identical_on_both_paths(
     spark, corpus_rows, two_window_index, monkeypatch
 ):
-    cases = _parity_cases(corpus_rows)
     # a snapshot refresh infers the table schemas with Spark jobs; the
     # requests below run on the warm snapshot
     get_searcher(spark, two_window_index).snapshot()
+    cases = {
+        **_parity_cases(corpus_rows),
+        **_after_cases(spark, two_window_index, corpus_rows),
+    }
     leaf = {}
     for name, p in cases.items():
         leaf_mod.HOTCACHE.clear()  # cold: every file read from parquet
@@ -168,6 +198,21 @@ def test_rest_body_identical_on_both_paths(
         assert ts == sorted(ts, reverse=True), name
     ts = [h["warc_ts"] for h in got["sort_asc"]["hits"]]
     assert ts == sorted(ts)
+    # a keyset page is the offset page at the cursor's depth
+    for name, params in (
+        ("after_score", {"query": "word"}),
+        ("after_ts", {"query": "word", "sortByField": "-warc_ts"}),
+    ):
+        at_offset = json.loads(_body(
+            spark, two_window_index, {**params, "maxHits": 10, "startOffset": 4}
+        ))
+        assert got[name] == at_offset, name
+    # the split whose matches all sit before the cursor still counts
+    word = got["offset"]["num_hits"]
+    assert got["after_split"]["num_hits"] == word
+    assert len(got["after_split"]["hits"]) == 10
+    assert not {h["key"] for h in got["after_split"]["hits"]} & batch_keys
+    assert got["after_max_hits_0"] == {"num_hits": word, "hits": [], "errors": []}
     assert all(
         not k.startswith(("len_", "norm_")) for h in got["q_term"]["hits"] for k in h
     )
@@ -211,9 +256,26 @@ def test_small_fanout_runs_no_spark_job_and_wider_requests_do(
 
     first, _ = call({"query": "word", "maxHits": 4})
     cursor = json.dumps(first["hits"][-1]["sort"])
-    resp, jobs = call({"query": "word", "maxHits": 4, "searchAfter": cursor})
-    assert jobs  # searchAfter pages take the cogroup path
+    after = {"query": "word", "maxHits": 4, "searchAfter": cursor}
+    resp, jobs = call(after)
+    assert jobs == []  # a searchAfter page takes the routing too
     ok(resp, "word", 4, offset=4)
+
+    req = search_mod.SearchRequest(query="word hot", k=5, offset=2)
+    want = [(s, d) for s, d, _ in oracle_index.search("word hot", k=5, offset=2)]
+
+    def other_entry_points():
+        count, count_jobs = _jobs_of(
+            spark, lambda: search_mod.count_hits(spark, built_index, req)
+        )
+        assert count == oracle_index.count("word hot")
+        rows, df_jobs = _jobs_of(
+            spark, lambda: search_mod.search_df(spark, built_index, req).collect()
+        )
+        assert [(r["split_id"], r["doc_id"]) for r in rows] == want
+        return count_jobs, df_jobs
+
+    assert other_entry_points() == ([], [])
 
     # routing: a page over more pruned docs, or more pruned splits,
     # than the in-process limits takes the cogroup path
@@ -222,8 +284,12 @@ def test_small_fanout_runs_no_spark_job_and_wider_requests_do(
         with monkeypatch.context() as m:
             m.setattr(search_mod, limit, value)  # the index has 3 splits
             resp, jobs = call({"query": "word hot", "maxHits": 5, "startOffset": 2})
-        assert jobs, limit
-        ok(resp, "word hot", 5, offset=2)
+            assert jobs, limit
+            ok(resp, "word hot", 5, offset=2)
+            resp, jobs = call(after)
+            assert jobs, limit
+            ok(resp, "word", 4, offset=4)
+            assert all(other_entry_points()), limit
     resp, jobs = call({"query": "word hot", "maxHits": 5, "startOffset": 2})
     assert jobs == []
     ok(resp, "word hot", 5, offset=2)

@@ -111,6 +111,11 @@ def test_robots_directives_union_semantics(spark):
         ("u7", '<meta name="robots" content="None">'),  # none = both
         ("u8", '<meta content="index, none" name="robots">'),
         ("u9", '<meta name="robots" content="nonesuch">'),  # not the token
+        # single-quoted and unquoted attributes
+        ("u10", "<meta name='robots' content='NOINDEX'>"),
+        ("u11", "<meta content=nofollow name=robots>"),
+        ("u12", "<meta name=robots content=noindex,nofollow/>"),
+        ("u13", "<meta name=robotsx content=noindex>"),  # another name
     ]
     df = spark.createDataFrame(rows, "url string, html string")
     out = {r["url"]: r for r in robots_directives(df).collect()}
@@ -127,4 +132,8 @@ def test_robots_directives_union_semantics(spark):
     assert flags("u7") == (1, 1, 1)
     assert flags("u8") == (1, 1, 1)
     assert flags("u9") == (0, 0, 1)
+    assert flags("u10") == (1, 0, 1)
+    assert flags("u11") == (0, 1, 1)
+    assert flags("u12") == (1, 1, 1)
+    assert flags("u13") == (0, 0, 0)
     _no_python_eval(robots_directives(df))

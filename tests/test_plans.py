@@ -9,8 +9,25 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from quickwit_spark.operators.search import SearchRequest, _evaluate
+from quickwit_spark.operators.search import (
+    SearchRequest,
+    _cogroup,
+    _plan,
+    get_searcher,
+)
 from quickwit_spark.plans.metastore import Metastore
+
+
+def _search_plan(spark, built_index, req):
+    """The cogroup top-k leaf of ``req`` over one snapshot, or None
+    when every split is pruned."""
+    searcher = get_searcher(spark, built_index)
+    snap = searcher.snapshot()
+    lreq = _plan(
+        searcher.ms.config(), req, emit_all=False, count_exact=False,
+        tables=snap,
+    )
+    return None if lreq is None else _cogroup(snap, lreq)
 
 
 def _postings_scan_plan(spark, built_index, query="word"):
@@ -41,9 +58,7 @@ def test_scan_prunes_columns(spark, built_index):
 
 
 def test_search_plan_reads_only_query_terms(spark, built_index):
-    hits, _, _ = _evaluate(
-        spark, built_index, SearchRequest(query="word"), emit_all=False
-    )
+    hits = _search_plan(spark, built_index, SearchRequest(query="word"))
     plan = hits._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     pushed = plan.split("PushedFilters", 1)[1][:300]
@@ -75,13 +90,12 @@ def test_unbounded_fetch_never_broadcasts(spark, built_index):
 
 def test_time_pruning_skips_splits(spark, built_index):
     # a window before the corpus epoch matches nothing → no scan at all
-    hits, _, _ = _evaluate(
+    hits = _search_plan(
         spark,
         built_index,
         SearchRequest(
             query="word", start_ts="1999-01-01", end_ts="1999-02-01"
         ),
-        emit_all=False,
     )
     assert hits is None  # every split pruned by time_range metadata
 
@@ -138,8 +152,6 @@ def test_split_id_filter_scales_past_literal_inlists(spark, built_index):
     assert "LeftSemi" in plan_frag
 
     # the real search path still pushes term predicates after the change
-    hits, _, _ = _evaluate(
-        spark, built_index, SearchRequest(query="word"), emit_all=False
-    )
+    hits = _search_plan(spark, built_index, SearchRequest(query="word"))
     plan_search = hits._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan_search

@@ -92,58 +92,52 @@ def gen_cases(seed: int, n: int) -> list[tuple[str, int, int]]:
     return out
 
 
-def test_query_grammar_property_parity(spark, built_index, oracle_index):
+@pytest.mark.parametrize("route", ["in_process", "cogroup"])
+def test_query_grammar_property_parity(
+    spark, built_index, oracle_index, monkeypatch, route
+):
+    """The grammar stream through every top-k entry point — search_df,
+    search_with_count (the REST core) and count_hits — on each leaf
+    route: rank identity, bit-identical f32 scores and the exact count
+    on EVERY case. ``LEAF_MAX_SPLITS`` = 0 forces the Spark cogroup;
+    built_index's 3 splits and 401 docs otherwise run in process."""
+    if route == "cogroup":
+        monkeypatch.setattr(search_mod, "LEAF_MAX_SPLITS", 0)
+    else:
+        assert search_mod.LEAF_MAX_SPLITS >= 3
+        assert search_mod.LEAF_MAX_DOCS >= 10_000
+    sc = spark.sparkContext
     cases = gen_cases(SEED, N_CASES)
     non_empty = 0
     for i, (q, k, offset) in enumerate(cases):
+        ctx = f"{route} case {i} seed {SEED}: {q!r} k={k} offset={offset}"
         want = oracle_index.search(q, k=k, offset=offset)
-        rows = search_df(
-            spark, built_index, SearchRequest(query=q, k=k, offset=offset)
-        ).collect()
-        got = [(r["split_id"], r["doc_id"], r["score"]) for r in rows]
-        ctx = f"case {i} seed {SEED}: {q!r} k={k} offset={offset}"
-        assert [(g[0], g[1]) for g in got] == [
-            (w[0], w[1]) for w in want
-        ], ctx
-        np.testing.assert_array_equal(
-            np.array([g[2] for g in got], dtype=np.float32),
-            np.array([w[2] for w in want], dtype=np.float32),
-            err_msg=ctx,
-        )
+        req = SearchRequest(query=q, k=k, offset=offset)
+        df_rows = search_df(spark, built_index, req).collect()
+        group = f"property-{route}-{i}"
+        sc.setJobGroup(group, "grammar property")
+        try:
+            rows, total = search_with_count(spark, built_index, req)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        assert bool(jobs) == (route == "cogroup"), ctx
+        for got in (df_rows, rows):
+            assert [(r["split_id"], r["doc_id"]) for r in got] == [
+                (w[0], w[1]) for w in want
+            ], ctx
+            np.testing.assert_array_equal(
+                np.array([r["score"] for r in got], dtype=np.float32),
+                np.array([w[2] for w in want], dtype=np.float32),
+                err_msg=ctx,
+            )
+        count = oracle_index.count(q)
+        assert total == count, ctx
+        assert count_hits(spark, built_index, req) == count, ctx
         if want:
             non_empty += 1
-        if i % 10 == 0:
-            assert count_hits(
-                spark, built_index, SearchRequest(query=q)
-            ) == oracle_index.count(q), ctx
     # the generator must not degenerate into all-miss queries
     assert non_empty >= N_CASES // 2, f"only {non_empty} non-empty cases"
-
-
-def test_query_grammar_property_in_process_leaf(spark, built_index, oracle_index):
-    """The same grammar stream through the in-process leaf (the REST
-    top-k path for small fan-out): rank identity, bit-identical f32
-    scores and the exact count on EVERY case — no Spark job runs, so
-    checking all counts is cheap."""
-    # built_index: 3 splits, far fewer than LEAF_MAX_DOCS docs
-    assert search_mod.LEAF_MAX_SPLITS >= 3
-    assert search_mod.LEAF_MAX_DOCS >= 10_000
-    cases = gen_cases(SEED, N_CASES)
-    for i, (q, k, offset) in enumerate(cases):
-        want = oracle_index.search(q, k=k, offset=offset)
-        rows, total = search_with_count(
-            spark, built_index, SearchRequest(query=q, k=k, offset=offset)
-        )
-        ctx = f"case {i} seed {SEED}: {q!r} k={k} offset={offset}"
-        assert [(r["split_id"], r["doc_id"]) for r in rows] == [
-            (w[0], w[1]) for w in want
-        ], ctx
-        np.testing.assert_array_equal(
-            np.array([r["score"] for r in rows], dtype=np.float32),
-            np.array([w[2] for w in want], dtype=np.float32),
-            err_msg=ctx,
-        )
-        assert total == oracle_index.count(q), ctx
 
 
 def test_generator_covers_grammar():

@@ -357,8 +357,9 @@ def test_search_after_rest_walk(server):
     assert p1["hits"][-1]["sort"][0] >= p2["hits"][0]["sort"][0]
     assert p2["num_hits"] == p1["num_hits"]
     # malformed cursor -> 400
-    st, err = _get(port, base + "&searchAfter=%5B1%5D")
-    assert st == 400
+    for bad in ([1], ["a", 0, 1], [1.5, "0", 1], [1.5, 0, 1.0], [True, 0, 1]):
+        st, err = _get(port, base + "&searchAfter=" + q(json.dumps(bad)))
+        assert st == 400, bad
 
 
 def test_rest_new_agg_kinds_passthrough(server):
