@@ -7,16 +7,27 @@ range buckets + nested avg in quickwit-cli/tests/cli.rs:217-305).
 tantivy 0.17 supports: bucket aggs ``range`` and ``histogram``,
 metric aggs ``avg`` and ``stats`` (+ min/max/sum/value_count as
 stats components). Same surface here plus the ``terms`` bucket agg
-(the JSON DSL's next addition upstream), executed Spark-first:
+(the JSON DSL's next addition upstream), executed Spark-first in ONE
+pass per request, with or without a bucket spec (``run_aggregations``:
+plan → pass → assembly):
 
     matching docs (operators/search.matches_df — no top-k)
       ⋈ docmap fast-field columns (shuffle join — the match set is
         unbounded, never broadcast; fetch_docs bounded=False)
-      → groupBy(bucket expr: when-chains / floor(col/interval))
-      → agg(count, avg, min, max, sum)
+      → groupingSets(one set per bucket expr: when-chains /
+        floor(col/interval) / the terms value; + the empty set for
+        the all-docs row)
+      → agg(count, every metric cell) → one collect
 
 — i.e. the partial-per-segment + merge structure of the reference IS
-Spark's partial/final hash aggregation; nothing custom is needed.
+Spark's partial/final hash aggregation; nothing custom is needed. The
+response is then assembled once from those rows, as the reference
+finalizes once at the root (root.rs:244-255). Absent-row rule: a group
+with no row — zero matches, an empty ``range`` bucket, a gap-filled
+``histogram``/``date_histogram`` bucket, a ``filters`` bucket on zero
+matches — reads as all-null cells with counts 0 and is shaped by the
+same ``_metric_result``, so it answers every metric exactly as that
+metric alone answers a query matching nothing.
 
 search_stream (search_stream/leaf.rs:119-255): export ONE fast-field
 value of EVERY matching doc, optionally grouped by a partition
@@ -28,10 +39,14 @@ ES response shape: ``{"name": {"buckets": [{"key": …, "doc_count":
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from quickwit_spark.operators.search import (
     SearchRequest,
@@ -128,10 +143,13 @@ def _metric_cols(name: str, spec: dict, col=None) -> list:
 
 
 def _metric_result(name: str, spec: dict, row) -> object:
+    """The response JSON of one metric over one group's ``row`` (None:
+    a group no doc fell in, see ``_cell``) — the only place a metric's
+    shape is written."""
     (kind, body), = spec.items()
     if kind == "percentiles":
         pcts = [float(p) for p in body.get("percents", _DEFAULT_PERCENTS)]
-        vals = row[f"{name}::percentiles"]
+        vals = _cell(row, f"{name}::percentiles")
         # ES response shape: {"values": {"50.0": v, ...}} (keys are
         # the percent doubles' default rendering, e.g. "25.0")
         return {
@@ -141,18 +159,18 @@ def _metric_result(name: str, spec: dict, row) -> object:
             }
         }
     if kind == "missing":
-        return {"doc_count": int(row[f"{name}::missing"])}
+        return {"doc_count": _count(row, f"{name}::missing")}
     if kind in ("stats", "extended_stats"):
         out = {
-            "count": row[f"{name}::count"],
-            "min": row[f"{name}::min"],
-            "max": row[f"{name}::max"],
-            "sum": row[f"{name}::sum"],
-            "avg": row[f"{name}::avg"],
+            "count": _count(row, f"{name}::count"),
+            "min": _cell(row, f"{name}::min"),
+            "max": _cell(row, f"{name}::max"),
+            "sum": _cell(row, f"{name}::sum"),
+            "avg": _cell(row, f"{name}::avg"),
         }
         if kind == "extended_stats":
             n, avg = out["count"], out["avg"]
-            sos = row[f"{name}::sos"]
+            sos = _cell(row, f"{name}::sos")
             out["sum_of_squares"] = sos
             if n and avg is not None and sos is not None:
                 # ES's population variance: E[x^2] - E[x]^2 (naive
@@ -169,7 +187,9 @@ def _metric_result(name: str, spec: dict, row) -> object:
                 "lower": None if std is None else float(avg) - sigma * std,
             }
         return out
-    return {"value": row[f"{name}::{kind}"]}
+    if kind in ("value_count", "cardinality"):
+        return {"value": _count(row, f"{name}::{kind}")}
+    return {"value": _cell(row, f"{name}::{kind}")}
 
 
 _INTERVAL_US = {
@@ -357,7 +377,7 @@ def _top_hits_order(body: dict):
     (sf, sd), = sorts[0].items()
     col = F.col("score") if sf == "_score" else F.col(sf)
     o = col.desc() if sd == "desc" else col.asc()
-    return [o, F.col("split_id").asc(), F.col("doc_id").asc()], sf
+    return [o, F.col("split_id").asc(), F.col("doc_id").asc()]
 
 
 def _top_hits_hit(row, body: dict) -> dict:
@@ -374,6 +394,170 @@ def _top_hits_hit(row, body: dict) -> dict:
     return hit
 
 
+def _cell(row, key):
+    """One aggregate cell of a collected row. ``row`` None is a group
+    no doc fell in (zero matches, an empty range bucket, a gap-filled
+    histogram bucket, a filters bucket on zero matches): it reads as
+    all-null, and its counts as 0 (``_count``) — what an aggregate
+    over zero docs returns."""
+    return None if row is None else row[key]
+
+
+def _count(row, key) -> int:
+    return int(_cell(row, key) or 0)
+
+
+def _slot_of(kind: str, body: dict):
+    """Raw grouping value -> the slot the assembly and the top_hits
+    fetch both find a bucket by: the integer grid index for the
+    histogram kinds, the value itself otherwise."""
+    if kind == "histogram":
+        interval = float(body["interval"])
+        return lambda raw: round(float(raw) / interval)
+    if kind == "date_histogram":
+        step = _parse_fixed_interval(body["fixed_interval"])
+        return lambda raw: int(raw) // step
+    return lambda raw: raw
+
+
+def _gap_fill(kind: str, body: dict, rows: dict) -> list:
+    """``(slot, bucket, row or None)`` of a histogram or date_histogram
+    spec in key order, from its rows by integer slot. ES/tantivy
+    semantics: min_doc_count defaults to 0 and the slot range [first,
+    last] is GAP-FILLED with empty buckets; a histogram's
+    extended_bounds widens that range (grid-aligned) and its
+    hard_bounds clip observed buckets."""
+    extra: set = set()
+    if kind == "histogram":
+        interval = float(body["interval"])
+        hard = body.get("hard_bounds")
+        if hard is not None:
+            rows = {
+                s: r for s, r in rows.items()
+                if float(hard["min"]) <= s * interval < float(hard["max"])
+            }
+        eb = body.get("extended_bounds")
+        if eb is not None:
+            extra = {math.floor(float(eb["min"]) / interval),
+                     math.floor(float(eb["max"]) / interval)}
+
+        def key(s):
+            return {"key": s * interval}
+    else:
+        step = _parse_fixed_interval(body["fixed_interval"])
+
+        def key(s):
+            us = s * step
+            iso = datetime.fromtimestamp(
+                us / 1_000_000, tz=timezone.utc
+            ).strftime("%Y-%m-%dT%H:%M:%S") + f".{(us // 1000) % 1000:03d}Z"
+            # ES date_histogram keys: epoch millis + string
+            return {"key": us // 1000, "key_as_string": iso}
+    mdc = int(body.get("min_doc_count", 0))
+    span = sorted(set(rows) | extra)
+    if mdc == 0 and span:
+        span = range(span[0], span[-1] + 1)
+    else:
+        span = sorted(rows)
+    out = []
+    for s in span:
+        dc = _count(rows.get(s), "doc_count")
+        if dc >= mdc:
+            out.append((s, {**key(s), "doc_count": dc}, rows.get(s)))
+    return out
+
+
+def _matched_docs(
+    spark: SparkSession,
+    index_dir: str,
+    req: SearchRequest,
+    columns: list,
+    snap: dict | None = None,
+) -> DataFrame:
+    """Every doc matching ``req`` (no top-k) with its docmap
+    ``columns``; the matches and the docmap come from ONE snapshot
+    (``snap``, else the searcher's current one)."""
+    if snap is None:
+        snap = get_searcher(spark, index_dir).snapshot()
+    matches = matches_df(spark, index_dir, req, tables=snap)
+    return fetch_docs(
+        spark, index_dir, matches, columns=columns, bounded=False,
+        docmap=snap["docmap"],
+    )
+
+
+def _sub_cells(
+    prefix: str, subs: dict, fields: set, mask=None, fetch: bool = False
+) -> list:
+    """Aggregate cells of a spec's metric sub-aggs, named ``{prefix}{sub
+    name}``; each sub's docmap columns join ``fields``. ``mask``: a
+    ``filters`` predicate that nulls the input outside its bucket.
+    ``fetch``: ``top_hits`` subs are fetched per bucket after the pass,
+    so they add columns but no cell."""
+    cells = []
+    for sname, sspec in subs.items():
+        if "top_hits" in sspec and fetch:
+            fields.update(_top_hits_fields(sspec["top_hits"]))
+            continue
+        if "top_hits" in sspec and mask is not None:
+            raise ValueError(
+                "top_hits under a filters agg is not supported "
+                "(buckets overlap)"
+            )
+        (_, sbody), = sspec.items()
+        col = None if mask is None else F.when(mask, F.col(sbody["field"]))
+        cells += _metric_cols(prefix + sname, sspec, col=col)
+        fields.add(sbody["field"])
+    return cells
+
+
+def _composite_result(docs: DataFrame, spec: dict, cells: list) -> dict:
+    """ES composite agg: multi-source bucket keys, keyset (`after`)
+    pagination. One hash aggregation on the source tuple + a
+    TakeOrdered of `size` rows — Spark's sort-limit does map-side
+    partial top-N, so the driver never sees the full bucket
+    cardinality (the entire point of composite at 10^12 rows)."""
+    body = spec["composite"]
+    names = []
+    for src in body["sources"]:
+        (sname, sdef), = src.items()
+        (skind, _), = sdef.items()
+        if skind not in ("terms", "histogram"):
+            raise ValueError(f"composite source kind {skind!r} not supported")
+        names.append(sname)
+        docs = docs.withColumn(f"__c_{sname}", _bucket_expr(sdef))
+    ccols = [f"__c_{s}" for s in names]
+    for c in ccols:
+        # ES drops docs missing any source (no missing_bucket)
+        docs = docs.filter(F.col(c).isNotNull())
+    grouped = docs.groupBy(*ccols).agg(*cells)
+    after = body.get("after")
+    if after:
+        conds = []
+        prev_eq = F.lit(True)
+        for sname, c in zip(names, ccols):
+            a = F.lit(after[sname])
+            conds.append(prev_eq & (F.col(c) > a))
+            prev_eq = prev_eq & (F.col(c) == a)
+        grouped = grouped.filter(functools.reduce(operator.or_, conds))
+    rows = (
+        grouped.orderBy(*[F.col(c).asc() for c in ccols])
+        .limit(int(body.get("size", 10)))
+        .collect()
+    )
+    buckets = []
+    for r in rows:
+        b = {"key": {s: r[c] for s, c in zip(names, ccols)},
+             "doc_count": int(r["doc_count"])}
+        for mname, mspec in spec.get("aggs", {}).items():
+            b[mname] = _metric_result(f"c|{mname}", mspec, r)
+        buckets.append(b)
+    res: dict = {"buckets": buckets}
+    if buckets:
+        res["after_key"] = dict(buckets[-1]["key"])
+    return res
+
+
 def run_aggregations(
     spark: SparkSession,
     index_dir: str,
@@ -383,282 +567,137 @@ def run_aggregations(
 ) -> dict:
     """Run the aggregation request over all docs matching ``req``.
 
-    SINGLE PASS: every bucket spec becomes one GROUPING SETS set over
-    one shared scan of the matched docs — the reference evaluates all
-    aggs of a request in one collector walk per segment
-    (collector.rs:289-353), and this is the Spark spelling of that.
-    One Expand + one partial/final hash aggregation + one collect; a
-    3-agg request never re-joins matches against the doc store.
-    Exception: ``top_hits`` returns document ROWS, not aggregates, so
-    it adds one bounded fetch job (rank-window group-limited to
-    `size` per bucket) after the fused pass — the same query-phase /
-    fetch-phase split ES itself makes for this agg.
+    Three steps. PLAN: one walk of the spec tree gives the docmap
+    columns, one grouping key per bucket spec and every metric cell.
+    ONE PASS: every bucket spec becomes one GROUPING SETS set over one
+    shared scan of the matched docs, plus the empty set when any spec
+    reads the all-docs row — the reference evaluates all aggs of a
+    request in one collector walk per segment (collector.rs:289-353),
+    and this is the Spark spelling of that: one Expand + one
+    partial/final hash aggregation + one collect, with or without a
+    bucket spec. ONE ASSEMBLY: each spec's JSON is built from the
+    collected rows; a group with no row (see ``_cell``) is shaped by
+    the same ``_metric_result``.
+
+    Exceptions, each one bounded job after the pass: ``top_hits``
+    returns document ROWS, not aggregates (a rank-window group-limited
+    to `size` per bucket) — the same query-phase / fetch-phase split
+    ES itself makes for this agg; ``composite`` pages its own bucket
+    space.
 
     ``tables``: a ``Searcher.snapshot()`` to evaluate against, so a
     caller holding hits from one snapshot gets buckets from the SAME
     index state (serve.search_endpoint threads its snapshot here).
     """
-    import functools
-    import operator as _op
-
-    from pyspark.sql.window import Window
-
-    snap = tables if tables is not None else get_searcher(
-        spark, index_dir
-    ).snapshot()
-    matches = matches_df(spark, index_dir, req, tables=snap)
-    needed: set[str] = set()
-    for spec in aggs.values():
-        for kind, body in spec.items():
-            if kind in ("range", "histogram", "date_histogram", "terms"):
-                needed.add(body["field"])
-            elif kind == "composite":
-                for src in body["sources"]:
-                    (_, sdef), = src.items()
-                    (_, sbody), = sdef.items()
-                    needed.add(sbody["field"])
-            elif kind == "filters":
-                for fbody in body["filters"].values():
-                    needed.update(_filter_fields(fbody))
-            elif kind in _METRIC_AGGS:
-                needed.add(body["field"])
-            elif kind == "top_hits":
-                needed.update(_top_hits_fields(body))
-            elif kind == "aggs":
-                for sub in body.values():
-                    for k2, b2 in sub.items():
-                        if k2 in _METRIC_AGGS:
-                            needed.add(b2["field"])
-                        elif k2 == "top_hits":
-                            needed.update(_top_hits_fields(b2))
-    docs = fetch_docs(
-        spark, index_dir, matches, columns=sorted(needed), bounded=False,
-        docmap=snap["docmap"],
-    )
-
     specs = list(aggs.items())
-    # metric columns are namespaced "{spec_idx}|{name}" — two specs may
-    # reuse a sub-agg name with different bodies
-    agg_cols = [F.count(F.lit(1)).alias("doc_count")]
-    bucket_idx: list[int] = []   # spec indices that have a bucket kind
-    need_global = False
-    docs2 = docs
+    # ---- plan ----
+    # cells are namespaced "{spec_idx}|{name}": two specs may reuse a
+    # sub-agg name with different bodies
+    fields: set[str] = set()
+    keys: dict = {}          # bucket spec index -> grouping-key Column
+    comp_cells: dict = {}    # composite spec index -> its job's cells
+    cells = [F.count(F.lit(1)).alias("doc_count")]
+    need_global = False      # some spec reads the all-docs row
+    kinds = [
+        next(((k, v) for k, v in spec.items() if k != "aggs"), (None, {}))
+        for _, spec in specs
+    ]
     for i, (name, spec) in enumerate(specs):
-        if "composite" in spec:
-            # composite paginates high-cardinality buckets: its own
-            # bounded job (one hash agg + TakeOrdered) at assembly —
-            # ES also evaluates composite separately from sibling aggs
-            continue
-        if "filters" in spec:
+        kind, body = kinds[i]
+        subs = spec.get("aggs", {})
+        if kind == "composite":
+            for src in body["sources"]:
+                (_, sdef), = src.items()
+                (_, sbody), = sdef.items()
+                fields.add(sbody["field"])
+            comp_cells[i] = [F.count(F.lit(1)).alias("doc_count")]
+            comp_cells[i] += _sub_cells("c|", subs, fields)
+        elif kind == "filters":
             # docs may match SEVERAL named filters, so these are not
             # grouping keys: each bucket is a conditional count (plus
-            # predicate-masked sub-metrics) in the shared global pass
-            for fname, fbody in spec["filters"]["filters"].items():
+            # predicate-masked sub-metrics) on the all-docs row
+            for fname, fbody in body["filters"].items():
                 cond = _filter_cond(fbody)
-                agg_cols.append(
+                fields.update(_filter_fields(fbody))
+                cells.append(
                     F.count(F.when(cond, F.lit(1)))
                     .alias(f"{i}|{fname}::fcount")
                 )
-                for sname, sspec in spec.get("aggs", {}).items():
-                    if "top_hits" in sspec:
-                        raise ValueError(
-                            "top_hits under a filters agg is not "
-                            "supported (buckets overlap)"
-                        )
-                    (_, sbody), = sspec.items()
-                    masked = F.when(cond, F.col(sbody["field"]))
-                    agg_cols += _metric_cols(
-                        f"{i}|{fname}|{sname}", sspec, col=masked
-                    )
+                cells += _sub_cells(
+                    f"{i}|{fname}|", subs, fields, mask=cond
+                )
             need_global = True
-            continue
-        for sname, sspec in spec.get("aggs", {}).items():
-            if "top_hits" in sspec:
-                continue  # fetch-phase job at assembly, not an agg col
-            agg_cols += _metric_cols(f"{i}|{sname}", sspec)
-        if "top_hits" in spec:
-            # top-level top_hits: total rides the global doc_count row;
-            # the (bounded) hit fetch is a separate job at assembly —
-            # the same split ES makes (aggs in the query phase,
-            # top_hits docs in the fetch phase)
+        elif kind == "top_hits":
+            # total = the all-docs doc_count; the hits are fetched after
+            fields.update(_top_hits_fields(body))
             need_global = True
-            continue
-        bexpr = _bucket_expr(spec)
-        if bexpr is not None:
-            docs2 = docs2.withColumn(f"__b{i}", bexpr)
-            bucket_idx.append(i)
+        elif (key := _bucket_expr(spec)) is not None:
+            keys[i] = key
+            fields.add(body["field"])
+            if body.get("keyed") and any("top_hits" in s
+                                         for s in subs.values()):
+                raise ValueError("top_hits with keyed buckets not supported")
+            cells += _sub_cells(f"{i}|", subs, fields, fetch=True)
+            if kind == "terms":
+                # docs WITH the field (in or out of the top buckets)
+                # feed sum_other_doc_count; with `missing` set EVERY
+                # doc has a bucket, so count(*)
+                cells.append((
+                    F.count(F.lit(1)) if "missing" in body
+                    else F.count(F.col(body["field"]))
+                ).alias(f"__total{i}"))
+                need_global = True
         else:
-            agg_cols += _metric_cols(f"{i}|{name}", spec)
-            need_global = True
-        if "terms" in spec:
-            # docs WITH the field (in or out of the top buckets) feed
-            # sum_other_doc_count — a global count(field), same pass;
-            # with `missing` set EVERY doc has a bucket, so count(*)
-            agg_cols.append(
-                (
-                    F.count(F.lit(1))
-                    if "missing" in spec["terms"]
-                    else F.count(F.col(spec["terms"]["field"]))
-                ).alias(f"__total{i}")
-            )
+            cells += _metric_cols(f"{i}|{name}", spec)
+            fields.add(body["field"])
             need_global = True
 
-    def _filters_result(i: int, spec: dict, row) -> dict:
-        """ES keyed-filters response: named buckets of doc_count +
-        sub-metrics, all read from the shared global row."""
-        buckets = {}
-        for fname in spec["filters"]["filters"]:
-            if row is not None:
-                b = {"doc_count": int(row[f"{i}|{fname}::fcount"])}
-                for sname, sspec in spec.get("aggs", {}).items():
-                    b[sname] = _metric_result(
-                        f"{i}|{fname}|{sname}", sspec, row
-                    )
-            else:
-                b = {"doc_count": 0}
-                for sname in spec.get("aggs", {}):
-                    b[sname] = {"value": None}
-            buckets[fname] = b
-        return {"buckets": buckets}
-
-    def _th_global(body: dict, total: int) -> dict:
-        """Top-level top_hits: one bounded orderBy-limit job (the
-        fetch phase); ``total`` comes from the shared global row."""
-        order, _ = _top_hits_order(body)
-        size = int(body.get("size", 3))
-        rows = docs2.orderBy(*order).limit(size).collect()
-        return {"hits": {"total": {"value": total, "relation": "eq"},
-                         "hits": [_top_hits_hit(r, body) for r in rows]}}
-
-    def _composite_result(spec: dict) -> dict:
-        """ES composite agg: multi-source bucket keys, keyset (`after`)
-        pagination. One hash aggregation on the source tuple + a
-        TakeOrdered of `size` rows — Spark's sort-limit does map-side
-        partial top-N, so the driver never sees the full bucket
-        cardinality (the entire point of composite at 10^12 rows)."""
-        body = spec["composite"]
-        size = int(body.get("size", 10))
-        srcs = []
-        for src in body["sources"]:
-            (sname, sdef), = src.items()
-            (skind, sbody), = sdef.items()
-            if skind == "terms":
-                col = F.col(sbody["field"])
-            elif skind == "histogram":
-                interval = float(sbody["interval"])
-                col = (
-                    F.floor(
-                        F.col(sbody["field"]).cast("double")
-                        / F.lit(interval)
-                    )
-                    * F.lit(interval)
-                )
-            else:
-                raise ValueError(
-                    f"composite source kind {skind!r} not supported"
-                )
-            srcs.append((sname, col))
-        base = docs2
-        for sname, col in srcs:
-            base = base.withColumn(f"__c_{sname}", col)
-        ccols = [f"__c_{s}" for s, _ in srcs]
-        for c in ccols:
-            # ES drops docs missing any source (no missing_bucket)
-            base = base.filter(F.col(c).isNotNull())
-        aggexprs = [F.count(F.lit(1)).alias("doc_count")]
-        for mname, mspec in spec.get("aggs", {}).items():
-            aggexprs += _metric_cols(f"c|{mname}", mspec)
-        grouped = base.groupBy(*ccols).agg(*aggexprs)
-        after = body.get("after")
-        if after:
-            conds = []
-            prev_eq = F.lit(True)
-            for (sname, _), c in zip(srcs, ccols):
-                a = F.lit(after[sname])
-                conds.append(prev_eq & (F.col(c) > a))
-                prev_eq = prev_eq & (F.col(c) == a)
-            grouped = grouped.filter(
-                functools.reduce(_op.or_, conds)
-            )
-        rows = (
-            grouped.orderBy(*[F.col(c).asc() for c in ccols])
-            .limit(size)
-            .collect()
-        )
-        buckets = []
-        for r in rows:
-            key = {s: r[c] for (s, _), c in zip(srcs, ccols)}
-            b = {"key": key, "doc_count": int(r["doc_count"])}
-            for mname, mspec in spec.get("aggs", {}).items():
-                b[mname] = _metric_result(f"c|{mname}", mspec, r)
-            buckets.append(b)
-        res: dict = {"buckets": buckets}
-        if buckets:
-            res["after_key"] = dict(buckets[-1]["key"])
-        return res
-
-    bcols = [f"__b{i}" for i in bucket_idx]
-    if not bcols:
-        # metric-only request: plain global aggregate (one job already;
-        # skipped entirely when every spec is composite/top-hits-free)
-        row = None
-        if any("composite" not in s for _, s in specs):
-            row = docs2.agg(*agg_cols).collect()[0]
-        return {
-            name: (
-                _filters_result(i, spec, row)
-                if "filters" in spec
-                else _composite_result(spec)
-                if "composite" in spec
-                else _th_global(spec["top_hits"], int(row["doc_count"]))
-                if "top_hits" in spec
-                else _metric_result(f"{i}|{name}", spec, row)
-            )
-            for i, (name, spec) in enumerate(specs)
-        }
-
+    # ---- one pass ----
+    docs = _matched_docs(spark, index_dir, req, sorted(fields), tables)
+    for i, key in keys.items():
+        docs = docs.withColumn(f"__b{i}", key)
+    bcols = [f"__b{i}" for i in keys]
     # grouping_id bit j (MSB = leftmost grouping column) set == that
     # column is aggregated away; a spec's own rows have only its bit 0
     full_mask = (1 << len(bcols)) - 1
     gid_of = {
         i: full_mask & ~(1 << (len(bcols) - 1 - j))
-        for j, i in enumerate(bucket_idx)
+        for j, i in enumerate(keys)
     }
-    sets = [[F.col(c)] for c in bcols]
-    if need_global:
-        sets.append([])
-    agged = docs2.groupingSets(sets, *[F.col(c) for c in bcols]).agg(
-        F.grouping_id().alias("__gid"), *agg_cols
-    )
-    # drop null-key buckets per set (a null grouping cell inside a
-    # spec's own gid is a real NULL key, not a rolled-up column)
-    keep = F.lit(need_global) & (F.col("__gid") == full_mask)
-    for i in bucket_idx:
-        keep = keep | (
-            (F.col("__gid") == gid_of[i]) & F.col(f"__b{i}").isNotNull()
+    sets = [[F.col(c)] for c in bcols] + ([[]] if need_global else [])
+    by_gid: dict[int, list] = {}
+    if sets:   # else every spec is composite: no shared pass at all
+        result = docs.groupingSets(sets, *[F.col(c) for c in bcols]).agg(
+            F.grouping_id().alias("__gid"), *cells
         )
-    result = agged.filter(keep)
-
-    terms_sizes = {
-        i: int(spec["terms"].get("size", 10))
-        for i, (_, spec) in enumerate(specs)
-        if "terms" in spec
-    }
-    if terms_sizes:
+        # drop null-key buckets per set (a null grouping cell inside a
+        # spec's own gid is a real NULL key, not a rolled-up column)
+        keep = F.lit(need_global) & (F.col("__gid") == full_mask)
+        for i in keys:
+            keep = keep | (
+                (F.col("__gid") == gid_of[i]) & F.col(f"__b{i}").isNotNull()
+            )
+        result = result.filter(keep)
+        terms_sizes = {
+            i: int(kinds[i][1].get("size", 10))
+            for i in keys if kinds[i][0] == "terms"
+        }
         # top-N per terms set without a second job: rank inside each
         # grouping set. Each spec gets its own rank column so the ES
         # `order` knob (_count / _key / a sub-metric name) works per
         # spec; extra windows share the __gid partitioning, so this
         # adds per-partition sorts but never another exchange.
-        for i, sz in terms_sizes.items():
-            body = specs[i][1]["terms"]
-            (okey, odir), = body.get("order", {"_count": "desc"}).items()
+        for i in terms_sizes:
+            spec = specs[i][1]
+            (okey, odir), = kinds[i][1].get(
+                "order", {"_count": "desc"}
+            ).items()
             if okey == "_count":
                 ocol = F.col("doc_count")
             elif okey == "_key":
                 ocol = F.col(f"__b{i}")
             else:
-                sspec = specs[i][1].get("aggs", {}).get(okey)
+                sspec = spec.get("aggs", {}).get(okey)
                 if sspec is None:
                     raise ValueError(
                         f"terms order references unknown sub-agg {okey!r}"
@@ -669,268 +708,130 @@ def run_aggregations(
             w = Window.partitionBy("__gid").orderBy(
                 ocol, F.col(f"__b{i}").asc()
             )
-            result = result.withColumn(
-                f"__rk{i}", F.row_number().over(w)
-            )
-        non_terms = ~F.col("__gid").isin(
-            [gid_of[i] for i in terms_sizes]
-        )
-        result = result.filter(functools.reduce(
-            _op.or_,
-            [
-                (F.col("__gid") == gid_of[i]) & (F.col(f"__rk{i}") <= sz)
-                for i, sz in terms_sizes.items()
-            ],
-            non_terms,
-        ))
+            result = result.withColumn(f"__rk{i}", F.row_number().over(w))
+        if terms_sizes:
+            result = result.filter(functools.reduce(
+                operator.or_,
+                [
+                    (F.col("__gid") == gid_of[i]) & (F.col(f"__rk{i}") <= sz)
+                    for i, sz in terms_sizes.items()
+                ],
+                ~F.col("__gid").isin([gid_of[i] for i in terms_sizes]),
+            ))
+        for r in result.collect():          # the ONE action
+            by_gid.setdefault(r["__gid"], []).append(r)
+    grow = by_gid.get(full_mask, [None])[0]
 
-    all_rows = result.collect()          # the ONE action
-    by_gid: dict[int, list] = {}
-    for r in all_rows:
-        by_gid.setdefault(r["__gid"], []).append(r)
-    grow = (by_gid.get(full_mask) or [None])[0]
-
+    # ---- one assembly ----
     out: dict = {}
+    slots: dict = {}   # bucket spec index -> (slot of a key, {slot: bucket})
     for i, (name, spec) in enumerate(specs):
-        # top_hits sub-specs are fetch-phase (injected below), not
-        # grouping-set metric cells
-        sub_aggs = {
-            k: v for k, v in spec.get("aggs", {}).items()
-            if "top_hits" not in v
-        }
-        if "composite" in spec:
-            out[name] = _composite_result(spec)
+        kind, body = kinds[i]
+        if kind == "composite":
+            out[name] = _composite_result(docs, spec, comp_cells[i])
             continue
-        if "top_hits" in spec:
-            out[name] = _th_global(
-                spec["top_hits"],
-                int(grow["doc_count"]) if grow is not None else 0,
-            )
+        if kind == "top_hits":
+            # the fetch phase: one bounded orderBy-limit job
+            rows = docs.orderBy(*_top_hits_order(body)).limit(
+                int(body.get("size", 3))
+            ).collect()
+            out[name] = {"hits": {
+                "total": {"value": _count(grow, "doc_count"),
+                          "relation": "eq"},
+                "hits": [_top_hits_hit(r, body) for r in rows],
+            }}
             continue
-        if "filters" in spec:
-            out[name] = _filters_result(i, spec, grow)
-        elif "range" in spec:
-            rows = {r[f"__b{i}"]: r for r in by_gid.get(gid_of[i], [])}
+        if kind == "filters":
+            buckets = {}
+            for fname in body["filters"]:
+                b = buckets[fname] = {
+                    "doc_count": _count(grow, f"{i}|{fname}::fcount")
+                }
+                for sname, sspec in spec.get("aggs", {}).items():
+                    b[sname] = _metric_result(
+                        f"{i}|{fname}|{sname}", sspec, grow
+                    )
+            out[name] = {"buckets": buckets}
+            continue
+        if i not in keys:
+            out[name] = _metric_result(f"{i}|{name}", spec, grow)
+            continue
+        slot = _slot_of(kind, body)
+        rows = {slot(r[f"__b{i}"]): r for r in by_gid.get(gid_of[i], [])}
+        # (slot, bucket, its row or None) in response order
+        if kind == "range":
             buckets = []
-            for rng in spec["range"]["ranges"]:
+            for rng in body["ranges"]:
                 lo, hi = rng.get("from"), rng.get("to")
                 key = _range_key(lo, hi)
                 r = rows.get(key)
-                b = {"key": key, "doc_count": int(r["doc_count"]) if r else 0}
+                b = {"key": key, "doc_count": _count(r, "doc_count")}
                 if lo is not None:
                     b["from"] = float(lo)
                 if hi is not None:
                     b["to"] = float(hi)
-                for sname, sspec in sub_aggs.items():
-                    b[sname] = (
-                        _metric_result(f"{i}|{sname}", sspec, r)
-                        if r else {"value": None}
-                    )
-                buckets.append(b)
-            if spec["range"].get("keyed"):
-                # ES keyed form: buckets as an object, "key" folded out
-                out[name] = {"buckets": {
-                    b.pop("key"): b for b in buckets
-                }}
-            else:
-                out[name] = {"buckets": buckets}
-        elif "terms" in spec:
-            top = sorted(
-                by_gid.get(gid_of[i], []), key=lambda r: r[f"__rk{i}"]
-            )
-            buckets, in_top = [], 0
-            for r in top:
-                b = {"key": r[f"__b{i}"], "doc_count": int(r["doc_count"])}
-                in_top += int(r["doc_count"])
-                for sname, sspec in sub_aggs.items():
+                buckets.append((key, b, r))
+        elif kind == "terms":
+            buckets = [
+                (k, {"key": k, "doc_count": int(r["doc_count"])}, r)
+                for k, r in sorted(
+                    rows.items(), key=lambda kr: kr[1][f"__rk{i}"]
+                )
+            ]
+        else:
+            buckets = _gap_fill(kind, body, rows)
+        for _, b, r in buckets:
+            for sname, sspec in spec.get("aggs", {}).items():
+                if "top_hits" not in sspec:   # fetched below
                     b[sname] = _metric_result(f"{i}|{sname}", sspec, r)
-                buckets.append(b)
-            total = int(grow[f"__total{i}"]) if grow is not None else 0
+        slots[i] = (slot, {s: b for s, b, _ in buckets})
+        buckets = [b for _, b, _ in buckets]
+        if kind == "terms":
             out[name] = {
                 "buckets": buckets,
-                "sum_other_doc_count": total - in_top,
+                "sum_other_doc_count": _count(grow, f"__total{i}")
+                - sum(b["doc_count"] for b in buckets),
                 "doc_count_error_upper_bound": 0,
             }
-        elif "histogram" in spec:
-            body = spec["histogram"]
-            interval = float(body["interval"])
-            # ES/tantivy semantics: min_doc_count defaults to 0 and the
-            # bucket range [first, last] is GAP-FILLED with empty
-            # buckets; extended_bounds widens that range (grid-aligned),
-            # hard_bounds clips observed buckets.
-            mdc = int(body.get("min_doc_count", 0))
-            hard = body.get("hard_bounds")
-            rows = {}
-            for r in by_gid.get(gid_of[i], []):
-                k = float(r[f"__b{i}"])
-                if hard is not None and not (
-                    float(hard["min"]) <= k < float(hard["max"])
-                ):
-                    continue
-                rows[round(k / interval)] = r
-            keys = sorted(rows)
-            if body.get("extended_bounds") is not None:
-                eb = body["extended_bounds"]
-                import math as _math
-
-                keys_ext = [
-                    int(_math.floor(float(eb["min"]) / interval)),
-                    int(_math.floor(float(eb["max"]) / interval)),
-                ]
-                keys = sorted(set(keys) | set(keys_ext))
-            buckets = []
-            if keys:
-                lo, hi = keys[0], keys[-1]
-                idx_range = (
-                    range(lo, hi + 1) if mdc == 0 else sorted(rows)
-                )
-                for ki in idx_range:
-                    r = rows.get(ki)
-                    dc = int(r["doc_count"]) if r is not None else 0
-                    if dc < mdc:
-                        continue
-                    b = {"key": ki * interval, "doc_count": dc}
-                    for sname, sspec in sub_aggs.items():
-                        b[sname] = (
-                            _metric_result(f"{i}|{sname}", sspec, r)
-                            if r is not None else {"value": None}
-                        )
-                    buckets.append(b)
-            if body.get("keyed"):
-                # ES keyed form: "150.0"-style string keys
-                out[name] = {"buckets": {
-                    str(b.pop("key")): b for b in buckets
-                }}
-            else:
-                out[name] = {"buckets": buckets}
-        elif "date_histogram" in spec:
-            from datetime import datetime, timezone
-
-            body = spec["date_histogram"]
-            step = _parse_fixed_interval(body["fixed_interval"])
-            # same ES/tantivy gap-fill semantics as histogram, in µs
-            mdc = int(body.get("min_doc_count", 0))
-            rows = {
-                int(r[f"__b{i}"]) // step: r
-                for r in by_gid.get(gid_of[i], [])
-            }
-            keys = sorted(rows)
-            buckets = []
-            if keys:
-                idx_range = (
-                    range(keys[0], keys[-1] + 1) if mdc == 0
-                    else keys
-                )
-                for ki in idx_range:
-                    r = rows.get(ki)
-                    dc = int(r["doc_count"]) if r is not None else 0
-                    if dc < mdc:
-                        continue
-                    us = ki * step
-                    iso = datetime.fromtimestamp(
-                        us / 1_000_000, tz=timezone.utc
-                    ).strftime("%Y-%m-%dT%H:%M:%S") + (
-                        f".{(us // 1000) % 1000:03d}Z"
-                    )
-                    # ES date_histogram keys: epoch millis + string
-                    b = {"key": us // 1000, "key_as_string": iso,
-                         "doc_count": dc}
-                    for sname, sspec in sub_aggs.items():
-                        b[sname] = (
-                            _metric_result(f"{i}|{sname}", sspec, r)
-                            if r is not None else {"value": None}
-                        )
-                    buckets.append(b)
-            out[name] = {"buckets": buckets}
+        elif body.get("keyed") and kind != "date_histogram":
+            # ES keyed form: buckets as an object, "key" folded out
+            out[name] = {"buckets": {
+                str(b.pop("key")): b for b in buckets
+            }}
         else:
-            if grow is not None:
-                out[name] = _metric_result(f"{i}|{name}", spec, grow)
-            else:
-                # zero matching docs: Spark's empty global agg shape
-                (kind, _), = spec.items()
-                if kind == "stats":
-                    out[name] = {"count": 0, "min": None, "max": None,
-                                 "sum": None, "avg": None}
-                elif kind == "extended_stats":
-                    out[name] = {
-                        "count": 0, "min": None, "max": None,
-                        "sum": None, "avg": None,
-                        "sum_of_squares": None, "variance": None,
-                        "std_deviation": None,
-                        "std_deviation_bounds": {"upper": None,
-                                                 "lower": None},
-                    }
-                elif kind == "missing":
-                    out[name] = {"doc_count": 0}
-                else:
-                    out[name] = {"value": 0 if kind == "value_count"
-                                 else None}
+            out[name] = {"buckets": buckets}
 
     # ---- per-bucket top_hits injection (ES fetch phase) ----
     # One bounded rank-window job per top_hits-bearing bucket spec:
     # WindowGroupLimit caps per-bucket state at `size` BEFORE the
     # window exchange, and terms specs additionally pre-filter to the
     # response's top-N keys, so the collect is |buckets|·size rows.
-    for i, (name, spec) in enumerate(specs):
-        ths = {
-            sn: ss["top_hits"]
-            for sn, ss in spec.get("aggs", {}).items()
-            if "top_hits" in ss
-        }
-        if not ths or i not in bucket_idx:
-            continue
-        kind = next(
-            k for k in ("range", "histogram", "date_histogram", "terms")
-            if k in spec
-        )
-        if spec[kind].get("keyed"):
-            raise ValueError("top_hits with keyed buckets not supported")
+    for i, (slot, by_slot) in slots.items():
         bcol = f"__b{i}"
-        buckets = out[name]["buckets"]
-        # raw __b value -> response-bucket resolver, per bucket kind
-        if kind in ("terms", "range"):
-            def _slot(raw):
-                return raw
-            want = {b["key"]: b for b in buckets}
-        elif kind == "histogram":
-            interval = float(spec["histogram"]["interval"])
-
-            def _slot(raw):
-                return round(float(raw) / interval)
-            want = {round(b["key"] / interval): b for b in buckets}
-        else:  # date_histogram
-            step = _parse_fixed_interval(
-                spec["date_histogram"]["fixed_interval"]
-            )
-
-            def _slot(raw):
-                return int(raw) // step
-            want = {(b["key"] * 1000) // step: b for b in buckets}
-        for sname, body in ths.items():
-            order, sf = _top_hits_order(body)
-            size = int(body.get("size", 3))
-            base = docs2.filter(F.col(bcol).isNotNull())
-            if kind == "terms":
-                base = base.filter(
-                    F.col(bcol).isin([b["key"] for b in buckets])
-                )
-            w = Window.partitionBy(bcol).orderBy(*order)
+        base = docs.filter(F.col(bcol).isNotNull())
+        if kinds[i][0] == "terms":
+            base = base.filter(F.col(bcol).isin(list(by_slot)))
+        for sname, sspec in specs[i][1].get("aggs", {}).items():
+            if "top_hits" not in sspec:
+                continue
+            body = sspec["top_hits"]
+            w = Window.partitionBy(bcol).orderBy(*_top_hits_order(body))
             cols = sorted(_top_hits_fields(body) | {bcol, "score"})
             rows = (
                 base.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= size)
+                .filter(F.col("__rn") <= int(body.get("size", 3)))
                 .select(*cols, "__rn")
                 .collect()
             )
-            perb: dict = {}
+            hits: dict = {}
             for r in sorted(rows, key=lambda r: r["__rn"]):
-                perb.setdefault(_slot(r[bcol]), []).append(
+                hits.setdefault(slot(r[bcol]), []).append(
                     _top_hits_hit(r, body)
                 )
-            for slot, b in want.items():
+            for s, b in by_slot.items():
                 b[sname] = {"hits": {
                     "total": {"value": b["doc_count"], "relation": "eq"},
-                    "hits": perb.get(slot, []),
+                    "hits": hits.get(s, []),
                 }}
     return out
 
@@ -945,13 +846,7 @@ def search_stream(
     """Export the fast-field value of EVERY matching doc (no top-k),
     optionally with a partition column (PartionnedFastFieldCollector
     analogue)."""
-    snap = get_searcher(spark, index_dir).snapshot()
-    matches = matches_df(spark, index_dir, req, tables=snap)
     cols = [fast_field]
     if partition_by_field and partition_by_field != fast_field:
         cols.append(partition_by_field)
-    docs = fetch_docs(
-        spark, index_dir, matches, columns=cols, bounded=False,
-        docmap=snap["docmap"],
-    )
-    return docs.select(*cols)
+    return _matched_docs(spark, index_dir, req, cols).select(*cols)

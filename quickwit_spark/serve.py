@@ -88,10 +88,11 @@ def parse_sort_by(mini_dsl: str) -> tuple[str, bool]:
     return s, True
 
 
-def parse_search_params(params: dict) -> dict:
-    """Validate the camelCase query-string/body params into kwargs
-    for the engine request (deny_unknown_fields parity)."""
-    unknown = set(params) - _KNOWN_PARAMS
+def _parse_query_params(params: dict, known: frozenset) -> dict:
+    """The params search and stream share: reject unknown names
+    (deny_unknown_fields), then the required non-empty ``query``,
+    ``searchField`` and the epoch-second time range."""
+    unknown = set(params) - known
     if unknown:
         raise BadRequest(f"unknown parameters: {sorted(unknown)}")
     query = params.get("query", "")
@@ -111,6 +112,13 @@ def parse_search_params(params: dict) -> dict:
             # REST timestamps are epoch seconds (rest_handler.rs:95-99)
             secs = int(params[pname])
             out[ours] = _dt.datetime(1970, 1, 1) + _dt.timedelta(seconds=secs)
+    return out
+
+
+def parse_search_params(params: dict) -> dict:
+    """Validate the camelCase query-string/body params into kwargs
+    for the engine request (deny_unknown_fields parity)."""
+    out = _parse_query_params(params, _KNOWN_PARAMS)
     out["k"] = int(params.get("maxHits", 20))
     out["offset"] = int(params.get("startOffset", 0))
     if "sortByField" in params:
@@ -166,25 +174,7 @@ _STREAM_PARAMS = frozenset(
 def parse_stream_params(params: dict) -> dict:
     """Validate `SearchStreamRequestQueryString` params
     (rest_handler.rs:210-235, deny_unknown_fields)."""
-    unknown = set(params) - _STREAM_PARAMS
-    if unknown:
-        raise BadRequest(f"unknown parameters: {sorted(unknown)}")
-    query = params.get("query", "")
-    if not isinstance(query, str) or not query:
-        raise BadRequest("Expected a non empty string field.")
-    out: dict = {"query": query}
-    if "searchField" in params:
-        fields = [
-            f for f in str(params["searchField"]).strip(",").split(",") if f
-        ]
-        out["search_fields"] = tuple(fields) or None
-    for pname, ours in (
-        ("startTimestamp", "start_ts"),
-        ("endTimestamp", "end_ts"),
-    ):
-        if pname in params:
-            secs = int(params[pname])
-            out[ours] = _dt.datetime(1970, 1, 1) + _dt.timedelta(seconds=secs)
+    out = _parse_query_params(params, _STREAM_PARAMS)
     fast_field = str(params.get("fastField", "")).strip()
     if not fast_field:  # deserialize_not_empty_string parity
         raise BadRequest("Expected a non empty string field.")

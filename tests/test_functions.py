@@ -1176,6 +1176,186 @@ def test_histogram_gap_fill_and_bounds(spark, tmp_path):
     assert sub[0]["m"]["value"] is not None
 
 
+_ABSENT_METRICS = {
+    "avg": {"avg": {"field": "v"}},
+    "min": {"min": {"field": "v"}},
+    "sum": {"sum": {"field": "v"}},
+    "value_count": {"value_count": {"field": "v"}},
+    "cardinality": {"cardinality": {"field": "v"}},
+    "stats": {"stats": {"field": "v"}},
+    "extended_stats": {"extended_stats": {"field": "v"}},
+    "percentiles": {"percentiles": {"field": "v", "percents": [50]}},
+    "missing": {"missing": {"field": "v"}},
+}
+
+
+@pytest.fixture(scope="module")
+def absent_row_index(spark, tmp_path_factory):
+    """40 docs that all match ``the``: ``v`` in two clusters with an
+    empty [100, 200) cell, ``warc_ts`` on 2021-01-01 and 2021-01-04
+    (two empty days between)."""
+    import datetime as dt
+
+    from quickwit_spark.operators.build import build_index
+    from quickwit_spark.plans.config import webpages_config
+    from quickwit_spark.sources.corpus import gen_batch
+
+    pdf = gen_batch(np.arange(40), seed=9)
+    pdf["text"] = [f"the doc {i}" for i in range(40)]
+    pdf["v"] = [float(50 + i) if i < 20 else float(250 + i) for i in range(40)]
+    day = dt.datetime(2021, 1, 1)
+    pdf["warc_ts"] = [
+        day + dt.timedelta(days=0 if i < 20 else 3, minutes=i)
+        for i in range(40)
+    ]
+    idx = str(tmp_path_factory.mktemp("absent_row") / "idx")
+    build_index(
+        spark, spark.createDataFrame(pdf), idx,
+        webpages_config(fast_fields=("warc_ts", "lang", "v")),
+        num_splits=2,
+    )
+    return idx
+
+
+@pytest.mark.parametrize("context", [
+    "zero_matches_alone", "zero_matches_beside_terms", "empty_range_bucket",
+    "histogram_gap_bucket", "date_histogram_gap_bucket",
+    "filters_bucket_zero_matches",
+])
+def test_absent_row_metric_shapes(spark, absent_row_index, context):
+    """A group no doc fell in (zero matches, an empty range bucket, a
+    gap-filled histogram or date_histogram bucket, a filters bucket on
+    zero matches) answers every metric exactly as the metric alone
+    answers a query that matches nothing."""
+    from quickwit_spark.operators.aggregations import run_aggregations
+    from quickwit_spark.operators.search import SearchRequest
+
+    def run(query, aggs):
+        return run_aggregations(
+            spark, absent_row_index, SearchRequest(query=query), aggs
+        )
+
+    nothing = "qqzzy"   # out of vocabulary: matches no doc
+    expected = {
+        "avg": {"value": None},
+        "min": {"value": None},
+        "sum": {"value": None},
+        "value_count": {"value": 0},
+        "cardinality": {"value": 0},
+        "stats": {"count": 0, "min": None, "max": None, "sum": None,
+                  "avg": None},
+        "extended_stats": {
+            "count": 0, "min": None, "max": None, "sum": None,
+            "avg": None, "sum_of_squares": None, "variance": None,
+            "std_deviation": None,
+            "std_deviation_bounds": {"upper": None, "lower": None},
+        },
+        "percentiles": {"values": {"50.0": None}},
+        "missing": {"doc_count": 0},
+    }
+    for kind, spec in _ABSENT_METRICS.items():
+        assert run(nothing, {"m": spec})["m"] == expected[kind], kind
+
+    terms = {"t": {"terms": {"field": "lang"}}}
+    if context == "zero_matches_alone":
+        got = run(nothing, dict(_ABSENT_METRICS))
+    elif context == "zero_matches_beside_terms":
+        got = run(nothing, {**terms, **_ABSENT_METRICS})
+    elif context == "filters_bucket_zero_matches":
+        res = run(nothing, {**terms, "f": {
+            "filters": {"filters": {"all": {"match_all": {}}}},
+            "aggs": _ABSENT_METRICS,
+        }})
+        got = res["f"]["buckets"]["all"]
+        assert got["doc_count"] == 0
+    else:
+        kind, body, pos = {
+            "empty_range_bucket": (
+                "range", {"field": "v", "ranges": [
+                    {"to": 100}, {"from": 100, "to": 200}, {"from": 200}]}, 1),
+            "histogram_gap_bucket": (
+                "histogram", {"field": "v", "interval": 100}, 1),
+            "date_histogram_gap_bucket": (
+                "date_histogram",
+                {"field": "warc_ts", "fixed_interval": "1d"}, 2),
+        }[context]
+        res = run("the", {"b": {kind: body, "aggs": _ABSENT_METRICS}})
+        buckets = res["b"]["buckets"]
+        assert buckets[0]["doc_count"] == 20
+        got = buckets[pos]
+        assert got["doc_count"] == 0
+    assert {k: got[k] for k in _ABSENT_METRICS} == expected
+
+
+def test_top_hits_under_range_and_date_histogram(
+    spark, built_index, oracle_index
+):
+    """Per-bucket top_hits under ``range`` (sorted by a fast field)
+    and ``date_histogram`` (default ``_score`` sort): each bucket's
+    hits, their order and ``total`` equal a pandas oracle over the
+    oracle index's match set (ties: split_id asc, doc_id asc)."""
+    from quickwit_spark.operators.aggregations import run_aggregations
+    from quickwit_spark.operators.search import SearchRequest
+
+    hits = oracle_index.search("word", k=10**6)
+    sp = oracle_index.splits
+    m = pd.DataFrame({
+        "split_id": [h[0] for h in hits],
+        "doc_id": [h[1] for h in hits],
+        "score": [h[2] for h in hits],
+        "key": [oracle_index.doc_key(s, d) for s, d, _ in hits],
+        "len_text": [sp[s].doc_lens["text"][d] for s, d, _ in hits],
+        "ts_us": [sp[s].doc_ts[d] for s, d, _ in hits],
+    })
+    ranges = [{"to": 80}, {"from": 80, "to": 120}, {"from": 120, "to": 121},
+              {"from": 10_000}]
+    res = run_aggregations(
+        spark, built_index, SearchRequest(query="word"),
+        {"r": {"range": {"field": "len_text", "ranges": ranges},
+               "aggs": {"top": {"top_hits": {
+                   "size": 3, "sort": [{"len_text": "desc"}],
+                   "_source": ["key", "len_text"]}}}}},
+    )["r"]["buckets"]
+    assert [b["key"] for b in res] == ["*-80", "80-120", "120-121", "10000-*"]
+    for b, r in zip(res, ranges):
+        cell = m[(m.len_text >= r.get("from", -1))
+                 & (m.len_text < r.get("to", 10**9))]
+        want = cell.sort_values(
+            ["len_text", "split_id", "doc_id"], ascending=[False, True, True]
+        ).head(3)
+        th = b["top"]["hits"]
+        assert b["doc_count"] == len(cell)
+        assert th["total"] == {"value": len(cell), "relation": "eq"}
+        assert [h["_source"]["key"] for h in th["hits"]] == list(want.key)
+        assert [h["sort"] for h in th["hits"]] == [
+            [v] for v in want.len_text
+        ]
+    assert res[-1]["top"]["hits"]["hits"] == []
+
+    step = 3_600_000_000   # 1h in µs
+    res = run_aggregations(
+        spark, built_index, SearchRequest(query="word"),
+        {"d": {"date_histogram": {"field": "warc_ts", "fixed_interval": "1h"},
+               "aggs": {"top": {"top_hits": {"size": 2,
+                                             "_source": ["key"]}}}}},
+    )["d"]["buckets"]
+    m["slot"] = m.ts_us // step
+    lo, hi = int(m.slot.min()), int(m.slot.max())
+    assert [b["key"] for b in res] == [s * step // 1000
+                                       for s in range(lo, hi + 1)]
+    assert any(b["doc_count"] == 0 for b in res)   # gap-filled buckets
+    for b in res:
+        cell = m[m.slot == b["key"] * 1000 // step]
+        want = cell.sort_values(
+            ["score", "split_id", "doc_id"], ascending=[False, True, True]
+        ).head(2)
+        th = b["top"]["hits"]
+        assert b["doc_count"] == len(cell)
+        assert th["total"] == {"value": len(cell), "relation": "eq"}
+        assert [h["_source"]["key"] for h in th["hits"]] == list(want.key)
+        assert [h["_score"] for h in th["hits"]] == list(want.score)
+
+
 def test_terms_histogram_missing_param(spark, tmp_path):
     """ES `missing` parameter: docs with an absent field land in the
     substitute bucket for terms and histogram instead of vanishing."""
