@@ -178,7 +178,7 @@ def _search_matches(spark, sf_dir, query, round_dp=3) -> DataFrame:
 
     idx = _docs_index(spark, sf_dir)
     m = matches_df(spark, idx, SearchRequest(query=query))
-    out = fetch_docs(spark, idx, m, columns=["key"], bounded=False)
+    out = fetch_docs(spark, idx, m, columns=["key"])
     return out.select(
         F.col("key").cast("long").alias("doc_id"),
         F.round(F.col("score"), round_dp).alias("score"),
@@ -338,7 +338,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         idx = _docs_index(spark, sf_dir)
         m = matches_df(spark, idx, SearchRequest(query="window"))
-        out = fetch_docs(spark, idx, m, columns=["key"], bounded=False).select(
+        out = fetch_docs(spark, idx, m, columns=["key"]).select(
             F.col("key").cast("long").alias("doc_id")
         )
         d = _docs(spark, sf_dir).select("doc_id", "n_chars")
@@ -355,7 +355,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         idx = _docs_index(spark, sf_dir)
         m = matches_df(spark, idx, SearchRequest(query="spark"))
-        hits = fetch_docs(spark, idx, m, columns=["key"], bounded=False).select(
+        hits = fetch_docs(spark, idx, m, columns=["key"]).select(
             F.col("key").cast("long").alias("doc_id")
         )
         d = _docs(spark, sf_dir).select("doc_id", "n_chars")
@@ -385,7 +385,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         idx = _docs_index(spark, sf_dir)
         m = matches_df(spark, idx, SearchRequest(query="table"))
-        hits = fetch_docs(spark, idx, m, columns=["key"], bounded=False).select(
+        hits = fetch_docs(spark, idx, m, columns=["key"]).select(
             F.col("key").cast("long").alias("doc_id")
         )
         d = _docs(spark, sf_dir).select("doc_id", "n_chars")
@@ -428,7 +428,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         idx = _docs_index(spark, sf_dir)
         m = matches_df(spark, idx, SearchRequest(query="table"))
-        hits = fetch_docs(spark, idx, m, columns=["key"], bounded=False).select(
+        hits = fetch_docs(spark, idx, m, columns=["key"]).select(
             F.col("key").cast("long").alias("doc_id")
         )
         d = _docs(spark, sf_dir).select("doc_id", "n_chars")
@@ -465,7 +465,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         idx = _docs_index(spark, sf_dir)
         m = matches_df(spark, idx, SearchRequest(query="table"))
-        hits = fetch_docs(spark, idx, m, columns=["key"], bounded=False).select(
+        hits = fetch_docs(spark, idx, m, columns=["key"]).select(
             F.col("key").cast("long").alias("doc_id")
         )
         d = _docs(spark, sf_dir).select("doc_id", "n_chars")
@@ -1470,7 +1470,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         idx = _docs_index(spark, sf_dir)
         m = matches_df(spark, idx, SearchRequest(query="value"))
-        hits = fetch_docs(spark, idx, m, columns=["key"], bounded=False).select(
+        hits = fetch_docs(spark, idx, m, columns=["key"]).select(
             F.col("key").cast("long").alias("doc_id")
         )
         d = _docs(spark, sf_dir).select("doc_id", "lang", "n_chars")
@@ -1650,7 +1650,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         idx = _docs_index(spark, sf_dir)
         m = matches_df(spark, idx, SearchRequest(query="value"))
-        hits = fetch_docs(spark, idx, m, columns=["key"], bounded=False).select(
+        hits = fetch_docs(spark, idx, m, columns=["key"]).select(
             F.col("key").cast("long").alias("doc_id")
         )
         d = _docs(spark, sf_dir).select("doc_id", "lang", "source")

@@ -13,7 +13,7 @@ plan → pass → assembly):
 
     matching docs (operators/search.matches_df — no top-k)
       ⋈ docmap fast-field columns (shuffle join — the match set is
-        unbounded, never broadcast; fetch_docs bounded=False)
+        unbounded, never broadcast; fetch_docs)
       → groupingSets(one set per bucket expr: when-chains /
         floor(col/interval) / the terms value; + the empty set for
         the all-docs row)
@@ -64,15 +64,16 @@ _METRIC_AGGS = (
 _DEFAULT_PERCENTS = (1.0, 5.0, 25.0, 50.0, 75.0, 95.0, 99.0)
 
 
-def _metric_cols(name: str, spec: dict, col=None) -> list:
-    """Aggregate Columns for one metric spec. ``col`` overrides the
-    input column (the ``filters`` agg masks it with a predicate so a
-    filter bucket's sub-metrics ride the same shared pass)."""
+def _metric_cols(name: str, spec: dict, mask=None) -> list:
+    """Aggregate Columns for one metric spec. ``mask``: a ``filters``
+    bucket's predicate, so the bucket's sub-metrics ride the same
+    shared pass; the input is null outside the bucket."""
     (kind, body), = spec.items()
     if kind not in _METRIC_AGGS:
         raise ValueError(f"unsupported metric aggregation {kind!r}")
-    if col is None:
-        col = F.col(body["field"])
+    col = F.col(body["field"])
+    if mask is not None:
+        col = F.when(mask, col)
     if kind == "avg":
         return [F.avg(col).alias(f"{name}::avg")]
     if kind == "min":
@@ -118,11 +119,10 @@ def _metric_cols(name: str, spec: dict, col=None) -> list:
     if kind == "missing":
         # ES ``missing`` single-bucket agg: docs whose field is absent.
         # One conditional count inside the shared pass — never a
-        # second scan.
-        return [
-            F.count(F.when(col.isNull(), F.lit(1)))
-            .alias(f"{name}::missing")
-        ]
+        # second scan. A masked input is null outside the bucket too,
+        # so the mask applies to the count.
+        absent = col.isNull() if mask is None else mask & col.isNull()
+        return [F.count(F.when(absent, F.lit(1))).alias(f"{name}::missing")]
     # stats / extended_stats share the base five; extended adds the
     # sum of squares (natural column type: integer fields stay
     # integer-exact through Spark's bigint sum; double fields match
@@ -481,8 +481,7 @@ def _matched_docs(
         snap = get_searcher(spark, index_dir).snapshot()
     matches = matches_df(spark, index_dir, req, tables=snap)
     return fetch_docs(
-        spark, index_dir, matches, columns=columns, bounded=False,
-        docmap=snap["docmap"],
+        spark, index_dir, matches, columns=columns, docmap=snap["docmap"]
     )
 
 
@@ -491,7 +490,7 @@ def _sub_cells(
 ) -> list:
     """Aggregate cells of a spec's metric sub-aggs, named ``{prefix}{sub
     name}``; each sub's docmap columns join ``fields``. ``mask``: a
-    ``filters`` predicate that nulls the input outside its bucket.
+    ``filters`` bucket's predicate (``_metric_cols``).
     ``fetch``: ``top_hits`` subs are fetched per bucket after the pass,
     so they add columns but no cell."""
     cells = []
@@ -505,8 +504,7 @@ def _sub_cells(
                 "(buckets overlap)"
             )
         (_, sbody), = sspec.items()
-        col = None if mask is None else F.when(mask, F.col(sbody["field"]))
-        cells += _metric_cols(prefix + sname, sspec, col=col)
+        cells += _metric_cols(prefix + sname, sspec, mask=mask)
         fields.add(sbody["field"])
     return cells
 

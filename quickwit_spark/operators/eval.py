@@ -1,7 +1,7 @@
 """Pure-numpy per-split query evaluation (Term/Bool/Phrase + BM25).
 
-This is the compute kernel the Spark search path runs inside an
-Arrow-batched ``applyInPandas`` per split — and, being pure, what the
+This is the compute kernel the leaf runs per split, in the driver or
+in an executor's ``mapInPandas`` task — and, being pure, what the
 unit tests exercise directly. Capability map (SURVEY.md §2.6):
 
 - term / boolean (conjunction, disjunction, exclusion) / phrase

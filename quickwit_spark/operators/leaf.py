@@ -1,19 +1,26 @@
 """The leaf: one split's scanned rows → its leaf response (its first
 ``k`` hits after the keyset cursor, in rank order, and its exact
-num_hits), run either on an executor (the cogroup ``applyInPandas`` of
-operators/search.py) or in the driver for small fan-out
-(``search_in_process``); and ``merge_hits``, the one merge of leaf
-responses both routes run. The rank key and the keyset predicate live
-here only. Both routes decode a split with ``split_context`` and run
-``evaluate_leaf`` with the same flags, so they return the same hits,
-f32 scores and counts. Only the read differs:
+num_hits), and ``merge_hits``, the one merge of leaf responses. The
+rank key and the keyset predicate live here only.
 
-- on an executor, Spark's partition-pruned, predicate-pushed parquet
-  scan feeds the cogroup;
-- in the driver, ``SnapshotFiles`` maps each split to the same files:
-  ``DataFrame.inputFiles()`` of the snapshot's own tables, so an
-  in-process request reads exactly the files a Spark request on that
-  snapshot would.
+One leaf, two placements. ``evaluate_splits`` evaluates a batch of
+splits (``evaluate_leaf`` per split) and merges their responses; both
+placements call it with the same request, so they return the same
+hits, f32 scores and counts. Only the read of each split's posting and
+fast-field rows differs:
+
+- in the driver (``search_in_process``), a ``HOTCACHE`` pick: small
+  fan-out, no Spark job;
+- on an executor (``search_split_files``, the task of the split-list
+  ``mapInPandas`` in operators/search.py), one pyarrow filtered scan of
+  the task's splits' files (``scan_splits``).
+
+Both read the files ``SnapshotFiles`` maps each split to:
+``DataFrame.inputFiles()`` of the snapshot's own tables, so either
+placement reads exactly the files of its snapshot. Executors keep no
+cache: a split's postings are one file (the build repartitions by
+``split_id``), so a whole-file load would grow with the split, while
+the filtered scan reads only the row groups of the query's terms.
 
 The split hotcache (``HOTCACHE``, the reference's split footer and
 fast-field caches, leaf.rs:47-55, config.rs:119-125) keeps postings
@@ -81,9 +88,9 @@ _FORMAT = ds.ParquetFileFormat()
 #: ``search.LEAF_MAX_DOCS``, a module constant, not a setting.
 HOTCACHE_MAX_BYTES = 1 << 30
 
-#: A leaf response as rows (the cogroup's and its fold's output): hits
-#: in rank order with ``num_hits`` 0, then a count row (``doc_id`` -1,
-#: none for ``emit_all``) carrying the num_hits. ``sort_long`` is the
+#: A leaf response as rows (an executor task's output): hits in rank
+#: order with ``num_hits`` 0, then a count row (``doc_id`` -1, none
+#: for ``emit_all``) carrying the num_hits. ``sort_long`` is the
 #: exact int64 sort value (float64 ``score`` rounds |v| > 2^53).
 HITS_SCHEMA = (
     "split_id int, doc_id long, score double, sort_long long, num_hits long"
@@ -93,7 +100,8 @@ HITS_SCHEMA = (
 @dataclass(frozen=True)
 class LeafRequest:
     """One request's per-split evaluation, planned on the driver. It is
-    pickled into the cogroup closure, so it holds plain data only."""
+    pickled into the executor task's closure, so it holds plain data
+    only."""
 
     ast: object
     infos: dict  # split_id → {"num_docs", "total_tokens", "inside"}
@@ -111,18 +119,14 @@ class LeafRequest:
     after: tuple | None = None  # keyset cursor (sort value, split_id, doc_id)
 
 
-def _columns(table, names) -> list[list]:
-    """Python column lists of a pandas DataFrame or a pyarrow Table."""
-    if isinstance(table, pd.DataFrame):
-        return [table[n].tolist() for n in names]
+def _columns(table: pa.Table, names) -> list[list]:
     return [table.column(n).to_pylist() for n in names]
 
 
 def split_context(lreq: LeafRequest, split_id: int, postings, fastfields):
-    """Decode one split's posting and fast-field rows (pandas DataFrames
-    on the cogroup path, pyarrow Tables in process; ``postings`` None
-    when the split has no posting rows) into the evaluator's inputs →
-    ``(SplitContext, sort_values)``."""
+    """Decode one split's posting and fast-field rows (pyarrow Tables;
+    ``postings`` None when the split has no posting rows) into the
+    evaluator's inputs → ``(SplitContext, sort_values)``."""
     info = lreq.infos[split_id]
     norms = {}
     ts_arr = None
@@ -154,10 +158,7 @@ def evaluate_leaf(lreq: LeafRequest, split_id: int, postings, fastfields):
     """One split's leaf response ``(doc_ids, sort values, num_hits)``:
     its first ``k`` matches after ``lreq.after`` in rank order (all for
     ``emit_all``), and the count of all its matches, also when none is
-    kept. A split with no fast-field rows (the cogroup side carrying
-    the norms) is not evaluated: no hits, count 0."""
-    if split_id not in lreq.infos or fastfields is None or len(fastfields) == 0:
-        return np.empty(0, np.int64), np.empty(0), 0
+    kept."""
     ctx, sort_vals = split_context(lreq, split_id, postings, fastfields)
     docs, vals, num_hits = evaluate_split(
         ctx,
@@ -205,16 +206,20 @@ def _rank(lreq: LeafRequest, split_ids, docs, vals) -> np.ndarray:
 def merge_hits(lreq: LeafRequest, responses) -> tuple:
     """Leaf responses ``(split_ids, doc_ids, vals, num_hits)`` → one
     of the same shape: the first ``lreq.k`` hits over all of them in
-    rank order, and the summed num_hits. A merged response merges
-    again, so the cogroup folds per partition and then in the driver."""
+    rank order, and the summed num_hits; for ``emit_all``, every hit,
+    unranked. A merged response merges again, so each executor task
+    merges its splits and the driver merges the tasks."""
     dtype = np.float64 if lreq.sort_field is None else np.int64
     responses = list(responses)
     sids, docs, vals = (
         np.concatenate([np.empty(0, t), *(r[i] for r in responses)]).astype(t)
         for i, t in enumerate((np.int32, np.int64, dtype))
     )
+    num_hits = sum(int(r[3]) for r in responses)
+    if lreq.emit_all:
+        return sids, docs, vals, num_hits
     top = _rank(lreq, sids, docs, vals)[: lreq.k]
-    return sids[top], docs[top], vals[top], sum(int(r[3]) for r in responses)
+    return sids[top], docs[top], vals[top], num_hits
 
 
 def hit_page(split_ids, doc_ids, vals, exact: bool) -> pd.DataFrame:
@@ -417,43 +422,68 @@ class SnapshotFiles:
         with self._lock:
             frag = self._fragments.get(uri)
         if frag is None:
-            fs, path = pafs.FileSystem.from_uri(uri)
-            frag = _FORMAT.make_fragment(
-                path, filesystem=fs,
-                partition_expression=ds.field("split_id") == split_id,
-            )
+            frag = split_fragment(uri, split_id)
             frag.ensure_complete_metadata()  # reads the footer once
             with self._lock:
                 frag = self._fragments.setdefault(uri, frag)
         return frag
 
     def scan(self, table: str, split_ids, filter) -> dict[int, pa.Table]:
-        """split_id → that split's rows of ``table`` matching
-        ``filter``, for the splits that have any. One pyarrow scan over
-        the splits' files, in parallel, row groups pruned on the cached
-        footer statistics."""
+        """``scan_splits`` of the splits' ``table`` files, row groups
+        pruned on the cached footer statistics."""
         by_split = self.files(table)
-        frags = [
-            self._fragment(uri, sid)
-            for sid in split_ids
-            for uri in by_split.get(sid, ())
-        ]
-        if not frags:
-            return {}
-        schema = pa.unify_schemas([f.physical_schema for f in frags])
-        tbl = ds.FileSystemDataset(
-            frags, schema.append(pa.field("split_id", pa.int32())), _FORMAT,
-            frags[0].filesystem,
-        ).to_table(filter=filter)
-        if tbl.num_rows == 0:
-            return {}
-        tbl = tbl.sort_by("split_id")
-        sids = tbl.column("split_id").to_numpy()
-        starts = np.flatnonzero(np.r_[True, sids[1:] != sids[:-1]])
-        ends = np.r_[starts[1:], sids.size]
-        return {
-            int(sids[lo]): tbl.slice(lo, hi - lo) for lo, hi in zip(starts, ends)
-        }
+        return scan_splits(
+            [self._fragment(uri, sid) for sid in split_ids
+             for uri in by_split.get(sid, ())],
+            filter,
+        )
+
+
+def split_fragment(uri: str, split_id: int) -> ds.ParquetFileFragment:
+    """One split file as a pyarrow fragment carrying its ``split_id``."""
+    fs, path = pafs.FileSystem.from_uri(uri)
+    return _FORMAT.make_fragment(
+        path, filesystem=fs, partition_expression=ds.field("split_id") == split_id,
+    )
+
+
+def scan_splits(frags, filter, columns=None) -> dict[int, pa.Table]:
+    """split_id → that split's rows of the ``split_fragment`` s
+    ``frags`` matching ``filter`` (``columns`` of them, all when None),
+    for the splits that have any: one pyarrow scan, in parallel."""
+    if not frags:
+        return {}
+    schema = pa.unify_schemas([f.physical_schema for f in frags])
+    tbl = ds.FileSystemDataset(
+        frags, schema.append(pa.field("split_id", pa.int32())), _FORMAT,
+        frags[0].filesystem,
+    ).to_table(
+        filter=filter, columns=None if columns is None else [*columns, "split_id"],
+    )
+    if tbl.num_rows == 0:
+        return {}
+    tbl = tbl.sort_by("split_id")
+    sids = tbl.column("split_id").to_numpy()
+    starts = np.flatnonzero(np.r_[True, sids[1:] != sids[:-1]])
+    ends = np.r_[starts[1:], sids.size]
+    return {
+        int(sids[lo]): tbl.slice(lo, hi - lo) for lo, hi in zip(starts, ends)
+    }
+
+
+def evaluate_splits(lreq: LeafRequest, postings: dict, fastfields: dict) -> tuple:
+    """The leaf of both placements: each split of ``fastfields``
+    (split_id → its ``name IN ff_names`` fast-field rows) evaluated with
+    its ``postings`` (split_id → its ``field IN fields AND term IN
+    terms`` posting rows), and their responses merged → one leaf
+    response (``merge_hits``). A split without fast-field rows has no
+    norms to score with: it answers no hit and counts 0, so it is left
+    out; one without posting rows matches nothing but still counts."""
+    responses = []
+    for sid in sorted(fastfields):
+        docs, vals, num_hits = evaluate_leaf(lreq, sid, postings.get(sid), fastfields[sid])
+        responses.append((np.full(docs.size, sid, np.int32), docs, vals, num_hits))
+    return merge_hits(lreq, responses)
 
 
 def _pick(files: list[CachedFile], rows_of) -> pa.Table | None:
@@ -467,12 +497,8 @@ def _pick(files: list[CachedFile], rows_of) -> pa.Table | None:
 
 
 def search_in_process(files: SnapshotFiles, lreq: LeafRequest) -> tuple:
-    """Read and evaluate every split of ``lreq`` in the driver and
-    merge their responses → one leaf response (``merge_hits``).
-
-    Each split gets the rows the cogroup's scan would give it —
-    ``field IN fields AND term IN terms`` postings, ``name IN
-    ff_names`` fast fields — picked from ``HOTCACHE`` by index."""
+    """The driver placement: ``evaluate_splits`` over every split of
+    ``lreq``, each split's rows picked from ``HOTCACHE`` by index."""
 
     def ff_rows(rows: dict) -> list[int]:
         return [r for n in lreq.ff_names if (r := rows.get(n)) is not None]
@@ -486,16 +512,36 @@ def search_in_process(files: SnapshotFiles, lreq: LeafRequest) -> tuple:
             if (r := by_term.get(t)) is not None
         ]
 
-    sids = sorted(lreq.infos)
-    ff_files = files.cached("fastfields", sids)
-    post_files = files.cached("postings", sids)
-    responses = []
-    for sid in sids:
-        ff = _pick(ff_files.get(sid, []), ff_rows)
-        post = _pick(post_files.get(sid, []), posting_rows)
-        docs, vals, num_hits = evaluate_leaf(lreq, sid, post, ff)
-        responses.append((np.full(docs.size, sid, np.int32), docs, vals, num_hits))
-    return merge_hits(lreq, responses)
+    def picked(table: str, rows_of) -> dict:
+        tables = {
+            sid: _pick(cached, rows_of)
+            for sid, cached in files.cached(table, sorted(lreq.infos)).items()
+        }
+        return {sid: t for sid, t in tables.items() if t is not None}
+
+    return evaluate_splits(
+        lreq, picked("postings", posting_rows), picked("fastfields", ff_rows)
+    )
+
+
+def search_split_files(lreq: LeafRequest, split_files) -> tuple:
+    """The executor placement: ``evaluate_splits`` over the splits of
+    ``split_files`` (``(split_id, postings URIs, fast-fields URIs)``
+    each), their rows read by one filtered pyarrow scan per table."""
+
+    def isin(name: str, values) -> ds.Expression:
+        return ds.field(name).isin(pa.array(list(values), pa.string()))
+
+    post = [split_fragment(u, sid) for sid, uris, _ in split_files for u in uris]
+    ff = [split_fragment(u, sid) for sid, _, uris in split_files for u in uris]
+    return evaluate_splits(
+        lreq,
+        scan_splits(
+            post, isin("field", lreq.fields) & isin("term", lreq.terms),
+            POSTING_COLUMNS,
+        ),
+        scan_splits(ff, isin("name", lreq.ff_names), FASTFIELD_COLUMNS),
+    )
 
 
 # ---------------------------------------------------------------- fetch

@@ -1,4 +1,5 @@
-"""Search: the root/leaf lifecycle, one top-k core on two leaf routes.
+"""Search: the root/leaf lifecycle, one top-k core, one leaf in two
+placements.
 
 Reference lifecycle (SURVEY.md §3.1): root parses + prunes splits →
 leaf per split opens the needed posting lists + fast fields only →
@@ -7,44 +8,48 @@ top-k entry point here — ``search_with_count`` (the REST core, with or
 without a ``searchAfter`` cursor), ``search_df``, ``search_after_df``
 and ``count_hits`` — takes the same three steps (``_top_k``): the
 driver parses the query and prunes splits from the metastore, no data
-touched, into a ``LeafRequest`` (``_plan``); each kept split reads
-ONLY the query's (field, term) posting rows and the fast fields it
-needs and answers its leaf response (``leaf.evaluate_leaf``); the
-responses merge into the page and the summed count
-(``leaf.merge_hits``, collector.rs:306-398), the offset applied after
-the merge (root.rs:305-320). ``_runs_in_process`` alone picks where
-the leaf runs:
+touched, into a ``LeafRequest`` (``_plan``); the leaf reads each kept
+split's query rows — ``(field, term)`` postings and the fast fields it
+needs — and evaluates and merges them (``leaf.evaluate_splits``); the
+driver merges into the page and the summed count (``leaf.merge_hits``,
+collector.rs:306-398), the offset applied after the merge
+(root.rs:305-320). ``_runs_in_process`` alone picks where the leaf
+runs; only the read differs:
 
 * **in process** (``leaf.search_in_process``) when the splits kept by
   pruning hold at most ``LEAF_MAX_DOCS`` docs and number at most
-  ``LEAF_MAX_SPLITS``: the snapshot's own postings and fast-fields
-  files, held in driver memory by the split hotcache (``leaf.HOTCACHE``,
-  leaf.rs:47-55), the kernel per split in the driver. No Spark job;
-* **on Spark**: one scan with partition pruning + predicate pushdown
-  on the term-sorted parquet feeds a cogrouped ``applyInPandas`` per
-  split, a ``mapInPandas`` fold merges each partition's responses, and
-  one ``collect`` brings at most partitions × (k+offset) rows to the
-  driver's merge. No persist, no global sort, no second count pass.
+  ``LEAF_MAX_SPLITS``: rows picked from the split hotcache
+  (``leaf.HOTCACHE``, leaf.rs:47-55), which holds the snapshot's
+  postings and fast-fields files in driver memory. No Spark job;
+* **on executors** (``_leaf_df``): a split list, ``spark.range`` over
+  the kept splits with at most one partition per core, whose
+  ``mapInPandas`` task reads its splits' rows with one filtered
+  pyarrow scan (``leaf.search_split_files``) and answers their merged
+  response; one ``toPandas`` brings one response per task to the
+  driver's merge. One Spark job: no shuffle, no persist, no second
+  count pass (leaf.rs:240-292: each leaf opens its own splits).
 
 ``search_df`` and ``search_after_df`` are eager: they wrap the merged
 page with ``createDataFrame`` (a non-empty pandas page runs no Spark
 job to build or collect). Aggregations and stream export read every
-match through ``matches_df``, a lazy cogroup with ``emit_all``. A
-page's docs are read in process (``leaf.fetch_rows``, inside
-``search_with_count``) or broadcast-joined to the docmap
-(``fetch_docs``, fetch_docs.rs:97-125 analogue).
+match through ``matches_df``, the executor placement with ``emit_all``,
+kept lazy. A page's docs are read in process (``leaf.fetch_rows``, for
+``search_with_count`` and ``search``); every match's docs are joined to
+the docmap (``fetch_docs``, fetch_docs.rs:97-125 analogue).
 
 Routing. ``search_endpoint`` p50 over the 8 bench.py query shapes on a
 4-core host, in process vs Spark, with 1 and with 8 closed-loop
-clients (measured before the cogroup became one fold and one collect):
+clients. The Spark ×1 rows at 8, 64 and 256 splits are new: the
+executor placement, warm, 5 rounds. The other Spark cells were
+measured on the earlier cogroup route, which ran 3 jobs per request:
 
 ======  ==========  ==========  ========  ==========  ========
 splits  docs/split  process ×1  Spark ×1  process ×8  Spark ×8
 ======  ==========  ==========  ========  ==========  ========
 4       50 000      121 ms      830 ms    655 ms      3493 ms
-8       750         30 ms       1238 ms   188 ms      4902 ms
-64      750         108 ms      935 ms    723 ms      5879 ms
-256     375         318 ms      1843 ms   2096 ms     9257 ms
+8       750         30 ms       328 ms    188 ms      4902 ms
+64      750         108 ms      393 ms    723 ms      5879 ms
+256     375         318 ms      512 ms    2096 ms     9257 ms
 ======  ==========  ==========  ========  ==========  ========
 
 The in-process path won at every size measured, also under 8 clients,
@@ -52,8 +57,10 @@ where it serializes on the driver's GIL (8 clients at 200 000 docs:
 11.3 vs 2.3 requests/s). Its cost grows with the pruned docs
 (~0.4 µs/doc, and 8 B/doc of ``ts_`` plus 1 B/doc per queried field's
 norms held in driver memory) and with the split count (~1.3 ms/split);
-Spark spreads the per-doc part over its cores. So no crossover was
-found, and the limits are the largest sizes measured —
+executors spread the per-doc part over the cores, but each request
+pays Spark's per-task floor (~330 ms here). So no crossover was
+found (8 clients were not re-measured on executors), and the limits
+are the largest sizes measured —
 ``LEAF_MAX_DOCS`` = 200 000 pruned docs, ``LEAF_MAX_SPLITS`` = 256
 pruned splits — not extrapolated further.
 """
@@ -67,18 +74,19 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from quickwit_spark.operators.leaf import (
     HITS_SCHEMA,
     LeafRequest,
     SnapshotFiles,
-    evaluate_leaf,
     fetch_rows,
-    rows_to_response,
     hit_page,
     merge_hits,
     response_to_rows,
+    rows_to_response,
     search_in_process,
+    search_split_files,
 )
 from quickwit_spark.plans.metastore import open_metastore
 from quickwit_spark.plans.parser import parse_query, query_terms, resolve_query
@@ -195,74 +203,6 @@ def _split_infos(splits, config, start_micros, end_micros):
     }
 
 
-#: above this many contiguous id runs, a literal predicate stops
-#: paying for itself — switch to a broadcast semi-join (runtime
-#: partition pruning instead of a 10^5-literal In-list in the plan)
-_MAX_SPLIT_ID_RUNS = 64
-
-
-def _split_id_runs(split_ids) -> list[tuple[int, int]]:
-    """Sorted unique ids → maximal contiguous [lo, hi] runs."""
-    a = np.unique(np.asarray(list(split_ids), dtype=np.int64))
-    if a.size == 0:
-        return []
-    breaks = np.flatnonzero(np.diff(a) > 1)
-    starts = np.concatenate(([0], breaks + 1))
-    ends = np.concatenate((breaks, [a.size - 1]))
-    return [(int(a[s]), int(a[e])) for s, e in zip(starts, ends)]
-
-
-def filter_split_ids(df: DataFrame, split_ids) -> DataFrame:
-    """Restrict a split-partitioned scan to the pruned id set in a
-    form that survives web scale (a hot query can keep 10^4-10^5 of
-    ~10^5 splits after pruning):
-
-    - split ids are dense ints, so the set compresses to a handful of
-      contiguous runs → OR of BETWEEN range predicates, constant plan
-      size, statically partition-prunable;
-    - a genuinely fragmented large set (> _MAX_SPLIT_ID_RUNS runs)
-      becomes a broadcast LEFT SEMI join against a tiny id DataFrame —
-      dynamic partition pruning does the scan-side work instead of a
-      giant In-list bloating plan serialization and the parquet filter.
-    """
-    runs = _split_id_runs(split_ids)
-    if not runs:
-        return df.filter(F.lit(False))
-    if len(runs) <= _MAX_SPLIT_ID_RUNS:
-        pred = F.col("split_id").between(runs[0][0], runs[0][1])
-        for lo, hi in runs[1:]:
-            pred = pred | F.col("split_id").between(lo, hi)
-        return df.filter(pred)
-    ids_df = df.sparkSession.createDataFrame(
-        [(int(i),) for i in sorted(set(int(x) for x in split_ids))],
-        "split_id int",
-    )
-    return df.join(F.broadcast(ids_df), "split_id", "left_semi")
-
-
-def _make_evaluator(lreq: LeafRequest):
-    """Closure run per split by applyInPandas: the split's leaf
-    response as ``HITS_SCHEMA`` rows."""
-
-    def evaluate(key, postings_pdf: pd.DataFrame, ff_pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = int(key[0])
-        docs, vals, num_hits = evaluate_leaf(lreq, sid, postings_pdf, ff_pdf)
-        return response_to_rows(lreq, (np.full(docs.size, sid), docs, vals, num_hits))
-
-    return evaluate
-
-
-def _make_fold(lreq: LeafRequest):
-    """Closure run per partition by mapInPandas: the partition's leaf
-    responses merged into one."""
-
-    def fold(frames):
-        merged = merge_hits(lreq, (rows_to_response(lreq, f) for f in frames))
-        yield response_to_rows(lreq, merged)
-
-    return fold
-
-
 def _plan(
     config,
     req: SearchRequest,
@@ -331,22 +271,23 @@ def _plan(
     )
 
 
-def _cogroup(tables: dict, lreq: LeafRequest) -> DataFrame:
-    """The Spark leaf: pruned scans of postings + fastfields, both from
-    the one snapshot ``tables``, cogrouped into one ``applyInPandas``
-    task per split."""
-    sids = sorted(lreq.infos)
-    postings = filter_split_ids(tables["postings"], sids).filter(
-        F.col("field").isin(list(lreq.fields))
-        & F.col("term").isin(list(lreq.terms))
-    )
-    fastfields = filter_split_ids(tables["fastfields"], sids).filter(
-        F.col("name").isin(list(lreq.ff_names))
-    )
-    return (
-        postings.groupBy("split_id")
-        .cogroup(fastfields.groupBy("split_id"))
-        .applyInPandas(_make_evaluator(lreq), HITS_SCHEMA)
+def _leaf_df(spark: SparkSession, tables: dict, lreq: LeafRequest) -> DataFrame:
+    """The executor placement: a split list (``spark.range`` over the
+    kept splits, at most one partition per core) whose ``mapInPandas``
+    task answers its splits' merged leaf response as ``HITS_SCHEMA``
+    rows (``leaf.search_split_files``). The closure carries each kept
+    split's postings and fast-fields files from the snapshot ``tables``."""
+    files = tables["files"]
+    post, ff = files.files("postings"), files.files("fastfields")
+    splits = [(sid, post.get(sid, []), ff.get(sid, [])) for sid in sorted(lreq.infos)]
+
+    def leaf_task(batches):
+        mine = [splits[i] for batch in batches for i in batch["id"].tolist()]
+        yield response_to_rows(lreq, search_split_files(lreq, mine))
+
+    parts = min(len(splits), spark.sparkContext.defaultParallelism)
+    return spark.range(len(splits), numPartitions=parts).mapInPandas(
+        leaf_task, HITS_SCHEMA
     )
 
 
@@ -381,11 +322,7 @@ def _top_k(
     if _runs_in_process(lreq):
         sids, docs, vals, total = search_in_process(tables["files"], lreq)
     else:
-        rows = (
-            _cogroup(tables, lreq)
-            .mapInPandas(_make_fold(lreq), HITS_SCHEMA)
-            .toPandas()
-        )
+        rows = _leaf_df(spark, tables, lreq).toPandas()
         sids, docs, vals, total = merge_hits(lreq, [rows_to_response(lreq, rows)])
     skip = req.offset if after is None else 0
     return sids[skip:], docs[skip:], vals[skip:], total
@@ -519,7 +456,7 @@ def count_hits(spark: SparkSession, index_dir: str, req: SearchRequest) -> int:
 
 #: A top-k request evaluates in the driver when the splits kept by
 #: pruning hold at most this many docs in all, and number at most
-#: ``LEAF_MAX_SPLITS``; on the Spark cogroup path otherwise. Both are
+#: ``LEAF_MAX_SPLITS``; on executors otherwise. Both are
 #: the largest sizes measured (module docstring), not a crossover.
 LEAF_MAX_DOCS = 200_000
 LEAF_MAX_SPLITS = 256
@@ -572,7 +509,7 @@ def matches_df(
     )
     if lreq is None:
         return spark.createDataFrame([], "split_id int, doc_id long, score double")
-    return _cogroup(tables, lreq).select("split_id", "doc_id", "score")
+    return _leaf_df(spark, tables, lreq).select("split_id", "doc_id", "score")
 
 
 def fetch_docs(
@@ -580,21 +517,19 @@ def fetch_docs(
     index_dir: str,
     hits: DataFrame,
     columns: list[str] | None = None,
-    bounded: bool = True,
     docmap: DataFrame | None = None,
 ) -> DataFrame:
     """Materialize hits by joining their keys back to the docmap
-    (fetch_docs.rs analogue).
-
-    ``bounded=True`` (the top-k path): the hit set is ≤ k+offset rows,
-    so broadcast it to every docmap partition — no shuffle of the doc
-    store. ``bounded=False`` (the search_stream / aggregation path):
-    the hit set is EVERY matching doc — at web scale that's billions
-    of rows, so it must NOT be broadcast; use a plain equi-join and
-    let Spark shuffle on (split_id, doc_id) (or auto-broadcast when
-    the runtime size happens to be small — AQE's call, not a hint).
-    The reference never centralizes this set either: search_stream
-    leaves stream their own split's matches (leaf.rs:119-255).
+    (fetch_docs.rs analogue) — the search_stream / aggregation path,
+    where the hit set is EVERY matching doc. At web scale that is
+    billions of rows, so it is never broadcast: the join is hinted to
+    a sort-merge join on (split_id, doc_id), because the static size
+    estimate of ``matches_df`` is its split list's (a few bytes), and
+    without the hint Spark would broadcast the matches whatever their
+    real size. The reference never centralizes this set either:
+    search_stream leaves stream their own split's matches
+    (leaf.rs:119-255). A top-k page reads its docs in process instead
+    (``leaf.fetch_rows``).
 
     ``docmap``: pass the docmap from the SAME ``Searcher.snapshot()``
     that produced ``hits`` — resolving it here (the fallback) opens a
@@ -604,8 +539,7 @@ def fetch_docs(
         docmap = get_searcher(spark, index_dir).table("docmap")
     if columns:
         docmap = docmap.select("split_id", "doc_id", *columns)
-    right = F.broadcast(hits) if bounded else hits
-    return docmap.join(right, ["split_id", "doc_id"], "inner")
+    return docmap.join(hits.hint("merge"), ["split_id", "doc_id"], "inner")
 
 
 def search(
@@ -622,13 +556,17 @@ def search(
     came from another field)."""
     req = SearchRequest(query=query, k=k, **kwargs)
     snap = get_searcher(spark, index_dir).snapshot()
-    page = _page(req, _top_k(spark, index_dir, req, snap, count_exact=False))
-    # the page's rank rides along the join: the join keeps no order
-    hits = spark.createDataFrame(
-        page.assign(_rank=np.arange(len(page), dtype=np.int32)),
-        _PAGE_SCHEMA + ", _rank int",
+    hits = _top_k(spark, index_dir, req, snap, count_exact=False)
+    docmap = snap["files"].docmap_schema()
+    schema = T.StructType([
+        docmap["split_id"], docmap["doc_id"],
+        *(f for f in docmap.fields if f.name not in ("split_id", "doc_id")),
+        T.StructField("score", T.DoubleType()),
+        T.StructField("sort_long", T.LongType()),
+    ])
+    out = spark.createDataFrame(
+        fetch_rows(snap["files"], hits, req.sort_field is not None), schema
     )
-    out = fetch_docs(spark, index_dir, hits, docmap=snap["docmap"])
     if highlight:
         config = open_metastore(index_dir).config()
         fld = (req.search_fields or config.default_search_fields)[0]
@@ -649,4 +587,4 @@ def search(
             highlight_terms(config, query, req.search_fields, field=fld),
             text_col="__hl_text",
         ).drop("__hl_text")
-    return out.orderBy("_rank").drop("_rank")
+    return out

@@ -1287,6 +1287,52 @@ def test_absent_row_metric_shapes(spark, absent_row_index, context):
     assert {k: got[k] for k in _ABSENT_METRICS} == expected
 
 
+def test_missing_under_filters_counts_only_its_bucket(spark, tmp_path):
+    """A ``missing`` sub-agg under a ``filters`` bucket counts the
+    bucket's docs that lack the field, not the docs outside the bucket
+    (pandas oracle; the buckets hold docs with and without ``v``)."""
+    from quickwit_spark.operators.aggregations import run_aggregations
+    from quickwit_spark.operators.build import build_index
+    from quickwit_spark.operators.search import SearchRequest
+    from quickwit_spark.plans.config import webpages_config
+    from quickwit_spark.sources.corpus import gen_batch
+
+    pdf = gen_batch(np.arange(24), seed=5)
+    pdf["text"] = [f"the doc {i}" for i in range(24)]  # all match "the"
+    pdf["x"] = np.arange(24) * 10
+    pdf["v"] = [None if i % 3 == 0 else float(i) for i in range(24)]
+    idx = str(tmp_path / "idx")
+    build_index(
+        spark, spark.createDataFrame(pdf), idx,
+        webpages_config(fast_fields=("warc_ts", "lang", "x", "v")),
+        num_splits=2,
+    )
+    filters = {
+        "low": {"range": {"field": "x", "to": 100}},
+        "one": {"term": {"field": "x", "value": 10}},
+        "null_one": {"term": {"field": "x", "value": 30}},
+        "all": {"match_all": {}},
+    }
+    res = run_aggregations(spark, idx, SearchRequest(query="the"), {"f": {
+        "filters": {"filters": filters},
+        "aggs": {"m": {"missing": {"field": "v"}},
+                 "n": {"value_count": {"field": "v"}}},
+    }})
+    inside = {
+        "low": pdf["x"] < 100, "one": pdf["x"] == 10,
+        "null_one": pdf["x"] == 30, "all": pdf["x"] >= 0,
+    }
+    for name, rows in inside.items():
+        v = pdf.loc[rows, "v"]
+        assert 0 < len(v) < len(pdf) or name == "all"
+        got = res["f"]["buckets"][name]
+        assert got["doc_count"] == len(v), name
+        assert got["m"] == {"doc_count": int(v.isna().sum())}, name
+        assert got["n"] == {"value": int(v.notna().sum())}, name
+    low = pdf.loc[inside["low"], "v"]
+    assert low.isna().any() and low.notna().any()
+
+
 def test_top_hits_under_range_and_date_histogram(
     spark, built_index, oracle_index
 ):

@@ -1,8 +1,9 @@
-"""The in-process leaf (operators/leaf.py) against the Spark cogroup
-path and the oracle: byte-identical REST bodies (``searchAfter`` pages
-included), routing of every top-k entry point, zero Spark jobs on
-small fan-out, snapshot safety of its direct file reads, and the split
-hotcache's invalidation, byte cap and cold-start races."""
+"""The leaf's two placements (operators/leaf.py), in the driver and
+on executors, against each other and the oracle: byte-identical REST
+bodies (``searchAfter`` pages included), routing of every top-k entry
+point, zero Spark jobs on small fan-out and one on wide fan-out,
+snapshot safety of the direct file reads, and the split hotcache's
+invalidation, byte cap and cold-start races."""
 
 from __future__ import annotations
 
@@ -244,7 +245,7 @@ def test_small_fanout_runs_no_spark_job_and_wider_requests_do(
 
     aggs = json.dumps({"langs": {"terms": {"field": "lang"}}})
     resp, jobs = call({"query": "word", "maxHits": 5, "aggregations": aggs})
-    assert jobs  # the aggregation runs on the cogroup path
+    assert jobs  # the aggregation runs on executors
     ok(resp, "word", 5)
     lang_of = {r["url"]: r["lang"] for r in corpus_rows}
     want = {}
@@ -278,18 +279,18 @@ def test_small_fanout_runs_no_spark_job_and_wider_requests_do(
     assert other_entry_points() == ([], [])
 
     # routing: a page over more pruned docs, or more pruned splits,
-    # than the in-process limits takes the cogroup path
+    # than the in-process limits runs on executors, in one Spark job
     n_docs = len(corpus_rows)
     for limit, value in (("LEAF_MAX_DOCS", n_docs - 1), ("LEAF_MAX_SPLITS", 2)):
         with monkeypatch.context() as m:
             m.setattr(search_mod, limit, value)  # the index has 3 splits
             resp, jobs = call({"query": "word hot", "maxHits": 5, "startOffset": 2})
-            assert jobs, limit
+            assert len(jobs) == 1, limit
             ok(resp, "word hot", 5, offset=2)
             resp, jobs = call(after)
-            assert jobs, limit
+            assert len(jobs) == 1, limit
             ok(resp, "word", 4, offset=4)
-            assert all(other_entry_points()), limit
+            assert [len(j) for j in other_entry_points()] == [1, 1], limit
     resp, jobs = call({"query": "word hot", "maxHits": 5, "startOffset": 2})
     assert jobs == []
     ok(resp, "word hot", 5, offset=2)
@@ -372,30 +373,39 @@ def test_leaf_reads_only_the_snapshot_files_across_a_merge(
 def test_file_removed_by_gc_is_an_http_error(
     spark, corpus_rows, tmp_path_factory, monkeypatch, warm
 ):
-    idx = _fresh_index(spark, corpus_rows, tmp_path_factory, f"leaf_gc_{warm}")
-    root, index_id = os.path.split(idx)
-    srv = serve_mod.serve(spark, root, port=0)
-    url = (
-        f"http://127.0.0.1:{srv.server_address[1]}/api/v1/{index_id}/search?"
-        + urllib.parse.urlencode({"query": "word hot", "maxHits": 10})
-    )
-    try:
-        if warm:  # the snapshot's footer cache already holds every file
-            with urllib.request.urlopen(url) as r:
-                assert r.status == 200
-        pre = [s.split_id for s in open_metastore(idx).list_published()]
+    # on each placement: the driver's reads (hotcache and docmap) and
+    # the executors' scans fail the request, never answer a subset
+    for placement in ("in_process", "executor"):
+        idx = _fresh_index(
+            spark, corpus_rows, tmp_path_factory, f"leaf_gc_{warm}_{placement}"
+        )
+        root, index_id = os.path.split(idx)
+        srv = serve_mod.serve(spark, root, port=0)
+        url = (
+            f"http://127.0.0.1:{srv.server_address[1]}/api/v1/{index_id}/search?"
+            + urllib.parse.urlencode({"query": "word hot", "maxHits": 10})
+        )
+        try:
+            with monkeypatch.context() as m:
+                if placement == "executor":
+                    m.setattr(search_mod, "LEAF_MAX_SPLITS", 0)
+                if warm:  # the snapshot's caches already hold every file
+                    with urllib.request.urlopen(url) as r:
+                        assert r.status == 200
+                pre = [s.split_id for s in open_metastore(idx).list_published()]
 
-        def merge_and_gc():
-            merge_splits(spark, idx, pre)
-            assert sorted(garbage_collect(idx, grace=False)) == sorted(pre)
+                def merge_and_gc():
+                    merge_splits(spark, idx, pre)
+                    assert sorted(garbage_collect(idx, grace=False)) == sorted(pre)
 
-        _after_first_snapshot(monkeypatch, merge_and_gc)
-        with pytest.raises(urllib.error.HTTPError) as ei:
-            urllib.request.urlopen(url)
-        assert ei.value.code == 500
-        assert "FileNotFoundError" in json.loads(ei.value.read())["error"]
-    finally:
-        srv.shutdown()
+                _after_first_snapshot(m, merge_and_gc)
+                with pytest.raises(urllib.error.HTTPError) as ei:
+                    urllib.request.urlopen(url)
+                assert ei.value.code == 500, placement
+                error = json.loads(ei.value.read())["error"]
+                assert "FileNotFoundError" in error, placement
+        finally:
+            srv.shutdown()
 
 
 def test_concurrent_requests_share_one_cold_snapshot(

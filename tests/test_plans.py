@@ -1,33 +1,29 @@
-"""Physical-plan quality gates: the search path must scan ONLY the
-pruned splits' partitions and push the (field, term) predicate into
-the Parquet scan (the reference's exact-needed-bytes warmup,
-leaf.rs:125-195, falls out of partition pruning + predicate pushdown
-— verify it actually happens rather than assuming)."""
+"""Read and plan quality gates: Spark's own scans push the (field,
+term) predicate into Parquet and prune columns; the search path reads
+no file of a pruned split (the reference's exact-needed-bytes warmup,
+leaf.rs:125-195); and a wide request is one Spark job with no shuffle
+— verify they actually happen rather than assuming."""
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import uuid
+
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from quickwit_spark.operators import search as search_mod
 from quickwit_spark.operators.search import (
     SearchRequest,
-    _cogroup,
+    _leaf_df,
     _plan,
     get_searcher,
 )
 from quickwit_spark.plans.metastore import Metastore
-
-
-def _search_plan(spark, built_index, req):
-    """The cogroup top-k leaf of ``req`` over one snapshot, or None
-    when every split is pruned."""
-    searcher = get_searcher(spark, built_index)
-    snap = searcher.snapshot()
-    lreq = _plan(
-        searcher.ms.config(), req, emit_all=False, count_exact=False,
-        tables=snap,
-    )
-    return None if lreq is None else _cogroup(snap, lreq)
 
 
 def _postings_scan_plan(spark, built_index, query="word"):
@@ -38,6 +34,17 @@ def _postings_scan_plan(spark, built_index, query="word"):
         .filter((F.col("field") == "text") & (F.col("term") == query))
     )
     return postings._jdf.queryExecution().executedPlan().toString()
+
+
+def _jobs_of(spark, fn):
+    sc = spark.sparkContext
+    group = f"plans-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plans test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_postings_scan_pushes_predicates(spark, built_index):
@@ -57,54 +64,132 @@ def test_scan_prunes_columns(spark, built_index):
     assert "doc_bytes" not in schema_part  # unused binary not read
 
 
-def test_search_plan_reads_only_query_terms(spark, built_index):
-    hits = _search_plan(spark, built_index, SearchRequest(query="word"))
-    plan = hits._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan
-    pushed = plan.split("PushedFilters", 1)[1][:300]
-    assert "word" in pushed or "In(term" in pushed
+def test_executor_leaf_reads_no_pruned_split_file(
+    spark, built_index, tmp_path, monkeypatch
+):
+    """A time range that prunes the bootstrap splits answers the oracle
+    on the executor placement after those splits' postings and
+    fast-fields files are deleted — the snapshot still lists them, so
+    reading any of them would fail the request."""
+    from quickwit_spark.operators.build import add_documents
+    from quickwit_spark.oracle import OracleIndex
+    from quickwit_spark.plans.config import webpages_config
+    from quickwit_spark.sources.corpus import gen_batch
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(built_index, idx)
+    splits = Metastore(idx).list_published()
+    pruned = [int(s.split_id) for s in splits]
+    # 60 docs two days past the index's time range: one split of its own
+    last = max(s.time_range[1] for s in splits)
+    day = pd.Timestamp(last, unit="us").normalize() + pd.Timedelta(days=2)
+    batch = gen_batch(np.arange(1000, 1060), seed=42)
+    batch["warc_ts"] = day + pd.to_timedelta(np.arange(len(batch)) * 600, unit="s")
+    (kept,) = add_documents(spark, spark.createDataFrame(batch), idx, num_splits=1)
+    oracle = OracleIndex(batch.to_dict("records"), webpages_config(), num_splits=1)
+    want = [
+        (int(kept.split_id), d, s) for _, d, s in oracle.search("word", k=1 << 30)
+    ]
+    assert want
+
+    get_searcher(spark, idx).snapshot()  # lists every split's files
+    for table in ("postings", "fastfields"):
+        for sid in pruned:
+            gone = glob.glob(os.path.join(idx, table, f"split_id={sid}", "*.parquet"))
+            assert gone
+            for path in gone:
+                os.remove(path)
+    monkeypatch.setattr(search_mod, "LEAF_MAX_SPLITS", 0)
+    req = SearchRequest(
+        query="word", k=1000, start_ts=day, end_ts=day + pd.Timedelta(days=1)
+    )
+    rows, total = search_mod.search_with_count(spark, idx, req)
+    assert total == len(want)
+    assert [(r["split_id"], r["doc_id"]) for r in rows] == [w[:2] for w in want]
+    np.testing.assert_array_equal(
+        np.array([r["score"] for r in rows], dtype=np.float32),
+        np.array([w[2] for w in want], dtype=np.float32),
+    )
+    matches = search_mod.matches_df(spark, idx, req).collect()
+    assert {(r["split_id"], r["doc_id"]) for r in matches} == {w[:2] for w in want}
+    # without the time range the deleted files are read, and fail
+    with pytest.raises(Exception, match="FileNotFoundError"):
+        search_mod.count_hits(spark, idx, SearchRequest(query="word"))
+
+
+def test_wide_request_runs_one_spark_job(spark, built_index, monkeypatch):
+    """On the executor placement, a top-k request, ``count_hits``, a
+    ``searchAfter`` page and ``search_df`` are each one Spark job, and
+    the split-list plan holds no shuffle."""
+    searcher = get_searcher(spark, built_index)
+    snap = searcher.snapshot()  # warm: no schema inference
+    req = SearchRequest(query="word hot", k=5, offset=2)
+    lreq = _plan(
+        searcher.ms.config(), req, emit_all=False, count_exact=True, tables=snap
+    )
+    plan = _leaf_df(spark, snap, lreq)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "Exchange" not in plan
+
+    monkeypatch.setattr(search_mod, "LEAF_MAX_SPLITS", 0)
+    (rows, total), jobs = _jobs_of(
+        spark, lambda: search_mod.search_with_count(spark, built_index, req)
+    )
+    assert len(jobs) == 1 and len(rows) == 5
+    count, jobs = _jobs_of(
+        spark, lambda: search_mod.count_hits(spark, built_index, req)
+    )
+    assert len(jobs) == 1 and count == total
+    last = rows[-1]
+    cursor = (last["score"], last["split_id"], last["doc_id"])
+    page, jobs = _jobs_of(
+        spark,
+        lambda: search_mod.search_after_df(spark, built_index, req, cursor).collect(),
+    )
+    assert len(jobs) == 1 and len(page) == 5
+    page, jobs = _jobs_of(
+        spark, lambda: search_mod.search_df(spark, built_index, req).collect()
+    )
+    assert len(jobs) == 1
+    assert [(r["split_id"], r["doc_id"]) for r in page] == [
+        (r["split_id"], r["doc_id"]) for r in rows
+    ]
 
 
 def test_unbounded_fetch_never_broadcasts(spark, built_index):
     """The all-matches fetch path (search_stream / aggregations input)
     must not HINT a broadcast of the hit set — at web scale it is
     unbounded (VERDICT r1 scale-killer). With auto-broadcast disabled
-    the plan must fall back to a shuffle join; the top-k path must
-    still broadcast its (bounded) hit set."""
-    from quickwit_spark.operators.search import fetch_docs, matches_df, search_df
+    the plan must fall back to a shuffle join; with it on, the match
+    set's tiny static estimate must not make it a broadcast either."""
+    from quickwit_spark.operators.search import fetch_docs, matches_df
 
+    m = matches_df(spark, built_index, SearchRequest(query="word"))
+    docs = fetch_docs(spark, built_index, m, columns=["key"])
+    assert "BroadcastExchange" not in docs._jdf.queryExecution().executedPlan().toString()
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         m = matches_df(spark, built_index, SearchRequest(query="word"))
-        docs = fetch_docs(spark, built_index, m, columns=["key"], bounded=False)
+        docs = fetch_docs(spark, built_index, m, columns=["key"])
         plan = docs._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" not in plan
-        hits = search_df(spark, built_index, SearchRequest(query="word", k=5))
-        top = fetch_docs(spark, built_index, hits, columns=["key"], bounded=True)
-        plan_top = top._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" in plan_top  # explicit hint survives
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_time_pruning_skips_splits(spark, built_index):
     # a window before the corpus epoch matches nothing → no scan at all
-    hits = _search_plan(
-        spark,
-        built_index,
-        SearchRequest(
-            query="word", start_ts="1999-01-01", end_ts="1999-02-01"
-        ),
+    searcher = get_searcher(spark, built_index)
+    lreq = _plan(
+        searcher.ms.config(),
+        SearchRequest(query="word", start_ts="1999-01-01", end_ts="1999-02-01"),
+        emit_all=False, count_exact=False, tables=searcher.snapshot(),
     )
-    assert hits is None  # every split pruned by time_range metadata
+    assert lreq is None  # every split pruned by time_range metadata
 
 
 def test_searcher_cache_reuse_and_invalidation(spark, built_index):
-    import os
     import time
-
-    from quickwit_spark.operators.search import get_searcher
 
     s1 = get_searcher(spark, built_index)
     assert get_searcher(spark, built_index) is s1  # warm reuse
@@ -115,43 +200,3 @@ def test_searcher_cache_reuse_and_invalidation(spark, built_index):
     os.utime(manifest)
     s2 = get_searcher(spark, built_index)
     assert s2 is not s1
-
-
-def test_split_id_filter_scales_past_literal_inlists(spark, built_index):
-    """filter_split_ids must never emit a 10^4-literal In-filter:
-    dense id sets become a constant number of range predicates
-    (partition pruning intact), fragmented huge sets become a
-    broadcast semi-join (VERDICT r2 'what's wrong' #4)."""
-    from quickwit_spark.operators.search import (
-        _split_id_runs,
-        filter_split_ids,
-    )
-
-    assert _split_id_runs([3, 1, 2, 7, 8, 10]) == [(1, 3), (7, 8), (10, 10)]
-    assert _split_id_runs([]) == []
-
-    ms = Metastore(built_index)
-    scan = spark.read.parquet(ms.postings_dir())
-
-    # dense 10^5-id set → one BETWEEN range, no In-list, still pruned
-    dense = list(range(100_000))
-    plan = (
-        filter_split_ids(scan, dense)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters" in plan
-    assert plan.count(",") < 500, "plan blew up — literal id list leaked"
-
-    # fragmented 10^4-run set → semi-join, still no giant In-list
-    frag = list(range(0, 40_000, 4))
-    plan_frag = (
-        filter_split_ids(scan, frag)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "In(split_id" not in plan_frag
-    assert "LeftSemi" in plan_frag
-
-    # the real search path still pushes term predicates after the change
-    hits = _search_plan(spark, built_index, SearchRequest(query="word"))
-    plan_search = hits._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan_search

@@ -92,16 +92,16 @@ def gen_cases(seed: int, n: int) -> list[tuple[str, int, int]]:
     return out
 
 
-@pytest.mark.parametrize("route", ["in_process", "cogroup"])
+@pytest.mark.parametrize("route", ["in_process", "executor"])
 def test_query_grammar_property_parity(
     spark, built_index, oracle_index, monkeypatch, route
 ):
     """The grammar stream through every top-k entry point — search_df,
     search_with_count (the REST core) and count_hits — on each leaf
     route: rank identity, bit-identical f32 scores and the exact count
-    on EVERY case. ``LEAF_MAX_SPLITS`` = 0 forces the Spark cogroup;
+    on EVERY case. ``LEAF_MAX_SPLITS`` = 0 forces the executor placement;
     built_index's 3 splits and 401 docs otherwise run in process."""
-    if route == "cogroup":
+    if route == "executor":
         monkeypatch.setattr(search_mod, "LEAF_MAX_SPLITS", 0)
     else:
         assert search_mod.LEAF_MAX_SPLITS >= 3
@@ -121,7 +121,7 @@ def test_query_grammar_property_parity(
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-        assert bool(jobs) == (route == "cogroup"), ctx
+        assert len(jobs) == (1 if route == "executor" else 0), ctx
         for got in (df_rows, rows):
             assert [(r["split_id"], r["doc_id"]) for r in got] == [
                 (w[0], w[1]) for w in want
