@@ -655,6 +655,27 @@ def write_postings(ms: Metastore, postings: DataFrame) -> None:
     )
 
 
+#: Target compressed bytes of one docmap parquet row group: the
+#: doc-store block a driver page fetch reads and caches whole
+#: (operators/leaf.py), the reference's ``docstore_blocksize`` (1 MB by
+#: default). A page decodes the blocks holding its docs, not whole
+#: files. Like ``leaf.HOTCACHE_MAX_BYTES``, a module constant.
+DOCSTORE_BLOCK_BYTES = 1 << 20
+
+
+def write_docmap(ms: Metastore, docmap: DataFrame) -> None:
+    """The one docmap writer, shared by build, both merge paths and
+    demux: one directory per split, dynamic overwrite (set by
+    ``write_postings`` or the build), row groups of about
+    ``DOCSTORE_BLOCK_BYTES``. The caller clusters the rows per split."""
+    (
+        docmap.write.partitionBy("split_id")
+        .mode("overwrite")
+        .option("parquet.block.size", DOCSTORE_BLOCK_BYTES)
+        .parquet(ms.docmap_dir())
+    )
+
+
 def write_fastfields(ms: Metastore, config: IndexConfig, docmap: DataFrame) -> None:
     """Pack per-split columnar blobs (fieldnorm bytes, timestamp
     micros, numeric fast fields as int64) from a docmap DataFrame and
@@ -1075,11 +1096,7 @@ def _execute_build(
     # pure waste. Twophase path: range-partitioned by (split_id, key)
     # and sorted — every task writes a doc-id-ordered slice of ≤2
     # splits at full parallelism.
-    (
-        docmap_out.write.partitionBy("split_id")
-        .mode("overwrite")
-        .parquet(ms.docmap_dir())
-    )
+    write_docmap(ms, docmap_out)
     _phase("docmap")
 
     # ---- packed per-split fast-field blobs (tantivy-style columnar

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from quickwit_spark.operators.build import (
     POSTINGS_SCHEMA,
+    write_docmap,
     write_fastfields,
     write_postings,
 )
@@ -158,12 +159,8 @@ def demux_splits(
         .withColumnRenamed("new_split", "split_id")
         .withColumnRenamed("new_doc", "doc_id")
     )
-    (
-        new_docmap.repartition("split_id")
-        .sortWithinPartitions("doc_id")
-        .write.partitionBy("split_id")
-        .mode("overwrite")
-        .parquet(ms.docmap_dir())
+    write_docmap(
+        ms, new_docmap.repartition("split_id").sortWithinPartitions("doc_id")
     )
     new_docmap_r = spark.read.parquet(ms.docmap_dir()).filter(
         F.col("split_id") >= base

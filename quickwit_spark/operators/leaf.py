@@ -23,42 +23,44 @@ cache: a split's postings are one file (the build repartitions by
 the filtered scan reads only the row groups of the query's terms.
 
 The split hotcache (``HOTCACHE``, the reference's split footer and
-fast-field caches, leaf.rs:47-55, config.rs:119-125) keeps postings
-and fast-fields files in driver memory, so a warm request decodes no
-parquet:
+fast-field caches, leaf.rs:47-55, config.rs:119-125, and tantivy's
+doc-store block cache) keeps what a driver request reads of split
+files in memory, so a warm request reads no parquet:
 
-- *what*: per postings file its ``POSTING_COLUMNS`` as an Arrow table
-  with a field → term → row index; per fast-fields file its
-  ``FASTFIELD_COLUMNS`` with a name → row index. A request takes the
-  rows of its ``(field, term)`` pairs and fast-field names by index
-  lookup, never by scanning a file's dictionary;
-- *key*: the file URI, shared by every snapshot of every index. Split
-  files are immutable: every write (build, merge, demux, a resumed
-  build) names its files after a fresh job UUID, so an entry is valid
-  for as long as its file exists;
+- *what*: postings files (``POSTING_COLUMNS``, field → term → row)
+  and fast-fields files (``FASTFIELD_COLUMNS``, name → row) whole, as
+  numpy views of their Arrow buffers that the codec reads in place; per
+  docmap file (the doc store) its ``DocIndex``, and apart each row
+  group a page has touched. A request reads by index lookup or
+  ``searchsorted``, never by scanning a file;
+- *key*: the file URI (and the row group, for a docmap block), shared
+  by every snapshot of every index. Split files are immutable: every
+  write (build, merge, demux, a resumed build) names its files after a
+  fresh job UUID, so an entry is valid for as long as its file exists;
 - *invalidation*: building a snapshot's file map (its published
-  splits' files) drops the cached files of that table directory the
-  map does not hold: merged-away and GC'd splits. A request still
-  holding an older snapshot may load such a file again; the next
+  splits' files) drops the cached entries of that table directory's
+  files the map does not hold: merged-away and GC'd splits. A request
+  still holding an older snapshot may load such a file again; the next
   refresh or the LRU drops it;
 - *cap*: ``HOTCACHE_MAX_BYTES`` resident bytes (Arrow buffers plus an
-  estimate of the Python index), least recently used first out. A file
-  is loaded once even when threads race on a cold cache.
+  estimate of the index), least recently used first out. An entry is
+  loaded once even when threads race on a cold cache.
 
-The docmap (the doc store) is not cached: a page needs a handful of
-its rows, and it is the largest table. ``fetch_rows`` reads it per
-request, a pyarrow row filter on the hit splits' docmap files with
-footers cached per snapshot, returning values as Spark's ``collect``
-would (fetch_docs.rs:97-125 analogue for a bounded page).
+A page's docs (``fetch_rows``, fetch_docs.rs:97-125 analogue) are one
+``searchsorted`` per docmap file of a hit split and one ``take`` per
+row group holding page docs, in hit order, each column converted once.
+Docmap row groups are about ``build.DOCSTORE_BLOCK_BYTES`` (tantivy's
+doc-store blocks), so a page decodes and holds only its docs' blocks,
+however wide the stored docs (with ``store_source`` the docmap is the
+widest table).
 """
 
 from __future__ import annotations
 
-import calendar
 import re
 import sys
 import threading
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 from concurrent.futures import Future
 from dataclasses import dataclass
 
@@ -69,8 +71,9 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
-from pyspark.sql import Row
 from pyspark.sql import types as T
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from quickwit_spark.operators.eval import SplitContext, evaluate_split
 
@@ -119,37 +122,55 @@ class LeafRequest:
     after: tuple | None = None  # keyset cursor (sort value, split_id, doc_id)
 
 
-def _columns(table: pa.Table, names) -> list[list]:
-    return [table.column(n).to_pylist() for n in names]
+class Blobs:
+    """A binary column as numpy views of its Arrow buffers: ``blobs[i]``
+    is value ``i`` as a uint8 array sharing the Arrow memory (None for a
+    null), what the codec and ``np.frombuffer`` read. No value is
+    copied into Python bytes."""
+
+    def __init__(self, col: pa.ChunkedArray):
+        arr = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+        _, offsets, data = arr.buffers()
+        self.offsets = np.frombuffer(offsets, np.int32)[arr.offset:]
+        self.data = np.frombuffer(b"" if data is None else data, np.uint8)
+        self.valid = None
+        if arr.null_count:
+            self.valid = arr.is_valid().to_numpy(zero_copy_only=False)
+
+    def __getitem__(self, i: int):
+        if self.valid is not None and not self.valid[i]:
+            return None
+        return self.data[self.offsets[i]:self.offsets[i + 1]]
 
 
-def split_context(lreq: LeafRequest, split_id: int, postings, fastfields):
-    """Decode one split's posting and fast-field rows (pyarrow Tables;
-    ``postings`` None when the split has no posting rows) into the
-    evaluator's inputs → ``(SplitContext, sort_values)``."""
+def _cells(tbl: pa.Table, names) -> dict:
+    """Columns ``names`` of ``tbl`` for reads by row: binary ones as
+    ``Blobs``, numeric ones as numpy arrays."""
+    return {
+        n: Blobs(tbl[n]) if pa.types.is_binary(tbl[n].type) else tbl[n].to_numpy()
+        for n in names
+    }
+
+
+def _row(cells: dict, r: int) -> dict:
+    return {n: c[r] for n, c in cells.items()}
+
+
+def split_context(lreq: LeafRequest, split_id: int, postings: dict, fastfields: dict):
+    """One split's evaluator inputs → ``(SplitContext, sort_values)``,
+    from its posting rows (``(field, term)`` → row, binary values as
+    uint8 arrays) and its fast-field blobs (name → uint8 array)."""
     info = lreq.infos[split_id]
-    norms = {}
-    ts_arr = None
-    sort_vals = None
-    for name, data in zip(*_columns(fastfields, FASTFIELD_COLUMNS)):
-        if name.startswith("norm_"):
-            norms[name[5:]] = np.frombuffer(data, dtype=np.uint8)
-        elif name == f"ts_{lreq.ts_name}":
-            ts_arr = np.frombuffer(data, dtype=np.int64)
-        if name == lreq.sort_field:
-            sort_vals = np.frombuffer(
-                data, dtype=np.uint8 if name.startswith("norm_") else np.int64
-            )
-    post = {}
-    if postings is not None:
-        for f, t, *rest in zip(*_columns(postings, POSTING_COLUMNS)):
-            post[(f, t)] = dict(zip(POSTING_COLUMNS[2:], rest))
+    sort_vals = fastfields.get(lreq.sort_field)
+    if sort_vals is not None and not lreq.sort_field.startswith("norm_"):
+        sort_vals = np.frombuffer(sort_vals, np.int64)
+    ts = fastfields.get(f"ts_{lreq.ts_name}")
     ctx = SplitContext(
         num_docs=info["num_docs"],
         total_tokens=info["total_tokens"],
-        postings=post,
-        norms=norms,
-        ts=ts_arr,
+        postings=postings,
+        norms={n[5:]: blob for n, blob in fastfields.items() if n.startswith("norm_")},
+        ts=None if ts is None else np.frombuffer(ts, np.int64),
     )
     return ctx, sort_vals
 
@@ -255,12 +276,26 @@ def rows_to_response(lreq: LeafRequest, frame: pd.DataFrame) -> tuple:
 
 @dataclass(frozen=True)
 class CachedFile:
-    """One split file held whole in driver memory: its rows, a key →
-    row index over them (postings: field → term → row; fast fields:
-    name → row) and the resident bytes of both."""
+    """One postings or fast-fields file held whole in driver memory:
+    its row index (postings: field → term → row; fast fields: name →
+    row), the value columns a leaf reads by row (``_cells``), and the
+    resident bytes of both."""
 
-    table: pa.Table
     rows: dict
+    cells: dict
+    nbytes: int
+
+
+@dataclass(frozen=True)
+class DocIndex:
+    """Where one docmap file holds each doc: its doc ids sorted, and
+    for each its row group (a doc-store block) and its row in that
+    group. The blocks themselves are cached apart, on first touch."""
+
+    uri: str
+    ids: np.ndarray
+    group: np.ndarray
+    row: np.ndarray
     nbytes: int
 
 
@@ -273,18 +308,33 @@ def _index_nbytes(index: dict, keys: pa.ChunkedArray) -> int:
     )
 
 
-def _load_split_file(table: str, uri: str) -> CachedFile:
-    """Read one postings or fast-fields file whole and index its rows
-    by key, vectorized per distinct field: no per-row Python. Rows need
-    not be sorted."""
+def _load_split_file(table: str, uri: str, group: int | None = None):
+    """Read what ``HOTCACHE`` holds of one split file: a postings or
+    fast-fields file whole, its rows indexed vectorized per distinct
+    field (no per-row Python; rows need not be sorted) → ``CachedFile``;
+    a docmap file → its ``DocIndex``, from its doc_id column alone;
+    with ``group``, that docmap row group's rows → ``pa.Table``."""
     fs, path = pafs.FileSystem.from_uri(uri)
-    columns = FASTFIELD_COLUMNS if table == "fastfields" else POSTING_COLUMNS
     with fs.open_input_file(path) as f:
-        tbl = pq.ParquetFile(f).read(columns=list(columns)).combine_chunks()
+        pf = pq.ParquetFile(f)
+        if group is not None:
+            return pf.read_row_group(group)
+        if table == "docmap":
+            meta = pf.metadata
+            sizes = [meta.row_group(g).num_rows for g in range(meta.num_row_groups)]
+            ids = pf.read(columns=["doc_id"]).column(0).to_numpy().astype(np.int64)
+            group = np.repeat(np.arange(len(sizes), dtype=np.int32), sizes)
+            row = np.arange(ids.size) - np.repeat(np.cumsum(sizes) - sizes, sizes)
+            order = np.argsort(ids, kind="stable")
+            nbytes = ids.nbytes + group.nbytes + row.nbytes
+            return DocIndex(uri, ids[order], group[order], row[order], nbytes)
+        columns = {"postings": POSTING_COLUMNS, "fastfields": FASTFIELD_COLUMNS}[table]
+        tbl = pf.read(columns=list(columns)).combine_chunks()
     if table == "fastfields":
         names = tbl.column("name")
         rows = dict(zip(names.to_numpy(zero_copy_only=False), range(tbl.num_rows)))
-        return CachedFile(tbl, rows, tbl.nbytes + _index_nbytes(rows, names))
+        nbytes = tbl.nbytes + _index_nbytes(rows, names)
+        return CachedFile(rows, _cells(tbl, FASTFIELD_COLUMNS[1:]), nbytes)
     rows, nbytes = {}, tbl.nbytes
     field = tbl.column("field")
     for f in pc.unique(field).to_pylist():
@@ -292,45 +342,49 @@ def _load_split_file(table: str, uri: str) -> CachedFile:
         terms = tbl.column("term").take(at)
         rows[f] = dict(zip(terms.to_numpy(zero_copy_only=False), at.tolist()))
         nbytes += _index_nbytes(rows[f], terms)
-    return CachedFile(tbl, rows, nbytes)
+    return CachedFile(rows, _cells(tbl, POSTING_COLUMNS[2:]), nbytes)
 
 
 class SplitHotcache:
-    """File URI → ``CachedFile`` of postings and fast-fields files,
-    least recently used out past ``HOTCACHE_MAX_BYTES``. One instance,
+    """What driver requests read of split files, keyed by file URI and
+    docmap row group: ``CachedFile`` s of postings and fast-fields
+    files, ``DocIndex`` es of docmap files and docmap row groups; least
+    recently used out past ``HOTCACHE_MAX_BYTES``. One instance,
     ``HOTCACHE``, serves every ``SnapshotFiles`` in the process."""
 
     def __init__(self):
         self._lock = threading.Lock()
-        self._files: OrderedDict[str, CachedFile] = OrderedDict()
-        self._loading: dict[str, Future] = {}
+        self._files: OrderedDict[tuple, object] = OrderedDict()
+        self._loading: dict[tuple, Future] = {}
         self.nbytes = 0
 
-    def get(self, table: str, uri: str) -> CachedFile:
-        """The cached file, loaded on first touch. Threads racing on an
-        uncached file wait for one load; a failed load (the file is
-        gone) raises in each of them and caches nothing."""
+    def get(self, table: str, uri: str, group: int | None = None):
+        """The cached entry (``_load_split_file``), loaded on first
+        touch. Threads racing on an uncached entry wait for one load; a
+        failed load (the file is gone) raises in each of them and caches
+        nothing."""
+        key = (uri, group)
         with self._lock:
-            got = self._files.get(uri)
+            got = self._files.get(key)
             if got is not None:
-                self._files.move_to_end(uri)
+                self._files.move_to_end(key)
                 return got
-            pending = self._loading.get(uri)
+            pending = self._loading.get(key)
             loads = pending is None
             if loads:
-                pending = self._loading[uri] = Future()
+                pending = self._loading[key] = Future()
         if not loads:
             return pending.result()
         try:
-            got = _load_split_file(table, uri)
+            got = _load_split_file(table, uri, group)
         except BaseException as e:
             with self._lock:
-                del self._loading[uri]
+                del self._loading[key]
             pending.set_exception(e)
             raise
         with self._lock:
-            del self._loading[uri]
-            self._files[uri] = got
+            del self._loading[key]
+            self._files[key] = got
             self.nbytes += got.nbytes
             while self.nbytes > HOTCACHE_MAX_BYTES:
                 self.nbytes -= self._files.popitem(last=False)[1].nbytes
@@ -338,17 +392,21 @@ class SplitHotcache:
         return got
 
     def retain(self, root: str, uris) -> None:
-        """Drop the cached files under directory ``root`` not in ``uris``."""
+        """Drop the cached entries of files under directory ``root`` not
+        in ``uris``."""
         keep = set(uris)
         with self._lock:
-            gone = [u for u in self._files if u.startswith(root) and u not in keep]
-            for uri in gone:
-                self.nbytes -= self._files.pop(uri).nbytes
+            for key in [k for k in self._files if k[0].startswith(root)]:
+                if key[0] not in keep:
+                    self.nbytes -= self._files.pop(key).nbytes
 
     def sizes(self) -> dict[str, int]:
-        """URI → resident bytes of each cached file, oldest use first."""
+        """URI → resident bytes of each file's entries."""
+        sizes = Counter()
         with self._lock:
-            return {uri: f.nbytes for uri, f in self._files.items()}
+            for (uri, _), got in self._files.items():
+                sizes[uri] += got.nbytes
+        return dict(sizes)
 
     def clear(self) -> None:
         with self._lock:
@@ -360,9 +418,9 @@ HOTCACHE = SplitHotcache()
 
 
 class SnapshotFiles:
-    """Split → parquet files of one ``Searcher.snapshot()``: postings
-    and fast fields through ``HOTCACHE``, the docmap by a pyarrow scan
-    with a per-file footer cache.
+    """Split → parquet files of one ``Searcher.snapshot()``, read
+    through ``HOTCACHE``: postings and fast fields whole, the docmap by
+    its doc index and the row groups a page touches.
 
     Each table's map comes from ``inputFiles()`` of the snapshot's
     DataFrame, kept for the snapshot's published splits: Spark froze
@@ -371,16 +429,15 @@ class SnapshotFiles:
     request reads. The map is built on first use, and then drops from
     ``HOTCACHE`` the files of that table it does not hold (merged-away,
     GC'd or replaced splits). A file removed since (GC past its grace
-    period) and not cached fails the read with ``FileNotFoundError``;
-    the docmap is always read from disk, so such a request fails
-    instead of answering from a subset."""
+    period) whose needed entries are not cached fails the read with
+    ``FileNotFoundError``, so a request never answers from a subset of
+    its snapshot; one whose entries are all cached answers the whole
+    snapshot."""
 
     def __init__(self, tables: dict):
         self._tables = tables
         self._lock = threading.Lock()
         self._files: dict[str, dict[int, list]] = {}
-        self._fragments: dict[str, ds.ParquetFileFragment] = {}
-        self._docmap_schema: T.StructType | None = None
 
     def files(self, table: str) -> dict[int, list]:
         """split_id → ``table`` files, for the snapshot's published
@@ -397,15 +454,15 @@ class SnapshotFiles:
                         if int(m.group(1)) in published:
                             got.setdefault(int(m.group(1)), []).append(uri)
                 self._files[table] = got
-                if table != "docmap":
-                    live = [uri for uris in got.values() for uri in uris]
-                    for root in roots:
-                        HOTCACHE.retain(root, live)
+                live = [uri for uris in got.values() for uri in uris]
+                for root in roots:
+                    HOTCACHE.retain(root, live)
             return got
 
-    def cached(self, table: str, split_ids) -> dict[int, list[CachedFile]]:
+    def cached(self, table: str, split_ids) -> dict[int, list]:
         """split_id → the ``HOTCACHE`` entries of that split's
-        ``table`` ("postings" or "fastfields") files."""
+        ``table`` files: ``CachedFile`` s of "postings" or "fastfields",
+        ``DocIndex`` es of "docmap"."""
         by_split = self.files(table)
         return {
             sid: [HOTCACHE.get(table, uri) for uri in by_split[sid]]
@@ -414,29 +471,7 @@ class SnapshotFiles:
         }
 
     def docmap_schema(self) -> T.StructType:
-        if self._docmap_schema is None:
-            self._docmap_schema = self._tables["docmap"].schema
-        return self._docmap_schema
-
-    def _fragment(self, uri: str, split_id: int) -> ds.ParquetFileFragment:
-        with self._lock:
-            frag = self._fragments.get(uri)
-        if frag is None:
-            frag = split_fragment(uri, split_id)
-            frag.ensure_complete_metadata()  # reads the footer once
-            with self._lock:
-                frag = self._fragments.setdefault(uri, frag)
-        return frag
-
-    def scan(self, table: str, split_ids, filter) -> dict[int, pa.Table]:
-        """``scan_splits`` of the splits' ``table`` files, row groups
-        pruned on the cached footer statistics."""
-        by_split = self.files(table)
-        return scan_splits(
-            [self._fragment(uri, sid) for sid in split_ids
-             for uri in by_split.get(sid, ())],
-            filter,
-        )
+        return self._tables["docmap"].schema  # a cached property
 
 
 def split_fragment(uri: str, split_id: int) -> ds.ParquetFileFragment:
@@ -473,55 +508,47 @@ def scan_splits(frags, filter, columns=None) -> dict[int, pa.Table]:
 
 def evaluate_splits(lreq: LeafRequest, postings: dict, fastfields: dict) -> tuple:
     """The leaf of both placements: each split of ``fastfields``
-    (split_id → its ``name IN ff_names`` fast-field rows) evaluated with
-    its ``postings`` (split_id → its ``field IN fields AND term IN
-    terms`` posting rows), and their responses merged → one leaf
-    response (``merge_hits``). A split without fast-field rows has no
-    norms to score with: it answers no hit and counts 0, so it is left
-    out; one without posting rows matches nothing but still counts."""
+    (split_id → its fast-field blobs of ``ff_names``) evaluated with its
+    ``postings`` (split_id → its posting rows of ``fields`` × ``terms``),
+    and their responses merged → one leaf response (``merge_hits``). A
+    split without fast-field rows has no norms to score with: it
+    answers no hit and counts 0, so it is left out; one without posting
+    rows matches nothing but still counts."""
     responses = []
     for sid in sorted(fastfields):
-        docs, vals, num_hits = evaluate_leaf(lreq, sid, postings.get(sid), fastfields[sid])
+        docs, vals, num_hits = evaluate_leaf(
+            lreq, sid, postings.get(sid, {}), fastfields[sid]
+        )
         responses.append((np.full(docs.size, sid, np.int32), docs, vals, num_hits))
     return merge_hits(lreq, responses)
 
 
-def _pick(files: list[CachedFile], rows_of) -> pa.Table | None:
-    """The rows ``rows_of(file.rows)`` of one split's cached files, or
-    None when there are none: zero-copy one-row slices, which beat a
-    ``take`` for the few rows a request picks."""
-    parts = [f.table.slice(r, 1) for f in files for r in rows_of(f.rows)]
-    if len(parts) > 1:
-        return pa.concat_tables(parts)
-    return parts[0] if parts else None
-
-
 def search_in_process(files: SnapshotFiles, lreq: LeafRequest) -> tuple:
     """The driver placement: ``evaluate_splits`` over every split of
-    ``lreq``, each split's rows picked from ``HOTCACHE`` by index."""
-
-    def ff_rows(rows: dict) -> list[int]:
-        return [r for n in lreq.ff_names if (r := rows.get(n)) is not None]
-
-    def posting_rows(rows: dict) -> list[int]:
-        return [
-            r
+    ``lreq``, each split's rows read from ``HOTCACHE`` by index."""
+    splits = sorted(lreq.infos)
+    postings = {
+        sid: {
+            (f, t): _row(file.cells, r)
+            for file in cached
             for f in lreq.fields
-            if (by_term := rows.get(f))
+            if (by_term := file.rows.get(f))
             for t in lreq.terms
             if (r := by_term.get(t)) is not None
-        ]
-
-    def picked(table: str, rows_of) -> dict:
-        tables = {
-            sid: _pick(cached, rows_of)
-            for sid, cached in files.cached(table, sorted(lreq.infos)).items()
         }
-        return {sid: t for sid, t in tables.items() if t is not None}
-
-    return evaluate_splits(
-        lreq, picked("postings", posting_rows), picked("fastfields", ff_rows)
-    )
+        for sid, cached in files.cached("postings", splits).items()
+    }
+    fastfields = {
+        sid: {
+            n: file.cells["data"][r]
+            for file in cached
+            for n in lreq.ff_names
+            if (r := file.rows.get(n)) is not None
+        }
+        for sid, cached in files.cached("fastfields", splits).items()
+    }
+    fastfields = {sid: ff for sid, ff in fastfields.items() if ff}
+    return evaluate_splits(lreq, postings, fastfields)
 
 
 def search_split_files(lreq: LeafRequest, split_files) -> tuple:
@@ -532,86 +559,86 @@ def search_split_files(lreq: LeafRequest, split_files) -> tuple:
     def isin(name: str, values) -> ds.Expression:
         return ds.field(name).isin(pa.array(list(values), pa.string()))
 
+    def posting_rows(tbl: pa.Table) -> dict:
+        cells = _cells(tbl, POSTING_COLUMNS[2:])
+        keys = zip(tbl["field"].to_pylist(), tbl["term"].to_pylist())
+        return {key: _row(cells, r) for r, key in enumerate(keys)}
+
+    def blobs(tbl: pa.Table) -> dict:
+        data = Blobs(tbl["data"])
+        return {name: data[r] for r, name in enumerate(tbl["name"].to_pylist())}
+
     post = [split_fragment(u, sid) for sid, uris, _ in split_files for u in uris]
     ff = [split_fragment(u, sid) for sid, _, uris in split_files for u in uris]
+    postings = scan_splits(
+        post, isin("field", lreq.fields) & isin("term", lreq.terms), POSTING_COLUMNS
+    )
+    fastfields = scan_splits(ff, isin("name", lreq.ff_names), FASTFIELD_COLUMNS)
     return evaluate_splits(
         lreq,
-        scan_splits(
-            post, isin("field", lreq.fields) & isin("term", lreq.terms),
-            POSTING_COLUMNS,
-        ),
-        scan_splits(ff, isin("name", lreq.ff_names), FASTFIELD_COLUMNS),
+        {sid: posting_rows(tbl) for sid, tbl in postings.items()},
+        {sid: blobs(tbl) for sid, tbl in fastfields.items()},
     )
 
 
 # ---------------------------------------------------------------- fetch
-def _micros(v) -> int:
-    """A pyarrow datetime (naive = UTC, as parquet stores it) → epoch µs."""
-    return calendar.timegm(v.utctimetuple()) * 1_000_000 + v.microsecond
-
-
-def _spark_value(v, dt):
-    """A pyarrow Python value → the value Spark's ``collect`` returns for
-    the same cell (bytearray for binary, Row for struct, dict for map,
-    local-time naive datetime for timestamp)."""
-    if v is None:
-        return None
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return dt.fromInternal(_micros(v))
-    if isinstance(dt, T.BinaryType):
-        return bytearray(v)
-    if isinstance(dt, T.ArrayType):
-        return [_spark_value(x, dt.elementType) for x in v]
-    if isinstance(dt, T.MapType):
-        return {k: _spark_value(x, dt.valueType) for k, x in v}
-    if isinstance(dt, T.StructType):
-        return Row(**{f.name: _spark_value(v.get(f.name), f.dataType) for f in dt.fields})
-    return v
-
-
-def _column_values(col: pa.ChunkedArray, dt) -> list:
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        # exact µs from the integer storage (Spark writes INT96 / µs)
-        us = pc.cast(col, pa.timestamp("us", col.type.tz), safe=False)
-        return [
-            None if m is None else dt.fromInternal(m)
-            for m in us.cast(pa.int64()).to_pylist()
-        ]
-    vals = col.to_pylist()
-    if isinstance(dt, (T.BinaryType, T.ArrayType, T.MapType, T.StructType)):
-        return [_spark_value(v, dt) for v in vals]
-    return vals
+def fetch_table(files: SnapshotFiles, hits, exact: bool) -> tuple:
+    """The docmap rows of the leaf response ``hits``, in hit order, as
+    one Arrow table and its Spark schema, that of the ``fetch_docs``
+    join output: split_id, doc_id, the docmap columns in the snapshot
+    schema's order, score, sort_long (``exact``: the vals are int64
+    sort values). Each docmap file of a hit split answers with one
+    ``searchsorted`` of its doc index and one ``take`` per row group
+    holding page docs. A hit whose doc is missing drops out, as in the
+    inner join; a column an older split's file lacks comes back null."""
+    sids, docs, vals = hits[:3]
+    parts, at = [], [np.empty(0, np.int64)]
+    for sid, indexes in files.cached("docmap", np.unique(sids).tolist()).items():
+        mine = np.flatnonzero(sids == sid)
+        for index in indexes:
+            pos = np.searchsorted(index.ids, docs[mine])
+            found = pos < index.ids.size
+            found[found] = index.ids[pos[found]] == docs[mine][found]
+            pos, hit = pos[found], mine[found]
+            groups = index.group[pos]
+            for g in np.unique(groups).tolist():
+                block = HOTCACHE.get("docmap", index.uri, g)
+                parts.append(block.take(index.row[pos[groups == g]]))
+                at.append(hit[groups == g])
+    at = np.concatenate(at)
+    spark_schema = files.docmap_schema()
+    fields = [f for f in spark_schema.fields if f.name not in ("split_id", "doc_id")]
+    schema = T.StructType([
+        spark_schema["split_id"], spark_schema["doc_id"], *fields,
+        T.StructField("score", T.DoubleType()),
+        T.StructField("sort_long", T.LongType()),
+    ])
+    # timestamps as UTC-aware µs: parquet's naive ones are UTC, and
+    # Spark would read naive ones as session-local time
+    arrow = to_arrow_schema(schema)
+    if at.size == 0:  # casting an empty nested column drops its chunk
+        return arrow.empty_table(), schema
+    order = np.argsort(at, kind="stable")
+    docmap = pa.concat_tables(parts, promote_options="default").take(order)
+    at = at[order]
+    columns = [
+        sids[at], docs[at],
+        *(docmap.column(f.name) if f.name in docmap.column_names
+          else pa.nulls(at.size, arrow.field(f.name).type) for f in fields),
+        vals[at].astype(np.float64),
+        vals[at] if exact else pa.nulls(at.size, pa.int64()),
+    ]
+    return pa.table(columns, names=schema.names).cast(arrow, safe=False), schema
 
 
 def fetch_rows(files: SnapshotFiles, hits, exact: bool) -> list[dict]:
-    """The docmap rows of the leaf response ``hits``, in hit order, as
-    dicts keyed like the Spark ``fetch_docs`` join output: split_id,
-    doc_id, the docmap columns in the snapshot schema's order, score,
-    sort_long (``exact``: the vals are int64 sort values). A hit whose
-    doc is missing drops out, as in the inner join."""
-    sids, docs, vals = hits[:3]
-    keys = list(zip(sids.tolist(), docs.tolist()))
-    fields = [
-        f for f in files.docmap_schema().fields
-        if f.name not in ("split_id", "doc_id")
-    ]
-    docmap = files.scan(
-        "docmap", sorted({s for s, _ in keys}),
-        ds.field("doc_id").isin(sorted({d for _, d in keys})),
+    """``fetch_table`` as dicts of the values Spark's ``collect`` returns
+    (Row for struct, local-time naive datetime; binary as bytearray), by
+    PySpark's own Arrow → Row conversion, one pass per column: not a
+    public API (verified on PySpark 4.1; tests/test_leaf.py checks this
+    function against the Spark join)."""
+    tbl, schema = fetch_table(files, hits, exact)
+    rows = ArrowTableToRowsConversion.convert(
+        tbl, schema, return_as_tuples=True, binary_as_bytes=False
     )
-    found: dict[tuple[int, int], dict] = {}
-    for sid, tbl in docmap.items():
-        cols = {
-            f.name: _column_values(tbl.column(f.name), f.dataType)
-            if f.name in tbl.column_names else [None] * tbl.num_rows
-            for f in fields
-        }
-        for i, d in enumerate(tbl.column("doc_id").to_pylist()):
-            found[(sid, d)] = {name: vals[i] for name, vals in cols.items()}
-    sort_long = vals.tolist() if exact else [None] * len(keys)
-    return [
-        {"split_id": key[0], "doc_id": key[1], **found[key],
-         "score": score, "sort_long": value}
-        for key, score, value in zip(keys, vals.astype(np.float64).tolist(), sort_long)
-        if key in found
-    ]
+    return [dict(zip(schema.names, row)) for row in rows]

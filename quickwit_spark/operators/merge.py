@@ -43,6 +43,7 @@ from quickwit_spark.operators.build import (
     _flat_binary,
     _make_partial_merger,
     _varbyte_stream,
+    write_docmap,
     write_fastfields,
     write_postings,
 )
@@ -262,12 +263,8 @@ def merge_splits(
         .withColumn("doc_id", rebase_expr)
         .withColumn("split_id", F.lit(new_sid))
     )
-    (
-        docmap.repartition("split_id")
-        .sortWithinPartitions("doc_id")
-        .write.partitionBy("split_id")
-        .mode("overwrite")
-        .parquet(ms.docmap_dir())
+    write_docmap(
+        ms, docmap.repartition("split_id").sortWithinPartitions("doc_id")
     )
 
     # ---- fastfields: concatenate blobs in split order ----
@@ -379,12 +376,8 @@ def _merge_splits_sorted(
         .withColumnRenamed("new_split", "split_id")
         .withColumnRenamed("new_doc", "doc_id")
     )
-    (
-        new_docmap.repartition("split_id")
-        .sortWithinPartitions("doc_id")
-        .write.partitionBy("split_id")
-        .mode("overwrite")
-        .parquet(ms.docmap_dir())
+    write_docmap(
+        ms, new_docmap.repartition("split_id").sortWithinPartitions("doc_id")
     )
     new_docmap_r = spark.read.parquet(ms.docmap_dir()).filter(
         F.col("split_id") == new_sid

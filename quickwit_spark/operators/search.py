@@ -33,9 +33,11 @@ runs; only the read differs:
 page with ``createDataFrame`` (a non-empty pandas page runs no Spark
 job to build or collect). Aggregations and stream export read every
 match through ``matches_df``, the executor placement with ``emit_all``,
-kept lazy. A page's docs are read in process (``leaf.fetch_rows``, for
-``search_with_count`` and ``search``); every match's docs are joined to
-the docmap (``fetch_docs``, fetch_docs.rs:97-125 analogue).
+kept lazy. A page's docs are read in process from the docmap row
+groups (doc-store blocks) the split hotcache holds (``leaf.fetch_rows``
+for ``search_with_count``; ``leaf.fetch_table``, an Arrow local
+relation, for ``search``); every match's docs are joined to the
+docmap (``fetch_docs``, fetch_docs.rs:97-125 analogue).
 
 Routing. ``search_endpoint`` p50 over the 8 bench.py query shapes on a
 4-core host, in process vs Spark, with 1 and with 8 closed-loop
@@ -74,13 +76,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from quickwit_spark.operators.leaf import (
     HITS_SCHEMA,
     LeafRequest,
     SnapshotFiles,
     fetch_rows,
+    fetch_table,
     hit_page,
     merge_hits,
     response_to_rows,
@@ -119,9 +121,10 @@ class Searcher:
     def snapshot(self) -> dict:
         """All three tables ('postings', 'fastfields', 'docmap')
         resolved under ONE state-token check — a request-consistent
-        view, plus the published 'splits' and the in-process leaf's
-        'files' (split → parquet files of these very tables, read
-        through the split hotcache; operators/leaf.py). A request must
+        view, plus the published 'splits', the index 'config' and the
+        in-process leaf's 'files' (split → parquet files of these very
+        tables, read through the split hotcache; operators/leaf.py),
+        so a request reads the metastore once. A request must
         take one snapshot up front and read every table from it:
         re-validating per ``table()`` call would let a
         publish landing mid-request mix tables from two index states
@@ -141,6 +144,7 @@ class Searcher:
             # list from a different token than the file listings would
             # prune against splits whose files the scans don't have
             dfs["splits"] = self.ms.list_published()
+            dfs["config"] = self.ms.config()
             dfs["files"] = SnapshotFiles(dfs)
             self._dfs = dfs
             self._stamp = tok
@@ -308,13 +312,12 @@ def _top_k(
     ``tables`` lets a caller that ALSO fetches docs pass one
     ``Searcher.snapshot()`` spanning the whole request, so the
     evaluate and fetch sides cannot straddle a concurrent publish."""
-    searcher = get_searcher(spark, index_dir)
-    # one request-consistent snapshot: split list + all table file
-    # listings resolved under a single metastore state token
+    # one request-consistent snapshot: split list, config and all table
+    # file listings resolved under a single metastore state token
     if tables is None:
-        tables = searcher.snapshot()
+        tables = get_searcher(spark, index_dir).snapshot()
     lreq = _plan(
-        searcher.ms.config(), req, emit_all=False, count_exact=count_exact,
+        tables["config"], req, emit_all=False, count_exact=count_exact,
         tables=tables, after=after,
     )
     if lreq is None:
@@ -501,12 +504,9 @@ def matches_df(
 ) -> DataFrame:
     """ALL matching docs (split_id, doc_id, score) — the
     search_stream / aggregation input (no top-k)."""
-    searcher = get_searcher(spark, index_dir)
     if tables is None:
-        tables = searcher.snapshot()
-    lreq = _plan(
-        searcher.ms.config(), req, emit_all=True, count_exact=True, tables=tables
-    )
+        tables = get_searcher(spark, index_dir).snapshot()
+    lreq = _plan(tables["config"], req, emit_all=True, count_exact=True, tables=tables)
     if lreq is None:
         return spark.createDataFrame([], "split_id int, doc_id long, score double")
     return _leaf_df(spark, tables, lreq).select("split_id", "doc_id", "score")
@@ -557,18 +557,13 @@ def search(
     req = SearchRequest(query=query, k=k, **kwargs)
     snap = get_searcher(spark, index_dir).snapshot()
     hits = _top_k(spark, index_dir, req, snap, count_exact=False)
-    docmap = snap["files"].docmap_schema()
-    schema = T.StructType([
-        docmap["split_id"], docmap["doc_id"],
-        *(f for f in docmap.fields if f.name not in ("split_id", "doc_id")),
-        T.StructField("score", T.DoubleType()),
-        T.StructField("sort_long", T.LongType()),
-    ])
+    # an Arrow table becomes a LocalRelation: no Spark job to build or
+    # collect the page
     out = spark.createDataFrame(
-        fetch_rows(snap["files"], hits, req.sort_field is not None), schema
+        *fetch_table(snap["files"], hits, req.sort_field is not None)
     )
     if highlight:
-        config = open_metastore(index_dir).config()
+        config = snap["config"]
         fld = (req.search_fields or config.default_search_fields)[0]
         # ES highlights from the stored document: use the raw column
         # when the docmap carries it, else pull the field out of the

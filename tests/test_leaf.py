@@ -2,7 +2,8 @@
 on executors, against each other and the oracle: byte-identical REST
 bodies (``searchAfter`` pages included), routing of every top-k entry
 point, zero Spark jobs on small fan-out and one on wide fan-out,
-snapshot safety of the direct file reads, and the split hotcache's
+snapshot safety of the direct file reads, the page fetch from cached
+docmap files against the Spark join, and the split hotcache's
 invalidation, byte cap and cold-start races."""
 
 from __future__ import annotations
@@ -19,10 +20,12 @@ import uuid
 
 import numpy as np
 import pandas as pd
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 import pytest
 
 from quickwit_spark import serve as serve_mod
+from quickwit_spark.operators import build as build_mod
 from quickwit_spark.operators import leaf as leaf_mod
 from quickwit_spark.operators import search as search_mod
 from quickwit_spark.operators.build import add_documents, build_index
@@ -373,8 +376,10 @@ def test_leaf_reads_only_the_snapshot_files_across_a_merge(
 def test_file_removed_by_gc_is_an_http_error(
     spark, corpus_rows, tmp_path_factory, monkeypatch, warm
 ):
-    # on each placement: the driver's reads (hotcache and docmap) and
-    # the executors' scans fail the request, never answer a subset
+    # on each placement: a driver read of a file the hotcache does not
+    # hold and the executors' scans fail the request, never answer a
+    # subset; a warm driver holds every file of its snapshot, so it
+    # answers the whole pre-GC snapshot
     for placement in ("in_process", "executor"):
         idx = _fresh_index(
             spark, corpus_rows, tmp_path_factory, f"leaf_gc_{warm}_{placement}"
@@ -392,6 +397,7 @@ def test_file_removed_by_gc_is_an_http_error(
                 if warm:  # the snapshot's caches already hold every file
                     with urllib.request.urlopen(url) as r:
                         assert r.status == 200
+                        before = json.loads(r.read())
                 pre = [s.split_id for s in open_metastore(idx).list_published()]
 
                 def merge_and_gc():
@@ -399,6 +405,14 @@ def test_file_removed_by_gc_is_an_http_error(
                     assert sorted(garbage_collect(idx, grace=False)) == sorted(pre)
 
                 _after_first_snapshot(m, merge_and_gc)
+                if warm and placement == "in_process":
+                    with urllib.request.urlopen(url) as r:
+                        got = json.loads(r.read())
+                    assert before["num_hits"] > 0 and len(before["hits"]) == 10
+                    before.pop("elapsed_time_micros")
+                    got.pop("elapsed_time_micros")
+                    assert got == before
+                    continue
                 with pytest.raises(urllib.error.HTTPError) as ei:
                     urllib.request.urlopen(url)
                 assert ei.value.code == 500, placement
@@ -411,10 +425,11 @@ def test_file_removed_by_gc_is_an_http_error(
 def test_concurrent_requests_share_one_cold_snapshot(
     spark, built_index, monkeypatch
 ):
-    """REST handler threads share one snapshot's file map and footer
-    cache, and the split hotcache: racing on a cold snapshot and a
-    cold hotcache, every request still gets the serial answer, and
-    each file is loaded once."""
+    """REST handler threads share one snapshot's file map and the
+    split hotcache: racing on a cold snapshot and a cold hotcache,
+    every request still gets the serial answer, and each postings,
+    fast-fields and docmap file, and each docmap row group, is loaded
+    once."""
     import sys
     import threading
 
@@ -425,18 +440,18 @@ def test_concurrent_requests_share_one_cold_snapshot(
     }
     for w in want.values():
         w.pop("elapsed_time_micros")
-    # a new state token → one fresh snapshot whose file map and footer
-    # cache are still empty when the threads start
+    # a new state token → one fresh snapshot whose file map is still
+    # empty when the threads start
     os.utime(os.path.join(built_index, "manifest.json"))
     get_searcher(spark, built_index).snapshot()
     leaf_mod.HOTCACHE.clear()
     loads, loads_lock = collections.Counter(), threading.Lock()
     load = leaf_mod._load_split_file
 
-    def counted(table, uri):
+    def counted(table, uri, group=None):
         with loads_lock:
-            loads[uri] += 1
-        return load(table, uri)
+            loads[uri, group] += 1
+        return load(table, uri, group)
 
     monkeypatch.setattr(leaf_mod, "_load_split_file", counted)
     got, errors = [], []
@@ -466,7 +481,158 @@ def test_concurrent_requests_share_one_cold_snapshot(
     for q, r in got:
         assert r == want[q], q
     assert loads and set(loads.values()) == {1}
-    assert set(loads) == set(leaf_mod.HOTCACHE.sizes())
+    assert {uri for uri, _ in loads} == set(leaf_mod.HOTCACHE.sizes())
+    tables = {uri.split("/")[-3] for uri, _ in loads}
+    assert tables == {"postings", "fastfields", "docmap"}
+    assert any(group is not None for _, group in loads)  # docmap blocks
+
+
+def test_warm_request_reads_no_parquet(spark, built_index, monkeypatch):
+    """After one warm-up request, a repeat loads no split file: its
+    postings, fast fields and page docs all come from the hotcache."""
+    import pyarrow.dataset as pads
+
+    params = [{**p, "maxHits": 10} for p in SHAPES.values()]
+    want = [_body(spark, built_index, p) for p in params]
+
+    def no_read(*a, **k):
+        raise AssertionError("a warm request read a parquet file")
+
+    monkeypatch.setattr(leaf_mod, "_load_split_file", no_read)
+    monkeypatch.setattr(pads, "FileSystemDataset", no_read)
+    monkeypatch.setattr(pq, "ParquetFile", no_read)
+    assert [_body(spark, built_index, p) for p in params] == want
+
+
+@pytest.fixture(scope="module", params=["twophase", "merged", "sorted"])
+def fetch_index(request, spark, corpus_rows, built_index, tmp_path_factory):
+    """Docmap layouts: the twophase build (3 splits < 8 cores, so a
+    split spans several docmap files), one merged split written in
+    small row groups (several doc-store blocks in one file), and an
+    index sorted by ``warc_ts``."""
+    if request.param == "twophase":
+        return request.param, built_index
+    idx = str(tmp_path_factory.mktemp(f"fetch_{request.param}"))
+    df = spark.createDataFrame(pd.DataFrame(corpus_rows))
+    if request.param == "sorted":
+        cfg = webpages_config(sort_by_field="warc_ts")
+        build_index(spark, df, idx, cfg, num_splits=3)
+    else:
+        build_index(spark, df, idx, webpages_config(), num_splits=3)
+        pre = [s.split_id for s in open_metastore(idx).list_published()]
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(build_mod, "DOCSTORE_BLOCK_BYTES", 1024)
+            merge_splits(spark, idx, pre)
+    return request.param, idx
+
+
+def test_cached_fetch_equals_the_spark_join(spark, fetch_index, monkeypatch):
+    """Every doc of every split, in a shuffled hit order with one doc
+    per split that does not exist, fetched from the hotcache equals the
+    Spark ``fetch_docs`` join: same rows, same column order, the
+    missing docs dropped. A one-doc page loads the doc index and the
+    one row group holding that doc, not the whole file."""
+    layout, idx = fetch_index
+    snap = get_searcher(spark, idx).snapshot()
+    files = snap["files"]
+    by_split = files.files("docmap")
+    splits = snap["splits"]
+    if layout == "twophase":
+        assert max(len(uris) for uris in by_split.values()) > 1
+    if layout == "merged":
+        assert len(splits) == 1
+        (uri,) = by_split[int(splits[0].split_id)]
+        fs, path = pafs.FileSystem.from_uri(uri)
+        with fs.open_input_file(path) as f:
+            assert pq.ParquetFile(f).num_row_groups > 2
+        loads = collections.Counter()
+        load = leaf_mod._load_split_file
+
+        def counted(table, uri, group=None):
+            loads[group is not None] += 1
+            return load(table, uri, group)
+
+        leaf_mod.HOTCACHE.clear()
+        with monkeypatch.context() as m:
+            m.setattr(leaf_mod, "_load_split_file", counted)
+            last = splits[0].num_docs - 1
+            sid = int(splits[0].split_id)
+            hit = (np.array([sid], np.int32), np.array([last]), np.ones(1), 0)
+            (row,) = leaf_mod.fetch_rows(files, hit, False)
+        assert row["doc_id"] == last
+        assert loads == {False: 1, True: 1}
+    rng = np.random.default_rng(5)
+    sids = np.concatenate([np.full(s.num_docs + 1, int(s.split_id)) for s in splits])
+    docs = np.concatenate([np.arange(s.num_docs + 1) for s in splits])
+    order = rng.permutation(sids.size)
+    sids, docs = sids[order].astype(np.int32), docs[order]
+    spark_fetch = _spark_fetch(spark, idx)
+    for exact, vals in (
+        (False, rng.random(sids.size)),
+        (True, rng.integers(-(2**62), 2**62, sids.size)),
+    ):
+        hits = (sids, docs, vals, 0)
+        got = leaf_mod.fetch_rows(files, hits, exact)
+        assert len(got) == sum(s.num_docs for s in snap["splits"])
+        assert [list(r.items()) for r in got] == [
+            list(r.items()) for r in spark_fetch(files, hits, exact)
+        ]
+    cached = set(leaf_mod.HOTCACHE.sizes())
+    assert all(set(uris) <= cached for uris in by_split.values())
+
+
+def _wide_index(spark, corpus_rows, tmp_path_factory) -> str:
+    """An index whose docmap holds binary, struct (with a timestamp),
+    array, map and timestamp columns, and the stored ``_source``."""
+    from pyspark.sql import functions as F
+
+    idx = str(tmp_path_factory.mktemp("wide_docmap"))
+    df = (
+        spark.createDataFrame(pd.DataFrame(corpus_rows))
+        .withColumn("blob", F.encode("lang", "utf-8"))
+        .withColumn("meta", F.struct(
+            F.col("lang").alias("l"), F.col("warc_ts").alias("seen"),
+            F.length("text").alias("n"),
+        ))
+        .withColumn("tags", F.array("lang", F.lit("x")))
+        .withColumn("attrs", F.create_map("lang", F.length("text")))
+    )
+    cfg = webpages_config(
+        store_source=True,
+        fast_fields=("warc_ts", "lang", "blob", "meta", "tags", "attrs"),
+    )
+    build_index(spark, df, idx, cfg, num_splits=3)
+    return idx
+
+
+def test_search_page_runs_no_spark_job(spark, corpus_rows, tmp_path_factory):
+    """``search()`` wraps its in-process page as an Arrow local
+    relation: building and collecting it, highlight included, runs no
+    Spark job, and its rows equal the Spark join's."""
+    idx = _wide_index(spark, corpus_rows, tmp_path_factory)
+    snap = get_searcher(spark, idx).snapshot()
+    spark_fetch = _spark_fetch(spark, idx)
+    cases = [
+        ("word hot", {}), ("the", {"offset": 3}), ("lang:fr word", {}),
+        ("word", {"sort_field": "warc_ts"}), ("qw_marker_nowhere", {}),
+    ]
+    for query, kw in cases:
+        req = search_mod.SearchRequest(query=query, k=7, **kw)
+        hits = search_mod._top_k(spark, idx, req, snap, count_exact=False)
+        want = spark_fetch(snap["files"], hits, "sort_field" in kw)
+        assert bool(want) != ("nowhere" in query), query
+        for highlight in (False, True):
+            rows, jobs = _jobs_of(spark, lambda: search_mod.search(
+                spark, idx, query, k=7, highlight=highlight, **kw
+            ).collect())
+            assert jobs == [], (query, highlight)
+            got = [r.asDict() for r in rows]
+            marks = [r.pop("highlight", None) for r in got]
+            assert got == want, (query, highlight)
+            if highlight and want:
+                assert any("<em>" in m for m in marks if m), query
+    row = search_mod.search(spark, idx, "word", k=1).collect()[0]
+    assert row["blob"] == row["lang"].encode() and row["meta"]["seen"] == row["warc_ts"]
 
 
 def _assert_oracle_answers(spark, idx, oracle, queries, k=10):
@@ -491,13 +657,13 @@ def _cached_files_of(idx) -> set[str]:
     return {u for u in leaf_mod.HOTCACHE.sizes() if root in u}
 
 
-def _live_files(spark, idx) -> set[str]:
-    """The postings and fast-fields files of the published splits."""
+def _live_files(spark, idx, tables=("postings", "fastfields", "docmap")) -> set[str]:
+    """The ``tables`` files of the published splits."""
     snap = get_searcher(spark, idx).snapshot()
     published = {int(s.split_id) for s in snap["splits"]}
     return {
         uri
-        for table in ("postings", "fastfields")
+        for table in tables
         for sid, uris in snap["files"].files(table).items()
         if sid in published
         for uri in uris
@@ -567,7 +733,8 @@ def test_hotcache_byte_cap_holds_and_answers_stay(
     _assert_oracle_answers(spark, built_index, oracle_index, CACHE_QUERIES)
     cached = leaf_mod.HOTCACHE.sizes()
     sizes = [cached[u] for u in _cached_files_of(built_index)]
-    assert len(sizes) == 6  # 3 splits × (postings, fastfields)
+    # 3 splits × (postings, fastfields, the docmap files of hit splits)
+    assert len(sizes) == len(_live_files(spark, built_index)) > 6
     # room for a few files, not all: requests evict and reload
     for cap in (sum(sorted(sizes)[:3]), max(sizes) - 1, 1):
         monkeypatch.setattr(leaf_mod, "HOTCACHE_MAX_BYTES", cap)
@@ -576,7 +743,7 @@ def test_hotcache_byte_cap_holds_and_answers_stay(
             _assert_oracle_answers(spark, built_index, oracle_index, [q])
             resident = list(leaf_mod.HOTCACHE.sizes().values())
             assert leaf_mod.HOTCACHE.nbytes == sum(resident) <= cap, cap
-            assert len(resident) < 6, cap
+            assert len(resident) < len(sizes), cap
 
 
 def test_hotcache_reads_unsorted_postings_files(
@@ -597,4 +764,5 @@ def test_hotcache_reads_unsorted_postings_files(
         head, name = os.path.split(path)
         os.remove(os.path.join(head, f".{name}.crc"))  # Hadoop's checksum
     _assert_oracle_answers(spark, idx, oracle_index, CACHE_QUERIES)
-    assert len(_cached_files_of(idx)) == 2 * len(paths)
+    live = _live_files(spark, idx, ("postings", "fastfields"))
+    assert len(_cached_files_of(idx) & live) == 2 * len(paths)
